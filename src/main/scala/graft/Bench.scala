@@ -415,7 +415,8 @@ object Bench {
     // stamp (pre-r22 reference files) keeps the old always-on behavior.
     val cpusMatch: Boolean = refCpusMatches(refPath)
     if (!cpusMatch) System.err.println(
-      s"[bench] reference was stamped at ${refsAll("_refCpus").toInt} cores " +
+      s"[bench] reference was stamped at " +
+        s"${refsAll.get("_refCpus").fold("?")(_.toInt.toString)} cores " +
         s"but this run uses ${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")} — " +
         "drift ratios and the contention sentinel are OFF for this run " +
         "(they would compare differently-parallel executions)")

@@ -9,16 +9,6 @@ import org.apache.spark.sql.SparkSession
   */
 object Sessions {
 
-  /** `local[threads]` session with the graft extensions installed.
-    * `threads` doubles as the default shuffle-partition count — at local
-    * scale one partition per core is the right size (the 200 default just
-    * adds scheduling overhead). `SPARK_GRAFT_SHUFFLE_PARTITIONS` overrides
-    * it for probe-scale experiments (AQE coalesces small partitions, so
-    * over-provisioning is safe). Measured on the 300x e7b pair distinct:
-    * 128 partitions read 214 s vs 165 s at 32 — the single-JVM probes are
-    * disk/CPU-bound there, not per-task-memory-bound, so the knob exists
-    * for cluster parity, not as a local win.
-    */
   /** Run `body` with this thread's jobs tagged into FAIR pool `name`
     * (created on demand), clearing the tag after — the one wrapper both
     * the warm-phase chains and their nested vector sub-builds use, so a
@@ -32,6 +22,50 @@ object Sessions {
     finally spark.sparkContext.setLocalProperty("spark.scheduler.pool", null)
   }
 
+  /** Run every unit on its own thread and wait for ALL of them; results
+    * come back in declaration order. This is the in-process form of the
+    * reference DAG's parallel Airflow tasks inside one stage (independent
+    * jobs, one barrier at the end), used by `Pipeline.run`'s stages,
+    * `Aggregates.run` and `Jobs.batchSplit`.
+    *
+    *  - The threads are created per call by the calling thread, so each
+    *    unit inherits a copy of the caller's Spark local properties (job
+    *    group, `inPool` tag, any listener's span tag); a shared pool's
+    *    long-lived threads would carry whatever they were created with.
+    *  - Every unit runs to completion even when a sibling fails, so no
+    *    job is still writing when this returns or throws. The failure
+    *    rethrown is the first in declaration order, with the other
+    *    failures attached as suppressed.
+    */
+  def concurrently[A](units: Seq[() => A]): Seq[A] = {
+    val outcomes = new Array[Either[Throwable, A]](units.size)
+    val threads = units.zipWithIndex.map { case (unit, i) =>
+      val t = new Thread(() =>
+        outcomes(i) = try Right(unit()) catch { case e: Throwable => Left(e) },
+        s"graft-unit-$i")
+      t.setDaemon(true)
+      t
+    }
+    threads.foreach(_.start())
+    threads.foreach(_.join()) // join orders each unit's writes before the reads below
+    outcomes.collect { case Left(e) => e } match {
+      case Array(first, rest @ _*) =>
+        rest.foreach(e => if (e ne first) first.addSuppressed(e))
+        throw first
+      case _ => outcomes.toSeq.collect { case Right(a) => a }
+    }
+  }
+
+  /** `local[threads]` session with the graft extensions installed.
+    * `threads` doubles as the default shuffle-partition count — at local
+    * scale one partition per core is the right size (the 200 default just
+    * adds scheduling overhead). `SPARK_GRAFT_SHUFFLE_PARTITIONS` overrides
+    * it for probe-scale experiments (AQE coalesces small partitions, so
+    * over-provisioning is safe). Measured on the 300x e7b pair distinct:
+    * 128 partitions read 214 s vs 165 s at 32 — the single-JVM probes are
+    * disk/CPU-bound there, not per-task-memory-bound, so the knob exists
+    * for cluster parity, not as a local win.
+    */
   def local(threads: String): SparkSession = {
     val spark = SparkSession.builder()
       .master(s"local[$threads]")

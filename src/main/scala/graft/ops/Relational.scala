@@ -471,11 +471,10 @@ object Relational {
                   idCol: Column, k: Int,
                   idOut: String, scoreOut: String,
                   dedupIds: Boolean = false): DataFrame = {
-    val guarded = when(isnan(scoreCol) || scoreCol.isNull,
-      raise_error(lit("topKByScore: NaN/null score — SortKeyF's descending " +
+    val guarded = nanNullGuard(scoreCol,
+      "topKByScore: NaN/null score — SortKeyF's descending " +
         "bijection is not total for NaN and the bounded heap drops nulls a " +
-        "window would keep (zero-norm embedding upstream?)")))
-      .otherwise(scoreCol)
+        "window would keep (zero-norm embedding upstream?)")
     df.groupBy(groupCols.map(col): _*)
       .agg(graft.functions.TopKPairAgg.topkPairs(
         graft.functions.SortKeyF.descKey(guarded), idCol, k, dedupIds).as("__tk"))
@@ -483,6 +482,12 @@ object Relational {
       .select(groupCols.map(col) :+ col("__p.id").as(idOut) :+
         graft.functions.SortKeyF.descKeyInv(col("__p.ord")).as(scoreOut): _*)
   }
+
+  /** `score` unchanged, or a run-time `raise_error(message)` on a NaN or
+    * null value — the one guard every top-k-by-score path shares, so a
+    * zero-norm embedding fails loudly on each of them. */
+  private[graft] def nanNullGuard(score: Column, message: String): Column =
+    when(isnan(score) || score.isNull, raise_error(lit(message))).otherwise(score)
 
   /** Skew-mitigating equi join: salt the skewed (large) side's key with a
     * random-ish residue derived from a stable row attribute, replicate the

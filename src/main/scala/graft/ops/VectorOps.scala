@@ -192,7 +192,8 @@ object VectorOps {
     * (Relational.topKByScore) when the corpus id is a Long: each map
     * partition reduces its corpus slice to ≤ k pairs per probe before the
     * exchange, where the old row_number window shuffled and sorted the
-    * full probes × corpus scan. Non-Long ids keep the window form.
+    * full probes × corpus scan. Non-Long ids keep the window form, behind
+    * the same NaN/null guard, so a zero-norm vector fails loudly on both.
     * Output: (probeId, corpusId, sim).
     */
   def knnBruteForce(probes: DataFrame, probeId: String, probeVec: String,
@@ -209,8 +210,11 @@ object VectorOps {
       Relational.topKByScore(joined, Seq(probeId), col("sim"), col(corpusId),
         k, corpusId, "sim")
     else
-      Relational.topKPerGroup(joined, Seq(col(probeId)),
-          Seq(col("sim").desc, col(corpusId)), k)
+      Relational.topKPerGroup(
+          joined.withColumn("sim", Relational.nanNullGuard(col("sim"),
+            "knnBruteForce: NaN/null similarity — the window top-k would rank " +
+              "it silently (zero-norm or NaN-valued embedding upstream?)")),
+          Seq(col(probeId)), Seq(col("sim").desc, col(corpusId)), k)
         .select(col(probeId), col(corpusId), col("sim"))
   }
 }

@@ -66,7 +66,8 @@ object Aggregates {
       .withColumn("AvgPumpsAttending", round(col("AvgPumpsAttending"), 2))
       .orderBy(desc("AvgResponseTimeMinutes"))
 
-  /** Build all four into `<schema>.<name>` catalog tables. */
+  /** Build all four into `<schema>.<name>` catalog tables; the four writes
+    * are independent and run concurrently. */
   def run(spark: SparkSession, factTable: String, outputSchema: String): Unit = {
     spark.sql(s"CREATE DATABASE IF NOT EXISTS $outputSchema")
     val tables = Seq(
@@ -74,9 +75,9 @@ object Aggregates {
       "per_ward" -> perWard(spark, factTable),
       "types_per_ward" -> typesPerWard(spark, factTable),
       "per_location_type" -> perLocationType(spark, factTable))
-    tables.foreach { case (name, df) =>
+    graft.Sessions.concurrently(tables.map { case (name, df) => () =>
       graft.ops.Relational.prepareManagedOverwrite(spark, s"$outputSchema.$name")
       df.write.mode("overwrite").format("parquet").saveAsTable(s"$outputSchema.$name")
-    }
+    })
   }
 }

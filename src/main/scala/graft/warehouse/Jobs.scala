@@ -483,19 +483,15 @@ object Jobs {
       val batches = splitDates.map(d =>
         parsed.where(col("__d") < to_date(lit(d)))) :+ parsed
       // The batch writes are independent jobs over the one cached parse —
-      // submit them concurrently (as preMaterialize does its chains): the
-      // scheduler interleaves their stages, so wall time is the largest
-      // batch, not the sum of all of them.
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.duration.Duration
-      import scala.concurrent.ExecutionContext.Implicits.global
-      batches.zipWithIndex.map { case (b, i) =>
-        Future {
-          b.withColumn(dateCol, date_format(col("__d"), dateFmt)).drop("__d")
-            .write.mode("overwrite").option("header", "true")
-            .csv(s"$outPath/${i + 1}")
-        }
-      }.foreach(Await.result(_, Duration.Inf))
+      // submit them concurrently: the scheduler interleaves their stages,
+      // so wall time is the largest batch, not the sum of all of them. A
+      // failing batch surfaces only after every other write has finished,
+      // so the cached parse is never unpersisted under a running write.
+      graft.Sessions.concurrently(batches.zipWithIndex.map { case (b, i) => () =>
+        b.withColumn(dateCol, date_format(col("__d"), dateFmt)).drop("__d")
+          .write.mode("overwrite").option("header", "true")
+          .csv(s"$outPath/${i + 1}")
+      })
     } finally { parsed.unpersist(); () }
   }
 

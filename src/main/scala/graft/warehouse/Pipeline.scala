@@ -2,6 +2,7 @@ package graft.warehouse
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import graft.Sessions
 import graft.ops.Checks
 
 /** In-process DAG runner for the full warehouse pipeline, honoring the
@@ -9,8 +10,14 @@ import graft.ops.Checks
   * extracts -> extract checks -> cleanses -> dimension builds -> dimension
   * checks -> dimension loads -> fact load -> post-load checks + aggregates.
   * Airflow/Livy/K8s are deployment concerns (SURVEY §3.1); the edges are
-  * the spec, and sequential execution preserves them trivially. At cluster
-  * scale each stage is its own spark-submit against shared storage.
+  * the spec. Stages run one after another, each a barrier; inside a stage
+  * the independent units (the extracts, cleanses, dimension builds,
+  * dimension loads, aggregate writes and every check of a gate) run
+  * concurrently through [[graft.Sessions.concurrently]], as the
+  * reference's parallel Airflow tasks do, and the stage ends when all of
+  * them have. No unit reads another unit's output of the same stage. At
+  * cluster scale each stage is its own spark-submit against shared
+  * storage.
   */
 object Pipeline {
 
@@ -36,8 +43,10 @@ object Pipeline {
   /** Expected raw column counts (airflow/main-dw-project.py:148-167). */
   val expectedColumns = Map("lfb" -> 39, "aq" -> 6, "wb" -> 16, "weather" -> 11)
 
-  private def gate(stage: String, results: Seq[Either[Checks.Violation, Unit]]): Unit =
-    Checks.runAll(results).left.foreach { vs =>
+  /** Run a gate's checks concurrently; violations are reported in
+    * declaration order. */
+  private def gate(stage: String, checks: Seq[() => Either[Checks.Violation, Unit]]): Unit =
+    Checks.runAll(Sessions.concurrently(checks)).left.foreach { vs =>
       throw new IllegalStateException(
         s"pipeline gate '$stage' failed: ${vs.map(v => s"${v.check}: ${v.detail}").mkString("; ")}")
     }
@@ -84,7 +93,8 @@ object Pipeline {
     ("WellBeingID", "well_being", _.wbDim, "WellBeingID"))
 
   /** The "dimension loads" stage body, keyed by the catalog table each
-    * loader writes (etl/load/load_*_dim.py). */
+    * loader writes (etl/load/load_*_dim.py). The loaders are independent
+    * and the stage runs them concurrently. */
   private def dimLoaders(spark: SparkSession, paths: Paths): Seq[(String, () => Unit)] = Seq(
     "date_dim" -> (() => Jobs.loadDimTable(spark, paths.dateDim, "date_dim",
       Model.dateDimSchema.fields.map(f => f.name -> f.name).toSeq,
@@ -157,41 +167,44 @@ object Pipeline {
 
     // --- extract stage (4 parallel tasks in the reference) ---
     staged("extract") {
-      Jobs.lfbExtract(spark, inputs.lfbCsv, paths.lfbRaw)
-      Jobs.aqExtract(spark, inputs.aqCsvs, paths.aqRaw)
-      Jobs.extract(spark, inputs.weatherCsv, paths.weatherRaw, Seq("date"))
-      Jobs.extract(spark, inputs.wbCsv, paths.wbRaw, Seq("Ward", "Year"))
+      Sessions.concurrently(Seq(
+        () => Jobs.lfbExtract(spark, inputs.lfbCsv, paths.lfbRaw),
+        () => Jobs.aqExtract(spark, inputs.aqCsvs, paths.aqRaw),
+        () => Jobs.extract(spark, inputs.weatherCsv, paths.weatherRaw, Seq("date")),
+        () => Jobs.extract(spark, inputs.wbCsv, paths.wbRaw, Seq("Ward", "Year"))))
     }
 
     // --- post-extract checks (etl/checks/post-extract-check.py) ---
     staged("post-extract checks") {
       val lfbRaw = spark.read.parquet(paths.lfbRaw)
       gate("post-extract", Seq(
-      Checks.nonEmpty(lfbRaw),
-      Checks.primaryKey(lfbRaw, Seq("IncidentNumber")),
-      Checks.completeness(lfbRaw, "IncidentNumber", 1.0)) ++
+      () => Checks.nonEmpty(lfbRaw),
+      () => Checks.primaryKey(lfbRaw, Seq("IncidentNumber")),
+      () => Checks.completeness(lfbRaw, "IncidentNumber", 1.0)) ++
       (if (checkColumnCounts) Seq(
-        Checks.columnCount(lfbRaw, expectedColumns("lfb")),
-        Checks.columnCount(spark.read.parquet(paths.aqRaw), expectedColumns("aq")),
-        Checks.columnCount(spark.read.parquet(paths.wbRaw), expectedColumns("wb")),
-        Checks.columnCount(spark.read.parquet(paths.weatherRaw), expectedColumns("weather")))
+        () => Checks.columnCount(lfbRaw, expectedColumns("lfb")),
+        () => Checks.columnCount(spark.read.parquet(paths.aqRaw), expectedColumns("aq")),
+        () => Checks.columnCount(spark.read.parquet(paths.wbRaw), expectedColumns("wb")),
+        () => Checks.columnCount(spark.read.parquet(paths.weatherRaw), expectedColumns("weather")))
       else Nil)) }
 
     // --- cleanse stage ---
     staged("cleanse") {
-      Jobs.lfbCleanse(spark, paths.lfbRaw, paths.lfbClean)
-      Jobs.aqCleanse(spark, paths.aqRaw, paths.aqClean)
-      Jobs.weatherCleanse(spark, paths.weatherRaw, paths.weatherClean)
-      Jobs.wbCleanse(spark, paths.wbRaw, paths.wbClean)
+      Sessions.concurrently(Seq(
+        () => Jobs.lfbCleanse(spark, paths.lfbRaw, paths.lfbClean),
+        () => Jobs.aqCleanse(spark, paths.aqRaw, paths.aqClean),
+        () => Jobs.weatherCleanse(spark, paths.weatherRaw, paths.weatherClean),
+        () => Jobs.wbCleanse(spark, paths.wbRaw, paths.wbClean)))
     }
 
     // --- dimension builds ---
     staged("dimension builds") {
-      Jobs.wardDimension(spark, paths.lfbClean, paths.wardDim)
-      Jobs.wbDimension(spark, paths.wbClean, paths.wbDim)
-      Jobs.incidentTypeDimension(spark, paths.lfbClean, paths.incidentTypeDim)
-      Jobs.locationTypeDimension(spark, paths.lfbClean, paths.locationTypeDim)
-      Jobs.dateDimension(spark, paths.lfbClean, paths.dateDim)
+      Sessions.concurrently(Seq(
+        () => Jobs.wardDimension(spark, paths.lfbClean, paths.wardDim),
+        () => Jobs.wbDimension(spark, paths.wbClean, paths.wbDim),
+        () => Jobs.incidentTypeDimension(spark, paths.lfbClean, paths.incidentTypeDim),
+        () => Jobs.locationTypeDimension(spark, paths.lfbClean, paths.locationTypeDim),
+        () => Jobs.dateDimension(spark, paths.lfbClean, paths.dateDim)))
     }
 
     // --- dimension checks (etl/checks/*-dimension-check.py) ---
@@ -201,20 +214,20 @@ object Pipeline {
       val itDim = spark.read.parquet(paths.incidentTypeDim)
       val ltDim = spark.read.parquet(paths.locationTypeDim)
       gate("dimension-checks", Seq(
-      Checks.nonEmpty(dateDim),
-      Checks.schemaEquals(dateDim, Model.dateDimSchema),
-      Checks.primaryKey(dateDim, Seq("Date")),
-      Checks.cardinalityAtMost(dateDim, "Month", 12),
-      Checks.cardinalityAtMost(dateDim, "DayOfWeek", 7),
-      Checks.inRange(dateDim, "Day", 1, 31),
-      Checks.inRange(dateDim, "Quarter", 1, 4),
-      Checks.nonEmpty(wardDim),
-      Checks.primaryKey(wardDim, Seq("WardCode")),
-      Checks.primaryKey(wardDim, Seq("WardID")),
-      Checks.nonEmpty(itDim),
-      Checks.primaryKey(itDim, Seq("IncidentTypeKey")),
-      Checks.nonEmpty(ltDim),
-      Checks.primaryKey(ltDim, Seq("LocationTypeKey")))) }
+      () => Checks.nonEmpty(dateDim),
+      () => Checks.schemaEquals(dateDim, Model.dateDimSchema),
+      () => Checks.primaryKey(dateDim, Seq("Date")),
+      () => Checks.cardinalityAtMost(dateDim, "Month", 12),
+      () => Checks.cardinalityAtMost(dateDim, "DayOfWeek", 7),
+      () => Checks.inRange(dateDim, "Day", 1, 31),
+      () => Checks.inRange(dateDim, "Quarter", 1, 4),
+      () => Checks.nonEmpty(wardDim),
+      () => Checks.primaryKey(wardDim, Seq("WardCode")),
+      () => Checks.primaryKey(wardDim, Seq("WardID")),
+      () => Checks.nonEmpty(itDim),
+      () => Checks.primaryKey(itDim, Seq("IncidentTypeKey")),
+      () => Checks.nonEmpty(ltDim),
+      () => Checks.primaryKey(ltDim, Seq("LocationTypeKey")))) }
 
     // --- dimension loads (etl/load/load_*_dim.py) ---
     staged("dimension loads") {
@@ -222,7 +235,7 @@ object Pipeline {
       require(loaders.map(_._1) == dimTables,
         s"dimLoaders keys ${loaders.map(_._1)} out of sync with " +
           s"Pipeline.dimTables $dimTables — the resume probe depends on them matching")
-      loaders.foreach { case (_, load) => load() }
+      Sessions.concurrently(loaders.map(_._2))
     }
 
     // --- fact load ---
@@ -238,11 +251,11 @@ object Pipeline {
     staged("post-load checks") {
       val fact = spark.table(factTable)
       gate("post-load", Seq(
-      Checks.nonEmpty(fact),
-      Checks.schemaEquals(
+      () => Checks.nonEmpty(fact),
+      () => Checks.schemaEquals(
         fact.select(Model.factSchema.fieldNames.map(col).toSeq: _*), Model.factSchema)) ++
       factRefGates.map { case (fk, dimTable, _, pk) =>
-        Checks.referentialIntegrity(fact, fk, spark.table(dimTable), pk)
+        () => Checks.referentialIntegrity(fact, fk, spark.table(dimTable), pk)
       }) }
 
     staged("aggregates") { Aggregates.run(spark, factTable, analyticsSchema) }

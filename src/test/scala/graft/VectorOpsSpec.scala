@@ -28,6 +28,31 @@ class VectorOpsSpec extends SparkSpec {
     assert(out.select("vec_id").as[Long].head() == 2L)
   }
 
+  test("knnBruteForce raises on a zero-norm vector on both id paths") {
+    // cosine = dot / (|p|·|c|) is 0/0 at a zero-norm corpus vector: ANSI
+    // mode raises DIVIDE_BY_ZERO, legacy mode yields a null similarity,
+    // which the non-Long window path used to rank silently. Both id types
+    // must fail loudly in both modes.
+    val corpus = Seq((1L, Seq(1f, 0f)), (2L, Seq(0f, 0f)), (3L, Seq(0f, 1f)))
+      .toDF("vec_id", "embedding")
+    val probes = corpus.where(col("vec_id") === 1)
+      .select(col("vec_id").as("q_id"), col("embedding").as("q_vec"))
+    val prior = spark.conf.getOption("spark.sql.ansi.enabled")
+    try for (ansi <- Seq("true", "false"); stringIds <- Seq(false, true)) {
+      spark.conf.set("spark.sql.ansi.enabled", ansi)
+      val (p, c) =
+        if (stringIds) (probes.withColumn("q_id", col("q_id").cast("string")),
+          corpus.withColumn("vec_id", col("vec_id").cast("string")))
+        else (probes, corpus)
+      val e = intercept[Exception] {
+        VectorOps.knnBruteForce(p, "q_id", "q_vec", c, "vec_id", "embedding", 2).collect()
+      }
+      if (ansi == "false")
+        assert(e.getMessage.contains("NaN/null"), s"stringIds=$stringIds: ${e.getMessage}")
+    } finally prior.fold(spark.conf.unset("spark.sql.ansi.enabled"))(
+      spark.conf.set("spark.sql.ansi.enabled", _))
+  }
+
   test("lshBucket: deterministic, and identical vectors share a bucket") {
     val planes = VectorQueries.planeInts
     val e = Tables.load(spark, Sf0001, "embeddings")

@@ -162,6 +162,48 @@ class PipelineSpec extends SparkSpec {
       assert(spark.catalog.tableExists(t), s"dim '$t' missing after heal"))
   }
 
+  test("a gate reports every violation in declaration order") {
+    ranOnce
+    // Plant a date dimension with a duplicated Date whose copy has Day 40,
+    // next to the run's good ward / incident-type / location-type dims.
+    val planted = Pipeline.Paths(
+      java.nio.file.Files.createTempDirectory("graft_gate_order_").toString)
+    val good = spark.read.parquet(paths.dateDim)
+    good.union(good.limit(1).withColumn("Day", lit(40)))
+      .write.parquet(planted.dateDim)
+    Seq(paths.wardDim -> planted.wardDim,
+      paths.incidentTypeDim -> planted.incidentTypeDim,
+      paths.locationTypeDim -> planted.locationTypeDim).foreach { case (from, to) =>
+      spark.read.parquet(from).write.parquet(to)
+    }
+    val ghost = Pipeline.Inputs("/nonexistent/lfb.csv", Seq("/nonexistent/aq.csv"),
+      "/nonexistent/weather.csv", "/nonexistent/wb.csv")
+    val msg = intercept[IllegalStateException] {
+      Pipeline.run(spark, ghost, planted, fromStage = "dimension checks")
+    }.getMessage
+    val pk = msg.indexOf("primaryKey: Date has 1 duplicated key values")
+    val range = msg.indexOf("inRange: Day has 1 values outside")
+    assert(pk >= 0 && range > pk, msg)
+  }
+
+  test("a failing unit fails its stage only after its siblings finish") {
+    // Fresh inputs without the weather CSV: that extract fails at once
+    // while the LFB and air-quality extracts are still running.
+    val dir = java.nio.file.Files.createTempDirectory("graft_pipe_fail_")
+    val in = Fixtures.write(dir)
+    java.nio.file.Files.delete(java.nio.file.Paths.get(in.weatherCsv))
+    val staged = Pipeline.Paths(dir.resolve("staging").toString)
+    val e = intercept[org.apache.spark.sql.AnalysisException] {
+      Pipeline.run(spark, in, staged)
+    }
+    assert(e.getMessage.contains(java.nio.file.Paths.get(in.weatherCsv).getFileName.toString),
+      e.getMessage)
+    org.apache.spark.ListenerBusDrain(spark.sparkContext)
+    assert(spark.sparkContext.statusTracker.getActiveJobIds().isEmpty,
+      "a sibling unit was still running when Pipeline.run threw")
+    assert(spark.read.parquet(staged.lfbRaw).count() == 6)
+  }
+
   test("parallel LFB generator produces the driver writer's corpus exactly") {
     // Per-row seeding makes the corpus a pure function of the row id: the
     // 32-task Spark generator (header at the head of every part file) and
