@@ -79,7 +79,7 @@ object Bench {
 
   /** MIN of 3 runs of the CPU-bound drift canary (deterministic generated
     * input, codegen'd hash chain, no I/O): moves with ambient machine
-    * state, cannot move with repo code changes. Shared with QueryProbe so
+    * state, cannot move with repo code changes. Shared with `Probe query` so
     * single-query adjudications carry the same drift reading the full
     * bench does.
     */
@@ -195,7 +195,7 @@ object Bench {
     * equal this run's SPARK_GRAFT_CPUS. The canaries are parallel
     * workloads, so a ratio across core counts fabricates "drift" from
     * the core ratio alone — shared by Bench's main and the dev probes
-    * (QueryProbe/K7Probe print raw canary seconds either way).
+    * (`Probe query` prints raw canary seconds either way).
     */
   private[graft] def refCpusMatches(refPath: String): Boolean =
     canaryReference(refPath, "_refCpus").forall(rc =>
@@ -373,7 +373,7 @@ object Bench {
 
     // Write-side then read-side drift canaries, timed after every phase
     // whose number the artifacts track (see the note at the CPU canary
-    // above). Shuffle first, I/O LAST — the same ordering QueryProbe
+    // above). Shuffle first, I/O LAST — the same ordering `Probe query`
     // pins: the I/O canary's lineitem scans re-warm the page cache, so
     // anything timed after it reads a warmer box than the phases did.
     val shuffleCanarySec = measureShuffleCanary(spark)
@@ -499,7 +499,7 @@ object Bench {
         f"bar's 1.5x cap (cpu ${drift.getOrElse(-1.0)}%.2f, shuffle " +
         f"${shuffleDrift.getOrElse(-1.0)}%.2f, io ${ioDrift.getOrElse(-1.0)}%.2f) " +
         "— sentinel flags from this run are machine-state evidence, not " +
-        "code evidence; adjudicate with a quieter-window QueryProbe pair")
+        "code evidence; adjudicate with a quieter-window `Probe query` pair")
     // Best-of-3 re-runs (r18 lesson: both of that round's sentinelFailed
     // marks came from a single contended re-run — one bad re-run must not
     // stamp a false regression into the round artifact). Early-exits on

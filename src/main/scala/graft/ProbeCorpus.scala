@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** ONE definition of the probe corpora's copy-explode synthesis, shared by
-  * ScaleProbe / EditJoinProbe / StreamScaleProbe — the recipe carries real
+  * `Probe scale` / `Probe stream` / perfbench — the recipe carries real
   * semantics (id offsets by max+1 so sparse id spaces can't collide;
   * copytag APPENDED so document copies stay near-duplicates sharing their
   * prefix; per-copy TIME SHIFT so event density per band/user stays what

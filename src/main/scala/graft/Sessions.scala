@@ -2,8 +2,8 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** The one local SparkSession recipe every main (Verify, Bench, ProfCC,
-  * PlanAudit) builds from, so a session-config change (a new legacy flag,
+/** The one local SparkSession recipe every main (Verify, Bench, Probe)
+  * builds from, so a session-config change (a new legacy flag,
   * an extensions addition) happens in exactly one place and profiling
   * never silently diverges from the benchmarked configuration.
   */

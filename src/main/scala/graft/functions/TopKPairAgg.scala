@@ -108,8 +108,9 @@ object TopKPairAgg {
     * covers the one-copy-per-partial-buffer case the same way. Membership
     * is an O(k) scan: during the fill phase (n < k) every offered pair
     * pays it; once full, only pairs that already cleared the root bar do
-    * (k ≤ 100 at every call site, so both phases are cheap next to the
-    * score computation feeding the heap).
+    * (k ≤ 100 at every call site today — a convention, not an enforced
+    * bound — so both phases are cheap next to the score computation
+    * feeding the heap).
     */
   final class Heap(k: Int, dedup: Boolean = false) {
     private val ords = new Array[Long](k)
@@ -176,7 +177,11 @@ object TopKPairAgg {
     * ascending. Both inputs must be Long; rows with a null in either are
     * ignored. `dedup = true` treats bit-identical (ord, id) pairs as one
     * candidate (equivalent to `.distinct()` upstream — without the
-    * distinct's full-stream exchange).
+    * distinct's full-stream exchange). That costs an O(k) membership scan
+    * per offer that reaches it (every offer while the heap fills, then
+    * those that beat the root), so a dedup aggregate is O(n·k) per group
+    * in the worst case. The call sites use k ≤ 100, but nothing enforces
+    * that bound: a large k with `dedup = true` pays the scan in full.
     */
   def topkPairs(ord: Column, id: Column, k: Int, dedup: Boolean = false): Column =
     ColumnBridge.toColumn(

@@ -18,7 +18,7 @@ object Graph {
 
   /** Rounds of the most recent `connectedComponents` call in this JVM —
     * probe tooling reads this right after the action that ran the rounds
-    * (ScaleProbe's cc_live row), so a scale-up slowdown is adjudicable as
+    * (`Probe scale`'s cc_live row), so a scale-up slowdown is adjudicable as
     * algorithmic (round count grew) vs memory-bound (rounds flat, time
     * grew). Driver-side telemetry only; never consulted by query plans.
     */

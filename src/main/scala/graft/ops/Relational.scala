@@ -1014,7 +1014,7 @@ object Relational {
     * not silently narrow to nothing: warn and fall back to
     * `java.io.tmpdir` (where Spark itself would fail loudly long before
     * the guard matters). Shared by the compaction scratch guard and
-    * CompactProbe's trough sampler so both watch the disks spill really
+    * `Probe compact`'s trough sampler so both watch the disks spill really
     * lands on.
     */
   private[graft] def spillDirs(spark: SparkSession): Seq[java.io.File] =
@@ -1059,7 +1059,7 @@ object Relational {
 
   /** Mass-weighted files touched per point lookup on `lookupCol` — the
     * read-locality currency the clustering operators are adjudicated in
-    * (ZorderSpec, CompactProbe, SCALE.md): per-file [min, max] spans of
+    * (ZorderSpec, `Probe compact`, SCALE.md): per-file [min, max] spans of
     * `lookupCol` (within each row's own `partitionCol` dir when given —
     * partition pruning already bounds a lookup there), probed with every
     * row's own value. 1.0 = perfect tiling; k overlapping cluster sets

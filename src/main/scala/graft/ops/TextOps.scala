@@ -496,20 +496,7 @@ object TextOps {
       .union(shortPairs.select(col("id1"), col("id2"), col("dist")))
   }
 
-  /** Candidate pairs BEFORE verification — the blocking-selectivity
-    * probe surface (`EditJoinProbe`): candidates-per-row is the number
-    * that decides whether a (prefix length, τ) configuration survives a
-    * corpus scale-up, the same adjudication handle as e7b's band-occupancy
-    * ladder. Not part of the operator contract (verification makes
-    * blocking invisible to results); exposed so scale rows can record the
-    * candidate volume instead of inferring it from wall time.
-    */
-  def editDistanceCandidates(df: DataFrame, idCol: String, strCol: String,
-                             tau: Int,
-                             allowRiskyBlocking: Boolean = false): DataFrame =
-    edJoinParts(df, idCol, strCol, tau, allowRiskyBlocking)._3
-
-  /** Measured floor for PassJoin segment selectivity (EditJoinProbe sweep,
+  /** Measured floor for PassJoin segment selectivity (the blocking sweep,
     * SCALE.md round-12 table): segments of ≥ 10 chars kept candidates/row
     * ~flat through 100× (t22's prefix-30/τ=2 config is exactly 10); τ=3
     * over 30-char strings — 7-char segments — went quadratic (736 → 2,209
@@ -518,7 +505,7 @@ object TextOps {
     */
   val MinSafeSegmentChars = 10
 
-  /** Shared construction for `editDistanceJoin`/`editDistanceCandidates`:
+  /** The construction behind `editDistanceJoin`:
     * returns (typed input `t`, the short-string sliver, the deduped
     * candidate id pairs from the pigeonhole equi-join).
     *
@@ -548,7 +535,7 @@ object TextOps {
             s"editDistanceJoin: median string length ${l.longValue()} with " +
               s"tau=$tau gives ${l.longValue() / seg}-char segments — below " +
               s"the measured $MinSafeSegmentChars-char selectivity floor " +
-              "(EditJoinProbe: this regime's candidate volume grows " +
+              "(SCALE.md round 12: this regime's candidate volume grows " +
               "quadratically with the corpus). Use a longer blocking " +
               "string or a smaller tau, or pass allowRiskyBlocking=true " +
               "if the corpus is small enough to eat the all-pairs cost.")
@@ -580,7 +567,7 @@ object TextOps {
       // and AFTER it (≤ τ−j, net Δ), so
       //   d ∈ [max(−j, Δ−(τ−j)), min(j, Δ+(τ−j))]
       // instead of the loose [−τ, τ] — 75 → 19 probe keys/row at τ=2
-      // (EditJoinProbe, 10× corpus: 81.8 → candidates/row drop measured
+      // (SCALE.md, 10× corpus: 81.8 → candidates/row drop measured
       // alongside). The interval is never empty for |Δ| ≤ τ, j ≤ τ (all
       // four bound pairs reduce to |Δ| ≤ τ or j ≤ τ), so the plain
       // ascending sequence is safe. Completeness is the published lemma;

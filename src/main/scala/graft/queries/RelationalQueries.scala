@@ -316,11 +316,14 @@ object RelationalQueries {
         // repartition here measured SLOWER in r21, 2.31 vs 1.76) bounds
         // the write to ONE file per shard dir, restoring the gate's
         // one-raw-CSV-per-shard fixture (ADVICE r21: the r21 multi-file
-        // form changed the read-side file profile batchSplit sees). r22
-        // K7Probe, quiet window, interleaved 5 rounds: r21 partitionBy
-        // med 1.34 / r20 two-pass 1.39 / this form 1.32 — the driver's
-        // r21 k7 elevation did not reproduce (write-path ambient). Row
-        // order within a shard is not part of batchSplit's contract.
+        // form changed the read-side file profile batchSplit sees). r22,
+        // quiet window, interleaved 5 rounds (OPTIMIZATION_r22.md item 3):
+        // r21 partitionBy med 1.34 / r20 two-pass 1.39 / this form 1.32 —
+        // the driver's r21 k7 elevation did not reproduce (write-path
+        // ambient). Row order within a shard is not part of batchSplit's
+        // contract. coalesce(1) is a FIXTURE-only pattern: it funnels the
+        // whole write through one task, fine for this gate's small
+        // landing shards and wrong for any production-sized write.
         orders.withColumn("__par", pmod(col("o_orderkey"), lit(2)))
           .coalesce(1)
           .write.mode("overwrite").option("header", "true")

@@ -132,7 +132,8 @@ object TextQueries {
 
   /** Lineage-accreting reference shape (no checkpoint): kept as the
     * equivalence baseline BpeSpec pins bpeTrainCheckpointed against, and
-    * as BpeProbe's contrast curve. Gates route through bpeShared.
+    * as the contrast curve of SCALE.md's r14 BPE rows. Gates route
+    * through bpeShared.
     */
   private[graft] def bpeStages(s: SparkSession, d: String): (Seq[DataFrame], DataFrame) = {
     var cur = bpeInit(s, d)
@@ -467,7 +468,7 @@ object TextQueries {
     * composition: the iterative CC pass runs once, every downstream
     * consumer scans the label table with pruning/pushdown. The live
     * (un-materialized) CC iteration remains separately benchmarked as its
-    * own ScaleProbe row so its scaling stays tracked.
+    * own cc_live row of `Probe scale` so its scaling stays tracked.
     */
   private def ccLabelTable(s: SparkSession, d: String): DataFrame =
     InterStage.materialize(s, InterStage.tableKey(d, "documents") + "|cclabels8",
@@ -554,9 +555,9 @@ object TextQueries {
   }
 
   /** The UN-materialized CC label plan — the live iterative pass over the
-    * (materialized) pair table. ScaleProbe times this directly so the CC
-    * iteration keeps its own tracked scaling number now that the gates
-    * (d6/d7) read the shared label table.
+    * (materialized) pair table. `Probe scale` and `Probe query` time this
+    * directly as the cc_live row so the CC iteration keeps its own tracked
+    * scaling number now that the gates (d6/d7) read the shared label table.
     */
   def ccLabelsLive(s: SparkSession, d: String): DataFrame =
     Graph.connectedComponents(
@@ -852,9 +853,9 @@ object TextQueries {
     // rounds, no driver-side graph), materialized ONCE per corpus in the
     // shared ccLabelTable and scanned here and by d7 — the two-consumer
     // InterStage composition a production prune runs (the live iteration
-    // keeps its own ScaleProbe timing row). The oracle recomputes the same
-    // closure with a recursive CTE, which is only feasible because the
-    // banded pair join is EXACTLY the brute-force pair set.
+    // keeps its own cc_live row in `Probe scale`). The oracle recomputes
+    // the same closure with a recursive CTE, which is only feasible
+    // because the banded pair join is EXACTLY the brute-force pair set.
     "d6_dup_clusters" -> GQ(
       (s, d) => ccLabelTable(s, d)
         .withColumn("is_canonical", col("cluster_id") === col("doc_id")),
@@ -1601,6 +1602,9 @@ object TextQueries {
         // checkpoint materializes its (doc_id, lang, n_tokens) output —
         // three narrow columns, corpus-row-bounded — once, inside the
         // timed run (within-run materialization, not cross-run caching).
+        // A localCheckpoint is NOT fault-tolerant: its blocks live only in
+        // executor storage with the lineage cut, so losing an executor
+        // loses them and fails the query instead of recomputing.
         val kept = TextOps.qualityScreen(Relational.top1PerGroup(
           Tables.load(s, d, "documents").select(
             col("doc_id"), col("lang"), col("text")),

@@ -83,7 +83,7 @@ object VectorQueries {
     * fixed semantic-label centroids — on this corpus the labels only
     * weakly track vector geometry, so recall tracks the scanned fraction
     * and nprobe must cover a real share of the 10 lists (recall@5 ladder
-    * measured with RecallProbe at sf0.1: nprobe 2 -> 0.41, 4 -> 0.64,
+    * measured at sf0.1, SCALE.md: nprobe 2 -> 0.41, 4 -> 0.64,
     * 6 -> 0.83). e6b's trained quantizer gets geometric lists but ~sqrt(n)
     * of them, so its nprobe is wider too (2 -> 0.18, 8 -> 0.42, 16 with
     * Lloyd-2 + 2x assignment -> 0.85); per-probe cost stays
@@ -123,7 +123,7 @@ object VectorQueries {
     * (PqM * PqSubDim = Dim), PqKs = 256 centroids per subspace — the
     * standard 8-bit subquantizer, so a vector stores PqM bytes = 64 bits
     * vs 2048 for float32 (32x). The 4-bit first cut measured recall@5
-    * 0.570 at sf0.1 (RecallProbe) — half a bit per dimension quantizes
+    * 0.570 at sf0.1 (SCALE.md) — half a bit per dimension quantizes
     * away the neighborhood structure; 8-bit reads 0.9+ with the same
     * rerank pool. Codebooks are per-subspace means over a deterministic
     * 8-plane sign-LSH init (no RNG; the oracle regenerates them).
@@ -157,7 +157,7 @@ object VectorQueries {
     * per-plane disagreement p ~ acos(sim)/pi ~ 0.3-0.37) lands within one
     * table's radius-2 probe set with P ~ 0.5, and the three-table OR
     * lifts that to ~0.87 — measured 0.17 with the old radius-1
-    * single-table probe, 0.9+ with this one (RecallProbe, sf0.1).
+    * single-table probe, 0.9+ with this one (SCALE.md, sf0.1).
     */
   val probeMasks: Seq[Long] =
     (0L until (1L << MaxPlanes)).filter(m => java.lang.Long.bitCount(m) <= 2)
@@ -552,9 +552,10 @@ object VectorQueries {
     InterStage.materialize(s, InterStage.tableKey(d, "embeddings") + "|cospairs04",
       cosPairsPlan(s, d))
 
-  /** The un-materialized pair pipeline, exposed for ScaleProbe: the gates
-    * read the shared table, and this keeps the LSH pipeline's own scaling
-    * separately tracked (as ccLabelsLive does for the iterative CC).
+  /** The un-materialized pair pipeline, the `cos_pairs_live` row of `Probe
+    * scale` and `Probe query`: the gates read the shared table, and this
+    * keeps the LSH pipeline's own scaling separately tracked (as ccLabelsLive
+    * does for the iterative CC).
     */
   def cosPairsLive(s: SparkSession, d: String): org.apache.spark.sql.DataFrame =
     cosPairsPlan(s, d)
@@ -657,7 +658,7 @@ object VectorQueries {
   }
 
   /** Just the normed/bucketed/signed corpus table — what the sign-LSH
-    * consumers (e2/e7/e7b) read. ScaleProbe's only-mode warms this instead
+    * consumers (e2/e7/e7b) read. `Probe scale`'s only-mode warms this instead
     * of the full inter-stage set when the subset touches nothing else.
     */
   def warmSigChain(s: SparkSession, d: String): Unit = {
@@ -665,18 +666,11 @@ object VectorQueries {
     ()
   }
 
-  /** The (vec_id, sig_lo, sig_hi) signature table — probe tooling reads
-    * this to measure band-layout recall against a brute-force pair scan.
+  /** The (vec_id, sig_lo, sig_hi) signature table — the base that
+    * `sigWithTwins` extends for the e7b gates.
     */
   def sigTable(s: SparkSession, d: String): org.apache.spark.sql.DataFrame =
     normedBuckets(s, d).select(col("vec_id"), col("sig_lo"), col("sig_hi"))
-
-  /** The twin-extended signature table (see `sigWithTwins`) — gives probe
-    * measurements a populated near-dup stratum (hamming-3 pairs) on a
-    * corpus whose natural closest pair sits at hamming 14.
-    */
-  def sigTwinTable(s: SparkSession, d: String): org.apache.spark.sql.DataFrame =
-    sigWithTwins(s, d)
 
   val all: Seq[(String, GQ)] = Seq(
 
@@ -787,7 +781,7 @@ object VectorQueries {
     // measured against (as e1 is to e2). The pair pipeline itself lives in
     // cosPairsPlan, materialized once per corpus and shared with the e8
     // semantic-dedup clustering; its un-materialized scaling stays tracked
-    // as ScaleProbe's cos_pairs_live row.
+    // as the cos_pairs_live row of `Probe scale`.
     "e3_cosine_neardup_pairs" -> GQ(
       (s, d) => cosPairs(s, d),
       s"WITH $dCosPairCtes " +

@@ -674,7 +674,7 @@ object EventStreams {
 
   /** Maintenance: rewrite the current SCD2 snapshot into `newBuckets` hash
     * buckets, committed as a new state generation. The bucket count is the
-    * per-landing-cost knob (Scd2BucketProbe's r14 ladder: smallest B whose
+    * per-landing-cost knob (SCALE.md's r14 bucket ladder: smallest B whose
     * per-bucket history fits the rewrite budget) and the right B GROWS
     * with history — at 100-TB state B scales with history, not landings —
     * so a long-lived state dir must be able to migrate without a full
@@ -1041,7 +1041,7 @@ object EventStreams {
     * daily partition so re-delivered late files stay inside the horizon).
     *
     * `horizon` IS the state-sizing knob: live state ≈ arrival rate ×
-    * horizon (StreamScaleProbe records the state-vs-horizon ladder in
+    * horizon (`Probe stream` records the state-vs-horizon ladder in
     * SCALE.md) and also the dedup guarantee's reach — a duplicate arriving
     * more than `horizon` of event time late is NOT deduplicated. Size it
     * to the upstream's worst re-delivery lag, then provision state memory

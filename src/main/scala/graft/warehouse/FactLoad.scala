@@ -280,7 +280,8 @@ object FactLoad {
     // compactions); this folds them back into the canonical single cluster
     // set — the explicit OPTIMIZE ZORDER the reference runs after its own
     // write (load_fact.py:403-405), priced at 0.75 s/M over the 300M rung
-    // (SCALE.md r18, CompactProbe: point-lookup locality 4.03 → 1.03 files).
+    // (SCALE.md r18, `Probe compact`: point-lookup locality 4.03 → 1.03
+    // files).
     // A no-op under slices=1 — the inline clustered write IS that layout.
     val compact = spark.conf.get("spark.graft.fact.compact", "false").toBoolean
     if (compact && stagedPaths.size > 1) compactInPlace(spark, outputTable)

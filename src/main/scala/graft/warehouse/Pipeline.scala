@@ -77,7 +77,7 @@ object Pipeline {
   /** The post-load referential-integrity family (C8): fact FK →
     * (dimension catalog table, staged-parquet selector on [[Paths]],
     * dim PK). The SINGLE source of truth shared by the "post-load
-    * checks" stage (catalog side) and `CompactProbe`'s re-run against
+    * checks" stage (catalog side) and `Probe compact`'s re-run against
     * the staged parquets — a gate added to one side but not the other
     * would otherwise silently decouple the probe's adjudication from
     * the pipeline's contract. The staged side goes through Paths
@@ -125,7 +125,7 @@ object Pipeline {
     }))
 
   /** Runs the full DAG; returns per-stage wall-clock seconds in DAG order
-    * (the ScaleProbe-style row: which stage pays when the corpus grows).
+    * (the SCALE.md-style row: which stage pays when the corpus grows).
     * `fromStage` skips every stage strictly before it (see [[stageOrder]]);
     * the skipped stages' staging-dir outputs must already exist.
     */

@@ -74,7 +74,7 @@ class FuzzyJoinSpec extends SparkSpec {
   }
 
   test("blocking guard enforces the measured selectivity floor") {
-    // tau=3 over 30-char prefixes = 7-char segments: EditJoinProbe
+    // tau=3 over 30-char prefixes = 7-char segments: SCALE.md's r12 sweep
     // measured this regime quadratic (736 -> 2,209 cand/row at 3x rows) —
     // the operator must refuse it loudly instead of shipping an
     // all-pairs-shaped shuffle to a cluster.

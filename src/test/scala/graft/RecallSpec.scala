@@ -8,8 +8,8 @@ package graft
   * 0.7 so data-independent noise can't flake the suite, while any knob
   * change that collapses recall the way the pre-round-9 settings did
   * (0.13–0.41 on real corpora) fails loudly here instead of surfacing as
-  * a VERDICT finding. RecallProbe measures the same number on the larger
-  * corpora (sf0.1: 0.905 / 0.825 / 0.850 / 0.825).
+  * a VERDICT finding. `Probe scale <sfDir> 1` measures the same number
+  * on the larger corpora (sf0.1: 0.905 / 0.825 / 0.850 / 0.825).
   */
 class RecallSpec extends SparkSpec {
 
@@ -31,6 +31,6 @@ class RecallSpec extends SparkSpec {
     test(s"$name recall@5 vs the exact baseline stays above the floor") {
       val r = recall(name)
       assert(r >= 0.7, f"$name recall@5 = $r%.3f < 0.7 — an accuracy " +
-        "regression in the ANN knobs (see RecallProbe / SCALE.md)")
+        "regression in the ANN knobs (see SCALE.md)")
     }
 }

@@ -62,7 +62,7 @@ class ZorderSpec extends SparkSpec {
     * bulk value.
     */
   // The shared read-locality metric — one implementation (see its scaladoc)
-  // so these assertions stay comparable with CompactProbe's numbers.
+  // so these assertions stay comparable with `Probe compact`'s numbers.
   private def filesPerLookup(path: String, c: String): Double =
     Relational.filesPerLookup(spark.read.parquet(path), c)
 
@@ -182,7 +182,7 @@ class ZorderSpec extends SparkSpec {
         .write.mode("append").partitionBy("part").parquet(src)
     }
     // The locality metric the remedy exists for — the SAME shared
-    // implementation CompactProbe prints (partition-scoped form).
+    // implementation `Probe compact` prints (partition-scoped form).
     def filesPerLookup(path: String): Double =
       Relational.filesPerLookup(spark.read.parquet(path), "d", Some("part"))
     val before = filesPerLookup(src)
