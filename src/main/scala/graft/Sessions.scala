@@ -2,10 +2,19 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** The one local SparkSession recipe every main (Verify, Bench, Probe)
-  * builds from, so a session-config change (a new legacy flag,
-  * an extensions addition) happens in exactly one place and profiling
-  * never silently diverges from the benchmarked configuration.
+/** The local SparkSession recipe the gate mains (Verify, Bench and most
+  * Probe subcommands) build from, so a session-config change (a new
+  * legacy flag, an extensions addition) happens in one place and
+  * profiling never silently diverges from the benchmarked configuration.
+  *
+  * The one other recipe is `warehouse.PipelineDemo.buildSession`, used by
+  * the scaled warehouse runs (PipelineDemo, ChunkedExtract,
+  * FactStageProbe), `Probe compact` and the perfbench `lfb_dag` workload.
+  * It differs on purpose, for corpus-sized DAG runs: zstd shuffle/spill
+  * codec (scratch disk is the binding constraint there), a 1-min cleaner
+  * GC that reclaims finished stages' shuffle files during the run, and,
+  * given a row count, shuffle partitions sized by rows
+  * (`Relational.rowSizedPartitions`) instead of by cores.
   */
 object Sessions {
 

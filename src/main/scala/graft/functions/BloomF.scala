@@ -64,169 +64,3 @@ object BloomMightContainF {
     ColumnBridge.toColumn(BloomMightContainF(ColumnBridge.toExpr(c), bytes))
   }
 }
-
-/** Membership probe against a PARTITIONED Bloom filter bank — the shape
-  * `BloomMightContainF` cannot reach: a single filter over n keys is one
-  * `byte[]` (JVM max ~2.1 GB, i.e. ~1.79 B keys at 1% fpp — the exact
-  * regime a 100-TB decontamination/extract filter lives in) and rides the
-  * task binary. Here the key space is split by `floorMod(key, k)` into k
-  * sub-filters, each under a byte cap, and the bank ships as ONE managed
-  * `Broadcast` (torrent-chunked, cached once per executor) that the
-  * generated code reads lazily — same one-virtual-call-per-row codegen
-  * shape as the single-filter probe.
-  *
-  * The probe key must be the same bigint the bank was built over
-  * (xxhash64 of the join key, by the extract/x1b convention); the
-  * dispatch `floorMod` matches the builder's `pmod`, so a key always
-  * probes the sub-filter that indexed it. False positives remain ≤ fpp
-  * per sub-filter; false negatives remain impossible.
-  */
-case class BloomBankMightContainF(child: Expression,
-    bank: org.apache.spark.broadcast.Broadcast[Array[BloomFilter]])
-    extends UnaryExpression {
-
-  @transient private lazy val bfs: Array[BloomFilter] = bank.value
-
-  override def dataType: DataType = BooleanType
-  override def prettyName: String = "bloom_bank_might_contain"
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    child.dataType match {
-      case LongType => TypeCheckResult.TypeCheckSuccess
-      case other => TypeCheckResult.TypeCheckFailure(
-        s"$prettyName expects bigint, got ${other.simpleString}")
-    }
-
-  override def nullSafeEval(v: Any): Any = {
-    val key = v.asInstanceOf[Long]
-    bfs(java.lang.Math.floorMod(key, bfs.length.toLong).toInt)
-      .mightContainLong(key)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    // Reference the (small) Broadcast handle, not the filters: the bank is
-    // fetched torrent-style once per executor and the deserialized array
-    // is cached in the block manager; the lazy assignment below costs one
-    // predictable null check per row after the first.
-    val bankRef = ctx.addReferenceObj("bloomBank", bank,
-      classOf[org.apache.spark.broadcast.Broadcast[_]].getName)
-    val bfsVar = ctx.addMutableState(
-      "org.apache.spark.util.sketch.BloomFilter[]", "bloomBankFilters")
-    nullSafeCodeGen(ctx, ev, c => s"""
-      if ($bfsVar == null) {
-        $bfsVar = (org.apache.spark.util.sketch.BloomFilter[]) $bankRef.value();
-      }
-      ${ev.value} = $bfsVar[(int) java.lang.Math.floorMod($c, (long) $bfsVar.length)]
-        .mightContainLong($c);
-    """)
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-object BloomBankMightContainF {
-  def apply(c: Column,
-            bank: org.apache.spark.broadcast.Broadcast[Array[BloomFilter]]): Column =
-    ColumnBridge.toColumn(BloomBankMightContainF(ColumnBridge.toExpr(c), bank))
-}
-
-/** Builder + feasibility guard for the partitioned Bloom filter bank.
-  *
-  * Sizing math (recorded because the single-filter path OOMs silently in
-  * exactly its target regime): optimal bits = -n·ln(fpp)/ln²2, so at
-  * n = 2 B keys and fpp = 0.01 the filter is ~19.2 Gbit ≈ 2.29 GiB —
-  * over the JVM's max array size as one `byte[]`, and 2–3× that
-  * transiently on the driver (built value + broadcast block). The bank
-  * splits it into k = ceil(total/partBytes) sub-filters (each under
-  * `spark.graft.bloom.partBytes`, default 256 MiB) and the guard refuses
-  * — loudly, returning Left — when the TOTAL exceeds
-  * `spark.graft.bloom.maxBytes` (default maxHeap/4, the measured safe
-  * transient share), so the caller falls back to its exact plan instead
-  * of dying in `ByteArrayOutputStream` or an executor OOM. The k>1 path
-  * refuses the same way when the SCRATCH filesystem cannot hold its
-  * ~8 B/key staging write — disk is the other resource the target regime
-  * exhausts, and ENOSPC mid-fan-out is not a loud fallback.
-  */
-object BloomBankF {
-
-  /** Test seam: usable bytes on the key-staging filesystem. The spec
-    * overrides this to drive the scratch guard without filling a disk;
-    * production always sees the real `getUsableSpace`. */
-  private[graft] var usableScratchBytes: java.io.File => Long = _.getUsableSpace
-
-  def optimalBytes(n: Long, fpp: Double): Long = {
-    val bits = BloomFilter.optimalNumOfBits(math.max(n, 1L), fpp)
-    bits / 8 + (if (bits % 8 > 0) 1 else 0)
-  }
-
-  /** Build k hash-partitioned sub-filters over `keys` (one non-null bigint
-    * column). k = 1 builds scan-only via `stat.bloomFilter` (treeAggregate,
-    * no shuffle). k > 1 stages the 8-byte keys ONCE as a `_p`-partitioned
-    * parquet (a parallel fan-out write — no repartition, so build
-    * parallelism never collapses to k; the first cut of this code
-    * repartitioned into k partitions and the 400M-key build ran on 2 of 32
-    * cores, measured 2.6× slower than classic), then runs one
-    * partition-PRUNED `stat.bloomFilter` pass per sub-filter: each task
-    * allocates exactly one `partBytes`-sized zero value — the per-task
-    * FULL-size allocation is what makes a single huge `stat.bloomFilter`
-    * infeasible long before the byte[] limit (its treeAggregate zero is
-    * the whole filter, per task). Per-task build memory = partBytes, so
-    * size the knob to heap/(a few × concurrent tasks). Returns Left(reason)
-    * when the total filter size exceeds the driver budget.
-    */
-  def build(keys: org.apache.spark.sql.DataFrame, n: Long, fpp: Double):
-      Either[String, org.apache.spark.broadcast.Broadcast[Array[BloomFilter]]] = {
-    import org.apache.spark.sql.functions.{col, lit, pmod}
-    val spark = keys.sparkSession
-    require(keys.schema.fields.length == 1 &&
-      keys.schema.fields(0).dataType == LongType,
-      s"BloomBankF.build expects one bigint column, got ${keys.schema.simpleString}")
-    val partBytes = spark.conf
-      .get("spark.graft.bloom.partBytes", (256L << 20).toString).toLong
-    val maxBytes = spark.conf.get("spark.graft.bloom.maxBytes",
-      (Runtime.getRuntime.maxMemory() / 4).toString).toLong
-    val total = optimalBytes(n, fpp)
-    if (total > maxBytes)
-      return Left(f"estimated filter size $total%,d B for $n%,d keys at " +
-        f"fpp=$fpp exceeds the driver budget $maxBytes%,d B " +
-        "(spark.graft.bloom.maxBytes)")
-    val k = math.max(1L, (total + partBytes - 1) / partBytes).toInt
-    val keyCol = keys.schema.fields(0).name
-    val bank: Array[BloomFilter] =
-      if (k == 1) Array(keys.stat.bloomFilter(keyCol, math.max(n, 1000L), fpp))
-      else {
-        val perN = math.max(n / k, 1000L)
-        val scratch = graft.ops.InterStage.scratchDir("graft_bloom_bank_")
-        // ENOSPC guard — the maxBytes guard above covers only the DRIVER
-        // transient; the k>1 build additionally stages all n keys once as
-        // parquet (~8 B/key of incompressible hashed data, plain-encoded,
-        // plus page/footer overhead — tens of GB at the bank's 2B-key
-        // target regime). Refuse loudly (classic fallback) when the
-        // scratch filesystem cannot hold the estimate, BEFORE the fan-out
-        // write dies mid-job on a full disk.
-        val stagingEst = n * 9L // 8 B/key + ~12% encoding/footer margin
-        val usable = usableScratchBytes(new java.io.File(scratch))
-        if (usable < stagingEst) {
-          graft.ops.InterStage.deleteRecursively(new java.io.File(scratch))
-          return Left(f"bank key staging needs ~$stagingEst%,d B of scratch " +
-            f"for $n%,d keys but only $usable%,d B are usable under " +
-            s"$scratch — falling back to the exact plan")
-        }
-        val tmp = scratch + "/keys"
-        keys.select(col(keyCol).as("_k"),
-            pmod(col(keyCol), lit(k.toLong)).as("_p"))
-          .write.partitionBy("_p").mode("overwrite").parquet(tmp)
-        val staged = spark.read.parquet(tmp)
-        val built = Array.tabulate(k) { i =>
-          // `_p` is a partition directory: the filter prunes to ~n/k keys
-          staged.where(col("_p") === i).select(col("_k"))
-            .stat.bloomFilter("_k", perN, fpp)
-        }
-        graft.ops.InterStage.deleteRecursively(
-          new java.io.File(new java.io.File(tmp).getParent))
-        built
-      }
-    Right(spark.sparkContext.broadcast(bank))
-  }
-}

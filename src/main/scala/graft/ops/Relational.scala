@@ -164,22 +164,28 @@ object Relational {
     incoming.join(keyDf, keys, "left_anti")
   }
 
-  /** Append-only-new-rows to a parquet path; first run (path absent)
-    * falls back to overwrite — the try/except pattern of
-    * `etl/extract/lfb-extract.py:30-52`.
+  /** The parquet sink at `path`, or None when nothing has landed there yet
+    * (absent path, or no readable parquet under it) — the try/except
+    * pattern of `etl/extract/lfb-extract.py:30-52`.
     */
-  def incrementalAppend(incoming: DataFrame, keys: Seq[String], path: String): Unit = {
-    val spark = incoming.sparkSession
-    val existing =
-      try Some(spark.read.parquet(path))
-      catch { case _: org.apache.spark.sql.AnalysisException => None }
-    existing match {
+  def existingParquet(spark: SparkSession, path: String): Option[DataFrame] =
+    try Some(spark.read.parquet(path))
+    catch { case _: org.apache.spark.sql.AnalysisException => None }
+
+  /** Append-only-new-rows to a parquet path; first run (sink absent)
+    * falls back to overwrite. The load contract of the warehouse's
+    * extract and incremental dimension jobs; `broadcastExisting` as in
+    * `newRowsOnly`.
+    */
+  def incrementalAppend(incoming: DataFrame, keys: Seq[String], path: String,
+                        broadcastExisting: Boolean = false): Unit =
+    existingParquet(incoming.sparkSession, path) match {
       case Some(ex) =>
-        newRowsOnly(incoming, ex, keys).write.mode("append").parquet(path)
+        newRowsOnly(incoming, ex, keys, broadcastExisting)
+          .write.mode("append").parquet(path)
       case None =>
         incoming.write.mode("overwrite").parquet(path)
     }
-  }
 
   // ---------------------------------------------------------------------
   // Temporal nearest-within-band join (as-of/band join)

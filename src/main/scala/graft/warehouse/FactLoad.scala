@@ -418,8 +418,8 @@ object FactLoad {
       spark.sql(s"REFRESH TABLE $table")
     }
     if (fs.exists(tmp)) fs.delete(tmp, true)
-    // Scratch guard (the BloomBankF pattern: estimate, refuse LOUDLY, run
-    // the correct fallback): before the swap frees the old copy the
+    // Scratch guard (estimate the need, refuse LOUDLY when it does not
+    // fit, run the correct fallback): before the swap frees the old copy the
     // rewrite holds the tmp copy (~1× table, on the TABLE's filesystem)
     // plus the range shuffle's sort-spill (~2.8× — spill is wider than
     // the parquet it re-sorts; lands in spark.local.dir/java.io.tmpdir,

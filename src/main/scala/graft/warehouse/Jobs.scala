@@ -20,108 +20,14 @@ object Jobs {
     * wb-extract.py:15-31, weather-extract.py:15-31; J1+K2).
     */
   def extract(spark: SparkSession, inPath: String, outPath: String,
-              keys: Seq[String], dateCol: Option[(String, String)] = None,
-              broadcastExisting: Boolean = false): Unit = {
+              keys: Seq[String], dateCol: Option[(String, String)] = None): Unit = {
     var df = spark.read.option("header", "true").option("inferSchema", "true").csv(inPath)
     // try_to_date: unparseable dates become null (the reference runs
     // pre-ANSI Spark where to_date nulls malformed input silently).
     dateCol.foreach { case (c, fmt) =>
       df = df.withColumn(c, expr(s"try_to_date($c, '$fmt')"))
     }
-    val existing =
-      try Some(spark.read.parquet(outPath))
-      catch { case _: org.apache.spark.sql.AnalysisException => None }
-    existing match {
-      case Some(ex) =>
-        val keyDf0 = ex.select(keys.map(col): _*).distinct()
-        // Three shapes for "append only new keys", chosen by size:
-        //  - J3 broadcast hint: caller knows the accumulated keys are small.
-        //  - classic shuffle anti-join below `bloomThreshold` existing rows
-        //    (the shape every gate measures; footer-count probe, no scan).
-        //  - Bloom-prefiltered (the x1b shape) past it: a Bloom over the
-        //    existing keys (treeAggregate — scan, no shuffle, no distinct)
-        //    drops landing rows that cannot be duplicates at the scan via
-        //    the codegen'd probe; the surviving ~fpp tail's keys
-        //    broadcast-semi-join against existing to find the TRUE
-        //    duplicate keys, which broadcast-anti-join the landing. Bloom
-        //    false positives die in the exact joins, so the appended rows
-        //    are identical to the classic plan's (spec-pinned), and the
-        //    landing/accumulated keys never shuffle — per-landing cost is
-        //    independent of the accumulated key-set size. The price is one
-        //    extra parse of the landing and a second scan of existing, and
-        //    that trade was MEASURED AGAINST, not assumed: at every rung
-        //    this box reaches (up to 400M accumulated keys, SCALE.md r16)
-        //    the classic shuffle is cheaper than the re-parse, so the
-        //    default threshold keeps the path OFF below 2B rows — opt in
-        //    via the conf on clusters where the accumulated-key exchange,
-        //    not the parse, is the binding term. A duplicate-heavy landing
-        //    (a full re-delivery) would blow the broadcast, so survivors
-        //    past `maxBroadcastKeys` fall back to the classic shuffle
-        //    join — correctness never depends on the estimate.
-        val bloomThreshold = spark.conf
-          .get("spark.graft.extract.bloomThreshold", "2000000000").toLong
-        lazy val exRows = ex.count() // parquet footer metadata, no data scan
-        if (broadcastExisting) {
-          df.join(broadcast(keyDf0), keys, "left_anti")
-            .write.mode("append").parquet(outPath)
-        } else if (exRows < bloomThreshold) {
-          df.join(keyDf0, keys, "left_anti")
-            .write.mode("append").parquet(outPath)
-        } else {
-          // xxhash64 composite key (the probe expression takes bigint, the
-          // x1b convention): a hash collision - or null components hashing
-          // alike - only ADDS false positives, which the exact joins
-          // remove; it can never drop a match.
-          val ckey = xxhash64(keys.map(c => col(c).cast("string")): _*)
-          // Partitioned filter bank (BloomBankF): a single filter at this
-          // path's own target regime (>= 2B accumulated keys, ~2.3 GiB at
-          // 1% fpp) is over the JVM max-array limit and needs a full-size
-          // allocation PER treeAggregate task; the bank splits it under a
-          // byte cap and ships as one managed broadcast. The guard returns
-          // Left when even the bank exceeds the driver budget — fall back
-          // to the exact classic plan loudly, never OOM.
-          graft.functions.BloomBankF.build(
-              ex.select(ckey.as("_k")), exRows, 0.01) match {
-            case Left(reason) =>
-              System.err.println(s"[extract] Bloom prefilter infeasible — " +
-                s"$reason; falling back to the classic shuffle anti-join " +
-                s"for $outPath")
-              df.join(keyDf0, keys, "left_anti")
-                .write.mode("append").parquet(outPath)
-            case Right(bank) =>
-              try {
-                // Materialized once: the guard count, the semi join, and the
-                // broadcast all reuse the tiny parquet instead of re-parsing
-                // the landing CSV per consumer (the landing is scanned
-                // exactly twice total — survivor pass + final write — vs
-                // once classically).
-                val survRoot = graft.ops.InterStage.scratchDir("graft_extract_surv_")
-                val survPath = survRoot + "/k"
-                df.where(graft.functions.BloomBankMightContainF(ckey, bank))
-                  .select(keys.map(col): _*).distinct()
-                  .write.mode("overwrite").parquet(survPath)
-                val survivorKeys = spark.read.parquet(survPath)
-                val maxBroadcast = spark.conf
-                  .get("spark.graft.extract.maxBroadcastKeys", "4000000").toLong
-                if (survivorKeys.count() > maxBroadcast)
-                  df.join(keyDf0, keys, "left_anti")
-                    .write.mode("append").parquet(outPath)
-                else {
-                  val dupKeys = ex.select(keys.map(col): _*)
-                    .join(broadcast(survivorKeys), keys, "left_semi").distinct()
-                  df.join(broadcast(dupKeys), keys, "left_anti")
-                    .write.mode("append").parquet(outPath)
-                }
-                // The append is durable: reclaim the per-landing survivor
-                // scratch now instead of letting it accumulate until the
-                // JVM shutdown hook (a long-lived orchestrator runs many
-                // landings per JVM).
-                graft.ops.InterStage.deleteRecursively(new java.io.File(survRoot))
-              } finally bank.destroy()
-          }
-        }
-      case None => df.write.mode("overwrite").parquet(outPath)
-    }
+    Relational.incrementalAppend(df, keys, outPath)
   }
 
   def lfbExtract(spark: SparkSession, inPath: String, outPath: String): Unit =
@@ -132,21 +38,14 @@ object Jobs {
     * (reference: aq-extract.py:25-61; S3+J3).
     */
   def aqExtract(spark: SparkSession, inPaths: Seq[String], outPath: String): Unit = {
+    require(inPaths.nonEmpty, "aqExtract: no air-quality input CSVs (aq-*.csv) " +
+      s"to extract into $outPath")
     val tmp = graft.ops.InterStage.scratchDir("graft_aq_union_")
     inPaths.map(p => spark.read.option("header", "true").option("inferSchema", "true").csv(p))
       .reduce(_ unionByName _).write.mode("overwrite").parquet(tmp)
     // reuse the incremental path on the unioned staging copy
-    val df = spark.read.parquet(tmp)
-    val existing =
-      try Some(spark.read.parquet(outPath))
-      catch { case _: org.apache.spark.sql.AnalysisException => None }
-    existing match {
-      case Some(ex) =>
-        df.join(broadcast(ex.select("Site", "Species", "ReadingDateTime").distinct()),
-          Seq("Site", "Species", "ReadingDateTime"), "left_anti")
-          .write.mode("append").parquet(outPath)
-      case None => df.write.mode("overwrite").parquet(outPath)
-    }
+    Relational.incrementalAppend(spark.read.parquet(tmp),
+      Seq("Site", "Species", "ReadingDateTime"), outPath, broadcastExisting = true)
   }
 
   /** LFB cleanse (reference: etl/transform/lfb-cleanse.py): drop columns,
@@ -375,23 +274,14 @@ object Jobs {
         col("day_of_week").as("DayOfWeek"), col("day_name").as("DayName"),
         col("month_name").as("MonthName"), col("quarter").as("Quarter"),
         col("week_of_year").as("WeekOfYear"), col("is_weekend").as("IsWeekend"))
-    val existing =
-      try Some(spark.read.parquet(outPath))
-      catch { case _: org.apache.spark.sql.AnalysisException => None }
-    existing match {
-      case Some(ex) =>
-        val fresh = cal.join(ex.select("Date"), Seq("Date"), "left_anti")
-        if (fresh.count() > 0) fresh.write.mode("append").parquet(outPath)
-      case None => cal.write.mode("overwrite").parquet(outPath)
-    }
+    Relational.incrementalAppend(cal, Seq("Date"), outPath)
   }
 
   /** Well-being dimension (reference: etl/transform/wb-dimension.py):
     * rename to Value/Label pairs, null-fill labels, hash id over
     * (Year, WardCode), sentinel, incremental append on WellBeingID.
     */
-  def wbDimension(spark: SparkSession, inPath: String, outPath: String,
-                  format: String = "preserve-all"): Unit = {
+  def wbDimension(spark: SparkSession, inPath: String, outPath: String): Unit = {
     val renames =
       Seq("Ward_Code" -> "WardCode") ++
         Model.wbRename.map { case (from, to) => from -> s"${to}Value" } ++
@@ -399,28 +289,12 @@ object Jobs {
     var df = renames.foldLeft(spark.read.parquet(inPath)) {
       case (acc, (from, to)) => acc.withColumnRenamed(from, to)
     }
-    val labelCols = df.columns.filter(_.endsWith("Label")).toSeq
-    val numericCols = df.columns.filter(_.endsWith("Value")).toSeq
-    df = df.na.fill("Unknown", labelCols)
-    format match {
-      case "only-labels"  => df = df.drop(numericCols: _*)
-      case "only-numeric" => df = df.drop(labelCols: _*)
-      case _              => ()
-    }
+    df = df.na.fill("Unknown", df.columns.filter(_.endsWith("Label")).toSeq)
     df = df.withColumn("WellBeingID", sha2(concat_ws("|", col("Year"), col("WardCode")), 256))
     val sentinel = spark.range(1).select(df.schema.fields.map(f =>
       if (f.dataType.typeName == "string") lit("Unknown").as(f.name)
       else lit(null).cast(f.dataType).as(f.name)).toSeq: _*)
-    val full = df.unionByName(sentinel)
-    val existing =
-      try Some(spark.read.parquet(outPath))
-      catch { case _: org.apache.spark.sql.AnalysisException => None }
-    existing match {
-      case Some(ex) =>
-        val fresh = full.join(ex.select("WellBeingID"), Seq("WellBeingID"), "left_anti")
-        if (fresh.count() > 0) fresh.write.mode("append").parquet(outPath)
-      case None => full.write.mode("overwrite").parquet(outPath)
-    }
+    Relational.incrementalAppend(df.unionByName(sentinel), Seq("WellBeingID"), outPath)
   }
 
   /** Catalog loads: enforce the dimension's declared column order/types via
@@ -474,6 +348,7 @@ object Jobs {
   def batchSplit(spark: SparkSession, inPaths: Seq[String], outPath: String,
                  dateCol: String, dateFmt: String,
                  splitDates: Seq[String]): Unit = {
+    require(inPaths.nonEmpty, s"batchSplit: no input CSVs to split into $outPath")
     val raw = inPaths.map(p => spark.read.option("header", "true").csv(p))
       .reduce(_.unionByName(_, allowMissingColumns = true))
     val parsed = raw
@@ -508,14 +383,8 @@ object Jobs {
     */
   def eventsExtract(spark: SparkSession, inPath: String, outPath: String): Unit = {
     val raw = spark.read.parquet(inPath)
-    val existing =
-      try Some(spark.read.parquet(outPath))
-      catch { case _: org.apache.spark.sql.AnalysisException => None }
-    val fresh = existing match {
-      case Some(ex) => raw.join(
-        ex.select(col("event_id")).distinct(), Seq("event_id"), "left_anti")
-      case None => raw
-    }
+    val existing = Relational.existingParquet(spark, outPath)
+    val fresh = existing.fold(raw)(Relational.newRowsOnly(raw, _, Seq("event_id")))
     val gated = fresh.withColumn("__tus", graft.Tables.eventTimeUs(fresh))
     graft.ops.Checks.epochRangeUs(gated, "__tus").left.foreach(v =>
       throw new IllegalStateException(

@@ -33,59 +33,11 @@ class BloomFSpec extends SparkSpec {
     assert(viaPlan == direct)
   }
 
-  test("bloom bank: partitioned build equals a single filter's verdicts, no false negatives") {
-    import graft.functions.{BloomBankF, BloomBankMightContainF}
-    // negative keys included: dispatch must be floorMod, not %
-    val members = spark.range(0, 5000).select(xxhash64(col("id")).as("k"))
-    spark.conf.set("spark.graft.bloom.partBytes", "512") // force k > 1
-    try {
-      val bank = BloomBankF.build(members, 5000L, 0.01)
-        .getOrElse(fail("bank build refused unexpectedly"))
-      try {
-        assert(bank.value.length > 1, "partBytes=512 should split the bank")
-        val missed = members
-          .where(!BloomBankMightContainF(col("k"), bank)).count()
-        assert(missed == 0, s"bank false-negatived $missed member keys")
-        val nonMembers = spark.range(5000, 15000).select(xxhash64(col("id")).as("k"))
-        val fp = nonMembers
-          .where(BloomBankMightContainF(col("k"), bank)).count()
-        assert(fp < 500, s"fp=$fp way above the 1% nominal rate")
-        // codegen vs interpreted agreement on the same bank
-        val probe = members.unionAll(nonMembers)
-        val viaPlan = probe.where(BloomBankMightContainF(col("k"), bank))
-          .as[Long].collect().toSet
-        val bfs = bank.value
-        val direct = probe.as[Long].collect().filter { key =>
-          bfs(java.lang.Math.floorMod(key, bfs.length.toLong).toInt)
-            .mightContainLong(key)
-        }.toSet
-        assert(viaPlan == direct)
-      } finally bank.destroy()
-    } finally spark.conf.unset("spark.graft.bloom.partBytes")
-  }
-
   test("x1b bloom-prefiltered decontamination equals the exact x1 result") {
     val reg = graft.queries.TextQueries.all.toMap
     val exact = reg("x1_decontaminate").fn(spark, Sf0001)
     val bloomed = reg("x1b_bloom_decontaminate").fn(spark, Sf0001)
     assert(exact.exceptAll(bloomed).count() == 0)
     assert(bloomed.exceptAll(exact).count() == 0)
-  }
-
-  test("bloom bank: k>1 build refuses loudly when scratch cannot hold the key staging") {
-    import graft.functions.BloomBankF
-    val members = spark.range(0, 5000).select(xxhash64(col("id")).as("k"))
-    spark.conf.set("spark.graft.bloom.partBytes", "512") // force k > 1
-    val realProbe = BloomBankF.usableScratchBytes
-    BloomBankF.usableScratchBytes = _ => 1024L // a nearly-full scratch disk
-    try {
-      val res = BloomBankF.build(members, 5000L, 0.01)
-      assert(res.isLeft, "build must return Left on insufficient scratch, " +
-        "not die mid-fan-out on ENOSPC")
-      assert(res.left.exists(_.contains("scratch")), s"unhelpful reason: $res")
-    } finally {
-      BloomBankF.usableScratchBytes = realProbe
-      spark.conf.unset("spark.graft.bloom.partBytes")
-    }
   }
 }

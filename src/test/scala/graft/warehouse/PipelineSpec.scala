@@ -103,9 +103,14 @@ class PipelineSpec extends SparkSpec {
 
   test("second run is incrementally idempotent") {
     ranOnce
-    val before = spark.read.parquet(paths.lfbRaw).count()
+    // every incremental sink: the four extracts (aqRaw through the
+    // broadcast anti join) and the two incremental dimensions
+    val sinks = Seq(paths.lfbRaw, paths.aqRaw, paths.weatherRaw, paths.wbRaw,
+      paths.dateDim, paths.wbDim)
+    def counts() = sinks.map(p => p -> spark.read.parquet(p).count())
+    val before = counts()
     Pipeline.run(spark, inputs, paths)
-    assert(spark.read.parquet(paths.lfbRaw).count() == before)
+    assert(counts() == before)
     assert(spark.table("lfb_call").count() == 6)
   }
 
@@ -236,12 +241,8 @@ class PipelineSpec extends SparkSpec {
     assert(chunks.exceptAll(b).isEmpty && b.exceptAll(chunks).isEmpty)
   }
 
-  test("bloom-prefiltered incremental extract equals the classic anti-join append") {
-    // The 100-TB K2 shape: past `bloomThreshold` accumulated rows the
-    // extract prefilters the landing scan-side with a Bloom over existing
-    // keys and resolves duplicates via broadcast joins — appended rows
-    // must be IDENTICAL to the classic shuffle anti-join's.
-    val dir = java.nio.file.Files.createTempDirectory("graft_bloomex_")
+  test("incremental extract appends only unseen keys (K2)") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_incex_")
     def csv(name: String, rows: Seq[String]): String = {
       val p = dir.resolve(name)
       java.nio.file.Files.writeString(p, ("k,v" +: rows).mkString("\n"))
@@ -250,96 +251,35 @@ class PipelineSpec extends SparkSpec {
     val v1 = csv("v1.csv", (1 to 50).map(i => s"K$i,a$i"))
     // second landing: 30 duplicate keys (new payload) + 25 new keys
     val v2 = csv("v2.csv", ((21 to 50) ++ (51 to 75)).map(i => s"K$i,b$i"))
-    def run(out: String, bloom: Boolean): Set[(String, String)] = {
-      if (bloom) spark.conf.set("spark.graft.extract.bloomThreshold", "1")
-      try {
-        Jobs.extract(spark, v1, out, Seq("k"))
-        Jobs.extract(spark, v2, out, Seq("k"))
-        // full re-delivery (every key a duplicate): appends nothing
-        Jobs.extract(spark, v2, out, Seq("k"))
-        spark.read.parquet(out).collect()
-          .map(r => (r.getString(0), r.getString(1))).toSet
-      } finally spark.conf.unset("spark.graft.extract.bloomThreshold")
-    }
-    val classic = run(dir.resolve("classic").toString, bloom = false)
-    val bloomed = run(dir.resolve("bloom").toString, bloom = true)
-    assert(bloomed == classic, "bloom path diverged from the classic append")
-    assert(classic.size == 75)
+    val out = dir.resolve("out").toString
+    def read(): Set[(String, String)] = spark.read.parquet(out).collect()
+      .map(r => (r.getString(0), r.getString(1))).toSet
+    Jobs.extract(spark, v1, out, Seq("k"))
+    Jobs.extract(spark, v2, out, Seq("k"))
+    val landed = read()
+    assert(landed.size == 75)
     // duplicate keys keep the FIRST landing's payload (K2 semantics)
-    assert(classic.contains(("K21", "a21")) && classic.contains(("K51", "b51")))
-    // dup-heavy guard: survivors past maxBroadcastKeys fall back to the
-    // classic shuffle join and stay exact
-    val fb = dir.resolve("fallback").toString
-    spark.conf.set("spark.graft.extract.bloomThreshold", "1")
-    spark.conf.set("spark.graft.extract.maxBroadcastKeys", "1")
-    try {
-      Jobs.extract(spark, v1, fb, Seq("k"))
-      Jobs.extract(spark, v2, fb, Seq("k"))
-      assert(spark.read.parquet(fb).collect()
-        .map(r => (r.getString(0), r.getString(1))).toSet == classic)
-    } finally {
-      spark.conf.unset("spark.graft.extract.bloomThreshold")
-      spark.conf.unset("spark.graft.extract.maxBroadcastKeys")
-    }
+    assert(landed.contains(("K21", "a21")) && landed.contains(("K51", "b51")))
+    // full re-delivery (every key a duplicate): appends nothing
+    Jobs.extract(spark, v2, out, Seq("k"))
+    assert(spark.read.parquet(out).count() == 75 && read() == landed)
   }
 
-  test("bloom extract: multi-sub-filter bank is byte-identical, infeasible falls back, scratch reclaimed") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_bloombk_")
-    def csv(name: String, rows: Seq[String]): String = {
-      val p = dir.resolve(name)
-      java.nio.file.Files.writeString(p, ("k,v" +: rows).mkString("\n"))
-      p.toString
+  test("an empty input list fails naming the job") {
+    // A resumed run rebinds the AQ inputs by globbing aq-*.csv; a work dir
+    // whose AQ CSVs were pruned yields Nil.
+    val dir = java.nio.file.Files.createTempDirectory("graft_noaq_")
+    val in = Fixtures.write(dir).copy(aqCsvs = Nil)
+    val aq = intercept[IllegalArgumentException] {
+      Pipeline.run(spark, in, Pipeline.Paths(dir.resolve("staging").toString))
     }
-    val v1 = csv("v1.csv", (1 to 50).map(i => s"K$i,a$i"))
-    val v2 = csv("v2.csv", ((21 to 50) ++ (51 to 75)).map(i => s"K$i,b$i"))
-    def read(out: String): Set[(String, String)] =
-      spark.read.parquet(out).collect()
-        .map(r => (r.getString(0), r.getString(1))).toSet
-    val classicOut = dir.resolve("classic").toString
-    Jobs.extract(spark, v1, classicOut, Seq("k"))
-    Jobs.extract(spark, v2, classicOut, Seq("k"))
-    val classic = read(classicOut)
-    def survDirs(): Int = new java.io.File(
-        System.getProperty("java.io.tmpdir")).listFiles()
-      .count(_.getName.startsWith("graft_extract_surv_"))
-    // k > 1: a tiny partBytes forces the bank to split (50 keys at 1% fpp
-    // ~= 60 B -> 3 sub-filters at 24 B cap); appended rows byte-identical
-    spark.conf.set("spark.graft.extract.bloomThreshold", "1")
-    spark.conf.set("spark.graft.bloom.partBytes", "24")
-    val before = survDirs()
-    try {
-      val out = dir.resolve("bank").toString
-      Jobs.extract(spark, v1, out, Seq("k"))
-      Jobs.extract(spark, v2, out, Seq("k"))
-      Jobs.extract(spark, v2, out, Seq("k")) // full re-delivery: no-op
-      assert(read(out) == classic, "bank path diverged from classic append")
-      // the per-landing survivor scratch is reclaimed once the append
-      // commits, not parked until the JVM shutdown hook
-      assert(survDirs() == before,
-        "bloom extract left survivor scratch dirs behind")
-    } finally {
-      spark.conf.unset("spark.graft.bloom.partBytes")
-      spark.conf.unset("spark.graft.extract.bloomThreshold")
+    assert(aq.getMessage.contains("aqExtract") && aq.getMessage.contains("aq-*.csv"),
+      aq.getMessage)
+    val split = intercept[IllegalArgumentException] {
+      Jobs.batchSplit(spark, Nil, dir.resolve("split").toString, "DateOfCall",
+        "dd-MMM-yy", Seq("2022-02-01"))
     }
-    // infeasible regime: the total-size guard refuses (Left) and extract
-    // falls back to the classic anti-join — exact result, no OOM
-    import org.apache.spark.sql.functions.xxhash64
-    val keys = spark.range(1000).select(xxhash64(col("id")).as("_k"))
-    val verdict = graft.functions.BloomBankF.build(keys, 1000L, 0.01)
-    assert(verdict.isRight)
-    spark.conf.set("spark.graft.bloom.maxBytes", "64")
-    spark.conf.set("spark.graft.extract.bloomThreshold", "1")
-    try {
-      assert(graft.functions.BloomBankF.build(keys, 1000L, 0.01).isLeft,
-        "guard must refuse when the bank exceeds the driver budget")
-      val out = dir.resolve("guarded").toString
-      Jobs.extract(spark, v1, out, Seq("k"))
-      Jobs.extract(spark, v2, out, Seq("k"))
-      assert(read(out) == classic, "guarded fallback diverged from classic")
-    } finally {
-      spark.conf.unset("spark.graft.bloom.maxBytes")
-      spark.conf.unset("spark.graft.extract.bloomThreshold")
-    }
+    assert(split.getMessage.contains("batchSplit"), split.getMessage)
   }
 
   test("sliced fact build (slices=3, pruned staging) equals the unsliced table") {
