@@ -486,8 +486,7 @@ object EventStreams {
           // batch ids at 0, so with exactly one committed generation a
           // reset's batch 0 (all files, a superset of the committed one)
           // would otherwise be silently swallowed as "already applied".
-          if (batchId == m.txn && m.appId.nonEmpty && qid.nonEmpty &&
-              m.appId != qid) throw new IllegalStateException(
+          if (batchId == m.txn && m.appId != qid) throw new IllegalStateException(
             s"scd2Ingest: incoming batch $batchId matches the state's txn " +
               s"watermark but was produced by a different checkpoint " +
               s"(query $qid vs committed ${m.appId}) — checkpoint " +
@@ -506,7 +505,7 @@ object EventStreams {
             graft.Tables.eventTimeUs(batch).as("tus"),
             graft.ops.Relational.floorDivExact(
               expr("cast(get_json_object(props, '$.k') as bigint)"), 25L).as("tier"))
-          val bucketCol = pmod(hash(col("user_id")), lit(buckets))
+          val bucketCol = bucketOf(buckets)
           // The touched-bucket set is ≤ `buckets` ints — a driver-safe
           // collect; the same job's counts size the state write below.
           val bucketCounts = ev.groupBy(bucketCol.as("b"))
@@ -561,28 +560,16 @@ object EventStreams {
           // landing alone (a backfill-sized batch touching every bucket
           // rewrites the whole history), so the write is sized by that
           // bound. Prior rows come from the previous manifest's per-bucket
-          // row stamps (a driver-side map lookup — no Spark job); a legacy
-          // manifest without stamps pays the footer-count job once more,
-          // and this commit stamps full coverage so the next one won't.
-          def priorRows(kind: String): Long = {
-            val stamped = prevMan.flatMap { m =>
-              val rows = if (kind == "segments") m.segRows else m.seenRows
-              val holders = touched.filter(m.entries.contains)
-              if (holders.forall(rows.contains)) Some(holders.map(rows).sum)
-              else None
-            }
-            stamped.getOrElse {
-              val ps = prior(kind)
-              if (ps.isEmpty) 0L else spark.read.parquet(ps: _*).count()
-            }
-          }
+          // row stamps — a driver-side map lookup, no Spark job.
+          def priorRows(stamps: Scd2Manifest => Map[Int, Long]): Long =
+            prevMan.fold(0L)(m =>
+              touched.filter(m.entries.contains).map(stamps(m)).sum)
           bucketAligned(segs.withColumn("bucket", bucketCol),
-              priorRows("segments") + batchRows, buckets)
+              priorRows(_.segRows) + batchRows, buckets)
             .write.partitionBy("bucket").mode("overwrite")
             .parquet(s"$stateDir/batch=$genId/segments")
-          bucketAligned(
-              seen.withColumn("bucket", pmod(hash(col("user_id")), lit(buckets))),
-              priorRows("seen") + batchRows, buckets)
+          bucketAligned(seen.withColumn("bucket", bucketCol),
+              priorRows(_.seenRows) + batchRows, buckets)
             .write.partitionBy("bucket").mode("overwrite")
             .parquet(s"$stateDir/batch=$genId/seen")
           val entries = prevMan.map(_.entries).getOrElse(Map.empty) ++
@@ -672,23 +659,6 @@ object EventStreams {
     }
   }
 
-  /** Maintenance: rewrite the current SCD2 snapshot into `newBuckets` hash
-    * buckets, committed as a new state generation. The bucket count is the
-    * per-landing-cost knob (SCALE.md's r14 bucket ladder: smallest B whose
-    * per-bucket history fits the rewrite budget) and the right B GROWS
-    * with history — at 100-TB state B scales with history, not landings —
-    * so a long-lived state dir must be able to migrate without a full
-    * rebuild of checkpoint + state. This is that path: read the newest
-    * manifest's snapshot, rewrite segments+seen under the new hash, commit
-    * a manifest carrying the SAME `txn` watermark (streaming progress is
-    * untouched — the next ingest, run with `buckets = newBuckets`,
-    * continues from its checkpoint as if the rebucket never happened), and
-    * prune superseded generations. O(total history) by design — this is
-    * the amortized-rare OPTIMIZE, not the per-landing path. Same
-    * single-writer contract as ingest: run it BETWEEN ingest runs.
-    * `checkpointDir` (optional) upgrades a legacy pre-appId manifest by
-    * stamping the owning checkpoint's query id — see the commit-site note.
-    */
   /** Bucket-aligned, row-sized state write (the committer lesson measured
     * on the fact write, `FactLoad.writeClustered`): `partitionBy("bucket")`
     * straight off a hash-derived column hands every upstream task rows for
@@ -737,8 +707,26 @@ object EventStreams {
     }
   }
 
-  def rebucketScd2(spark: SparkSession, stateDir: String, newBuckets: Int,
-                   checkpointDir: Option[String] = None): Unit = {
+  /** The SCD2 state bucket a row's user hashes into. */
+  private def bucketOf(buckets: Int): Column =
+    pmod(hash(col("user_id")), lit(buckets))
+
+  /** Maintenance: rewrite the current SCD2 snapshot into `newBuckets` hash
+    * buckets, committed as a new state generation. The bucket count is the
+    * per-landing-cost knob (SCALE.md's r14 bucket ladder: smallest B whose
+    * per-bucket history fits the rewrite budget) and the right B GROWS
+    * with history — at 100-TB state B scales with history, not landings —
+    * so a long-lived state dir must be able to migrate without a full
+    * rebuild of checkpoint + state. This is that path: read the newest
+    * manifest's snapshot, rewrite segments+seen under the new hash, commit
+    * a manifest carrying the SAME `txn` watermark (streaming progress is
+    * untouched — the next ingest, run with `buckets = newBuckets`,
+    * continues from its checkpoint as if the rebucket never happened), and
+    * prune superseded generations. O(total history) by design — this is
+    * the amortized-rare OPTIMIZE, not the per-landing path. Same
+    * single-writer contract as ingest: run it BETWEEN ingest runs.
+    */
+  def rebucketScd2(spark: SparkSession, stateDir: String, newBuckets: Int): Unit = {
     require(newBuckets >= 1, s"rebucketScd2 needs newBuckets >= 1, got $newBuckets")
     val prevId = manifestIds(spark, stateDir).maxOption.getOrElse(
       throw new IllegalStateException(
@@ -748,18 +736,11 @@ object EventStreams {
     val genId = prevId + 1
     def paths(kind: String): Seq[String] = m.entries.toSeq.sorted.map {
       case (b, mid) => s"$stateDir/batch=$mid/$kind/bucket=$b" }
-    val bucketCol = pmod(hash(col("user_id")), lit(newBuckets))
-    for (kind <- Seq("segments", "seen")) {
-      val snap = spark.read.parquet(paths(kind): _*)
-      // write sizing: manifest row stamps when fully covered (driver-side
-      // lookup), else the footer-metadata count() job (legacy manifests)
-      val stamps = if (kind == "segments") m.segRows else m.seenRows
-      val estRows =
-        if (m.entries.keysIterator.forall(stamps.contains))
-          m.entries.keysIterator.map(stamps).sum
-        else snap.count()
-      bucketAligned(snap.withColumn("bucket", bucketCol), estRows,
-          newBuckets)
+    for ((kind, stamps) <- Seq("segments" -> m.segRows, "seen" -> m.seenRows)) {
+      // write sizing from the manifest's row stamps (driver-side lookup)
+      bucketAligned(spark.read.parquet(paths(kind): _*)
+          .withColumn("bucket", bucketOf(newBuckets)),
+          m.entries.keysIterator.map(stamps).sum, newBuckets)
         .write.partitionBy("bucket").mode("overwrite")
         .parquet(s"$stateDir/batch=$genId/$kind")
     }
@@ -770,43 +751,10 @@ object EventStreams {
     val segRows = footerRowsByBucket(spark, s"$stateDir/batch=$genId/segments")
     val seenRows = footerRowsByBucket(spark, s"$stateDir/batch=$genId/seen")
     val occupied = (segRows.keySet ++ seenRows.keySet).toSeq.sorted
-    // txn carries forward: maintenance applies no streaming batch. appId
-    // carries forward too — EXCEPT for a legacy pre-appId manifest (empty
-    // appId), where the checkpoint-reset guard is silently degraded (an
-    // equal-txn reset replay would be swallowed). Passing `checkpointDir`
-    // stamps that state's owning query id during the rewrite, closing the
-    // degraded window for states whose only post-upgrade writes are
-    // maintenance. The caller asserts ownership: pass the checkpoint that
-    // PRODUCED this state (the single-writer contract already requires
-    // knowing it), never a freshly reset one.
-    val appId =
-      if (m.appId.nonEmpty) m.appId
-      else checkpointDir.map { dir =>
-        // Ownership sanity check before stamping: the checkpoint that
-        // PRODUCED this state must have progressed at least to the
-        // manifest's txn watermark (its offsets log records every started
-        // batch). A freshly reset checkpoint has no such progress, so
-        // stamping it here would wedge the real owner's next ingest on the
-        // appId-mismatch guard — refuse loudly at maintenance time instead.
-        val cand = checkpointQueryId(spark, dir)
-        val progressed = checkpointMaxOffsetBatch(spark, dir).exists(_ >= m.txn)
-        if (cand.isEmpty || !progressed) {
-          System.err.println(s"[scd2] rebucketScd2: NOT stamping query id " +
-            s"'$cand' from $dir — its offsets log has not reached the " +
-            s"manifest's txn watermark ${m.txn}, so it cannot be the " +
-            "checkpoint that produced this state. Pass the original " +
-            "checkpoint (manifest stays legacy/unstamped).")
-          ""
-        } else {
-          System.err.println(s"[scd2] rebucketScd2: stamping owning query " +
-            s"id '$cand' (from $dir, progressed through txn >= ${m.txn}) " +
-            s"into the legacy manifest under $stateDir")
-          cand
-        }
-      }.getOrElse("")
+    // txn and appId carry forward: maintenance applies no streaming batch.
     writeManifest(spark, stateDir, genId,
       Scd2Manifest(newBuckets, m.txn, occupied.map(_ -> genId).toMap,
-        appId, segRows, seenRows)) // commit
+        m.appId, segRows, seenRows)) // commit
     pruneScd2(spark, stateDir, genId, Some(prevId))
   }
 
@@ -817,27 +765,32 @@ object EventStreams {
     * STREAMING batch id applied — generation ids advance on every commit
     * (ingest or maintenance) while txn advances only on ingest, which is
     * what lets `rebucketScd2` commit between ingests without looking like
-    * a checkpoint reset to the split-brain guard. Manifests written before
-    * the field existed deserialize with txn = generation id (the two were
-    * identical then).
-    */
-  /** `segRows`/`seenRows` carry the ACTUAL parquet row count per bucket
+    * a checkpoint reset to the split-brain guard. `appId` is the query id
+    * of the checkpoint that produced the state (`checkpointQueryId`).
+    * `segRows`/`seenRows` carry the ACTUAL parquet row count per bucket
     * (from the footers of the files the committing write produced), so the
     * next landing sizes its bucket-aligned write from a manifest lookup
     * instead of launching two footer-count Spark jobs per landing — the
-    * residual full-touch overhead the r16 probe measured. Manifests
-    * written before the fields existed deserialize them empty; the reader
-    * falls back to the count job and the next commit stamps full coverage
-    * (one-time footer sweep of the carried buckets).
+    * residual full-touch overhead the r16 probe measured. `readManifest`
+    * requires every field and a stamp for every `entries` key.
     */
   private[graft] final case class Scd2Manifest(buckets: Int, txn: Long,
-                                                   entries: Map[Int, Long],
-                                                   appId: String = "",
-                                                   segRows: Map[Int, Long] = Map.empty,
-                                                   seenRows: Map[Int, Long] = Map.empty)
+                                               entries: Map[Int, Long],
+                                               appId: String,
+                                               segRows: Map[Int, Long],
+                                               seenRows: Map[Int, Long])
 
   private def manifestFile(stateDir: String, id: Long) =
     new org.apache.hadoop.fs.Path(s"$stateDir/batch=$id/manifest.json")
+
+  private def readJson(spark: SparkSession, p: org.apache.hadoop.fs.Path) = {
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val in = fs.open(p)
+    val bytes = try org.apache.hadoop.io.IOUtils.readFullyToByteArray(in)
+    finally in.close()
+    new com.fasterxml.jackson.databind.ObjectMapper()
+      .readTree(new String(bytes, java.nio.charset.StandardCharsets.UTF_8))
+  }
 
   /** The streaming query id from the checkpoint's `metadata` file — the
     * Delta-txn `appId` analog. Spark writes it at query start and
@@ -845,36 +798,15 @@ object EventStreams {
     * carrying a different id proves the "replayed" batch is not the one
     * the manifest committed (a reset re-delivers ALL source files as batch
     * 0, which txn alone cannot distinguish from crash recovery when only
-    * one generation was ever committed). Empty when unreadable — the guard
-    * then degrades to the txn-only check.
+    * one generation was ever committed). The file exists before the first
+    * batch runs, so a missing file or id fails the batch.
     */
   private def checkpointQueryId(spark: SparkSession,
                                 checkpointDir: String): String = {
     val p = new org.apache.hadoop.fs.Path(s"$checkpointDir/metadata")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) ""
-    else {
-      val in = fs.open(p)
-      val bytes = try org.apache.hadoop.io.IOUtils.readFullyToByteArray(in)
-      finally in.close()
-      Option(new com.fasterxml.jackson.databind.ObjectMapper()
-        .readTree(new String(bytes, java.nio.charset.StandardCharsets.UTF_8))
-        .get("id")).map(_.asText).getOrElse("")
-    }
-  }
-
-  /** Highest streaming batch id the checkpoint has STARTED (its offsets
-    * log) — the progress witness `rebucketScd2` checks before stamping a
-    * query id into a legacy manifest. None when the checkpoint has never
-    * run a batch (e.g. freshly reset).
-    */
-  private def checkpointMaxOffsetBatch(spark: SparkSession,
-                                       checkpointDir: String): Option[Long] = {
-    val p = new org.apache.hadoop.fs.Path(s"$checkpointDir/offsets")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) None
-    else fs.listStatus(p).toSeq
-      .flatMap(s => s.getPath.getName.toLongOption).maxOption
+    Option(readJson(spark, p).get("id")).map(_.asText).getOrElse(
+      throw new IllegalStateException(
+        s"scd2Ingest: checkpoint metadata $p holds no query id"))
   }
 
   private[graft] def manifestIds(spark: SparkSession, stateDir: String): Seq[Long] = {
@@ -883,76 +815,63 @@ object EventStreams {
     stateIds(spark, stateDir).filter(id => fs.exists(manifestFile(stateDir, id)))
   }
 
+  /** Generation `id`'s manifest. One missing a field, or whose row stamps
+    * miss an `entries` bucket, fails naming the file.
+    */
   private[graft] def readManifest(spark: SparkSession, stateDir: String,
-                           id: Long): Scd2Manifest = {
+                                  id: Long): Scd2Manifest = {
     val p = manifestFile(stateDir, id)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val in = fs.open(p)
-    val bytes = try org.apache.hadoop.io.IOUtils.readFullyToByteArray(in)
-    finally in.close()
-    val node = new com.fasterxml.jackson.databind.ObjectMapper()
-      .readTree(new String(bytes, java.nio.charset.StandardCharsets.UTF_8))
+    val node = readJson(spark, p)
+    def unreadable(why: String) = new IllegalStateException(
+      s"scd2 manifest $p $why; delete the state dir and its checkpoint " +
+        "and ingest again")
+    def field(name: String) = Option(node.get(name))
+      .getOrElse(throw unreadable(s"has no '$name' field"))
     import scala.jdk.CollectionConverters._
-    def intMap(field: String): Map[Int, Long] =
-      Option(node.get(field)).map(_.properties().asScala
-        .map(e => e.getKey.toInt -> e.getValue.asLong()).toMap)
-        .getOrElse(Map.empty)
-    val entries = node.get("entries").properties().asScala
+    def intMap(name: String): Map[Int, Long] = field(name).properties().asScala
       .map(e => e.getKey.toInt -> e.getValue.asLong()).toMap
-    val txn = Option(node.get("txn")).map(_.asLong).getOrElse(id)
-    val appId = Option(node.get("appId")).map(_.asText).getOrElse("")
-    Scd2Manifest(node.get("buckets").asInt(), txn, entries, appId,
-      intMap("segRows"), intMap("seenRows"))
+    val m = Scd2Manifest(field("buckets").asInt(), field("txn").asLong(),
+      intMap("entries"), field("appId").asText(), intMap("segRows"),
+      intMap("seenRows"))
+    for ((name, rows) <- Seq("segRows" -> m.segRows, "seenRows" -> m.seenRows)) {
+      val unstamped = m.entries.keySet -- rows.keySet
+      if (unstamped.nonEmpty) throw unreadable(
+        s"has no $name stamp for bucket(s) ${unstamped.toSeq.sorted.mkString(",")}")
+    }
+    m
   }
 
+  /** Commits generation `id`: the JSON goes to a sibling temp file that is
+    * then renamed onto `manifest.json`, so a crash mid-write leaves no
+    * truncated commit point (`manifestIds` sees only the final name).
+    */
   private def writeManifest(spark: SparkSession, stateDir: String, id: Long,
                             m: Scd2Manifest): Unit = {
     val p = manifestFile(stateDir, id)
+    val tmp = p.suffix(".tmp")
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     def intMap(m: Map[Int, Long]): String = m.toSeq.sorted
       .map { case (b, v) => s""""$b":$v""" }.mkString("{", ",", "}")
-    val out = fs.create(p, true)
+    val out = fs.create(tmp, true)
     try out.write(
       (s"""{"buckets":${m.buckets},"txn":${m.txn},"appId":"${m.appId}",""" +
         s""""segRows":${intMap(m.segRows)},"seenRows":${intMap(m.seenRows)},""" +
         s""""entries":${intMap(m.entries)}}""")
           .getBytes(java.nio.charset.StandardCharsets.UTF_8))
     finally out.close()
+    if (!fs.rename(tmp, p)) throw new IllegalStateException(
+      s"scd2: could not commit manifest $p (rename from $tmp failed)")
   }
 
-  /** Row stamps for a NEW manifest: touched buckets from the footers of
-    * the files just written under `batch=<genId>/<kind>`; untouched
-    * buckets carry their previous stamp forward, or — legacy upgrade,
-    * one-time — are footer-read from their current holder dirs.
-    *
-    * A carried bucket MISSING from its holder dir's footer sweep is an
-    * entries/disk inconsistency (the manifest points a reader at files
-    * that are not there). Stamping it 0 would carry forward as
-    * authoritative "empty" coverage — later `priorRows` sums would
-    * under-estimate and the bucket-aligned write could under-partition
-    * past the rowsPerWriteTask spill cliff — so the bucket is OMITTED
-    * from the stamps (readers of an incomplete stamp set fall back to
-    * the count job, which sees the disk truth) and the inconsistency is
-    * surfaced loudly instead of swallowed.
+  /** Row stamps for a NEW manifest: the buckets this commit wrote, from the
+    * footers of the files under `batch=<genId>/<kind>`, plus the previous
+    * stamp of every carried bucket.
     */
-  private[graft] def stampRowsFor(spark: SparkSession, stateDir: String,
+  private def stampRowsFor(spark: SparkSession, stateDir: String,
       genId: Long, kind: String, entries: Map[Int, Long],
       prevRows: Map[Int, Long]): Map[Int, Long] = {
     val fresh = footerRowsByBucket(spark, s"$stateDir/batch=$genId/$kind")
-    val carried = entries.filterNot { case (b, _) => fresh.contains(b) }
-    val (known, missing) = carried.partition { case (b, _) => prevRows.contains(b) }
-    val upgraded = missing.groupBy(_._2).flatMap { case (mid, es) =>
-      val all = footerRowsByBucket(spark, s"$stateDir/batch=$mid/$kind")
-      val (found, absent) = es.keys.partition(all.contains)
-      if (absent.nonEmpty)
-        System.err.println(s"[scd2] stampRows: manifest entries point " +
-          s"bucket(s) ${absent.toSeq.sorted.mkString(",")} at " +
-          s"$stateDir/batch=$mid/$kind but the dir holds no parquet for " +
-          "them — omitting their row stamps (readers fall back to the " +
-          "count job); the state dir is inconsistent with its manifest")
-      found.map(b => b -> all(b)).toMap
-    }
-    fresh ++ known.map { case (b, _) => b -> prevRows(b) } ++ upgraded
+    fresh ++ entries.keysIterator.filterNot(fresh.contains).map(b => b -> prevRows(b))
   }
 
   /** Parquet row counts per `bucket=<b>` subdir of one state kind dir —
@@ -963,8 +882,8 @@ object EventStreams {
     * per-landing it replaces a Spark count JOB (scheduler latency + task
     * launch per landing) with direct footer IO on the driver.
     */
-  private[graft] def footerRowsByBucket(spark: SparkSession,
-                                        kindDir: String): Map[Int, Long] = {
+  private def footerRowsByBucket(spark: SparkSession,
+                                 kindDir: String): Map[Int, Long] = {
     val conf = spark.sparkContext.hadoopConfiguration
     val root = new org.apache.hadoop.fs.Path(kindDir)
     val fs = root.getFileSystem(conf)

@@ -329,6 +329,17 @@ class StreamingSpec extends SparkSpec {
         col("user_id"), lit("click").as("event_type"), lit(1.0).as("value"),
         concat(lit("{\"k\":"), col("k"), lit("}")).as("props"))
 
+  // The batch gate's history over the same rows: what the maintained state
+  // must equal however the rows were landed.
+  private def scd2Twin(rows: Seq[(Long, Long, Long, Long)]) = {
+    val ev = mkEvents(rows)
+    graft.ops.Relational.scd2Compress(ev.select(col("user_id"), col("event_id"),
+        Tables.eventTimeUs(ev).as("tus"),
+        graft.ops.Relational.floorDivExact(
+          expr("cast(get_json_object(props, '$.k') as bigint)"), 25L).as("tier")))
+      .drop("anchor_eid")
+  }
+
   test("scd2 ingest detects a checkpoint reset even with a single committed generation") {
     val src = java.nio.file.Files.createTempDirectory("graft_scd2cr_src_").toString
     val state = java.nio.file.Files.createTempDirectory("graft_scd2cr_state_").toString + "/s"
@@ -406,12 +417,7 @@ class StreamingSpec extends SparkSpec {
     val tiny2 = Seq((1001L, 6000L, 2L, 99L))
     mkEvents(tiny2).coalesce(1).write.mode("append").parquet(src)
     EventStreams.scd2Ingest(spark, src, state, ckpt, buckets = 8)
-    val expected = graft.ops.Relational.scd2Compress(
-      mkEvents(all ++ tiny ++ tiny2).select(col("user_id"), col("event_id"),
-        Tables.eventTimeUs(mkEvents(all)).as("tus"),
-        graft.ops.Relational.floorDivExact(
-          expr("cast(get_json_object(props, '$.k') as bigint)"), 25L).as("tier")))
-      .drop("anchor_eid")
+    val expected = scd2Twin(all ++ tiny ++ tiny2)
     val got = EventStreams.readScd2(spark, state)
     assert(got.exceptAll(expected).isEmpty && expected.exceptAll(got).isEmpty)
     // bucket-count mismatch on an existing state dir must fail loudly
@@ -480,33 +486,6 @@ class StreamingSpec extends SparkSpec {
     assert(re.getMessage.contains("single-writer"), re.getMessage)
   }
 
-  test("pre-appId manifests deserialize and continue ingesting (backward compat)") {
-    // A state dir written before the checkpoint-identity field existed must
-    // keep working: the manifest reads back with appId = "" and the reset
-    // guard degrades to the txn-only check (no spurious split-brain throw).
-    val src = java.nio.file.Files.createTempDirectory("graft_scd2bc_src_").toString
-    val state = java.nio.file.Files.createTempDirectory("graft_scd2bc_state_").toString + "/s"
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_scd2bc_ckpt_").toString
-    mkEvents(Seq((1L, 1000L, 1L, 10L))).coalesce(1).write.mode("append").parquet(src)
-    EventStreams.scd2Ingest(spark, src, state, ckpt)
-    // Rewrite generation 0's manifest in the OLD format (no appId field).
-    val p = new org.apache.hadoop.fs.Path(s"$state/batch=0/manifest.json")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val in = fs.open(p)
-    val json = try new String(
-      org.apache.hadoop.io.IOUtils.readFullyToByteArray(in), "UTF-8")
-    finally in.close()
-    val legacy = json.replaceAll(""""appId":"[^"]*",""", "")
-    assert(legacy != json, s"expected an appId field to strip: $json")
-    val out = fs.create(p, true)
-    try out.write(legacy.getBytes("UTF-8")) finally out.close()
-    assert(EventStreams.readManifest(spark, state, 0L).appId == "")
-    // Ingest continues over the legacy manifest from the SAME checkpoint.
-    mkEvents(Seq((2L, 2000L, 1L, 30L))).coalesce(1).write.mode("append").parquet(src)
-    EventStreams.scd2Ingest(spark, src, state, ckpt)
-    assert(EventStreams.readScd2(spark, state).count() == 2)
-  }
-
   test("rebucketScd2 migrates the bucket count; ingest continues from its checkpoint") {
     val src = java.nio.file.Files.createTempDirectory("graft_scd2m_src_").toString
     val state = java.nio.file.Files.createTempDirectory("graft_scd2m_state_").toString + "/s"
@@ -520,6 +499,10 @@ class StreamingSpec extends SparkSpec {
     // the maintained table is invariant under the migration
     assert(EventStreams.readScd2(spark, state).collect().toSet == before,
       "rebucket changed the maintained history")
+    // the streaming watermark and the owning query id carry forward
+    val (m0, m1) = (EventStreams.readManifest(spark, state, 0L),
+      EventStreams.readManifest(spark, state, 1L))
+    assert(m1.txn == m0.txn && m1.appId == m0.appId && m1.appId.nonEmpty)
     // idempotent: same bucket count again is a no-op commit
     EventStreams.rebucketScd2(spark, state, 64)
     assert(EventStreams.readScd2(spark, state).collect().toSet == before)
@@ -529,12 +512,7 @@ class StreamingSpec extends SparkSpec {
     val tiny = Seq((1000L, 5000L, 1L, 75L))
     mkEvents(tiny).coalesce(1).write.mode("append").parquet(src)
     EventStreams.scd2Ingest(spark, src, state, ckpt, buckets = 64)
-    val expected = graft.ops.Relational.scd2Compress(
-      mkEvents(all ++ tiny).select(col("user_id"), col("event_id"),
-        Tables.eventTimeUs(mkEvents(all)).as("tus"),
-        graft.ops.Relational.floorDivExact(
-          expr("cast(get_json_object(props, '$.k') as bigint)"), 25L).as("tier")))
-      .drop("anchor_eid")
+    val expected = scd2Twin(all ++ tiny)
     val got = EventStreams.readScd2(spark, state)
     assert(got.exceptAll(expected).isEmpty && expected.exceptAll(got).isEmpty)
 
@@ -594,40 +572,6 @@ class StreamingSpec extends SparkSpec {
     } finally spark.conf.unset("spark.graft.scd2.rowsPerWriteTask")
   }
 
-  test("rebucketScd2 stamps the owning checkpoint's id into a legacy pre-appId manifest") {
-    val src = java.nio.file.Files.createTempDirectory("graft_scd2lg_src_").toString
-    val state = java.nio.file.Files.createTempDirectory("graft_scd2lg_state_").toString + "/s"
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_scd2lg_ckpt_").toString
-    mkEvents(Seq((1L, 1000L, 1L, 10L), (2L, 2000L, 2L, 30L)))
-      .coalesce(1).write.mode("append").parquet(src)
-    EventStreams.scd2Ingest(spark, src, state, ckpt, buckets = 8)
-    // age the state into the pre-appId format (same move as the bc test)
-    val p = new org.apache.hadoop.fs.Path(s"$state/batch=0/manifest.json")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val in = fs.open(p)
-    val json = try new String(
-      org.apache.hadoop.io.IOUtils.readFullyToByteArray(in), "UTF-8")
-    finally in.close()
-    val out = fs.create(p, true)
-    try out.write(json.replaceAll(""""appId":"[^"]*",""", "").getBytes("UTF-8"))
-    finally out.close()
-    assert(EventStreams.readManifest(spark, state, 0L).appId == "")
-    // maintenance WITHOUT the checkpoint keeps the manifest legacy (appId
-    // unknown); WITH it, the rewrite stamps the owning query id, closing
-    // the reset-guard's degraded window for maintenance-only states.
-    EventStreams.rebucketScd2(spark, state, 16)
-    assert(EventStreams.readManifest(spark, state, 1L).appId == "")
-    EventStreams.rebucketScd2(spark, state, 32, checkpointDir = Some(ckpt))
-    val stamped = EventStreams.readManifest(spark, state, 2L).appId
-    assert(stamped.nonEmpty, "expected the checkpoint's query id to be stamped")
-    // and the stamp is the REAL owner id: ingest from the same checkpoint
-    // still works (appId equality path), history intact
-    mkEvents(Seq((3L, 3000L, 1L, 60L))).coalesce(1).write.mode("append").parquet(src)
-    EventStreams.scd2Ingest(spark, src, state, ckpt, buckets = 32)
-    assert(EventStreams.readManifest(spark, state,
-      EventStreams.manifestIds(spark, state).max).appId == stamped)
-  }
-
   test("bucketAligned salt is decorrelated from the bucket hash: parallelism ~= parts") {
     // The collapse shape this pins: salt = pmod(hash(user_id), salt) is a
     // function of the SAME hash as bucket = pmod(hash(user_id), buckets),
@@ -654,43 +598,7 @@ class StreamingSpec extends SparkSpec {
     } finally spark.conf.unset("spark.graft.scd2.rowsPerWriteTask")
   }
 
-  test("rebucketScd2 refuses to stamp a checkpoint that never produced the state") {
-    val src = java.nio.file.Files.createTempDirectory("graft_scd2ns_src_").toString
-    val state = java.nio.file.Files.createTempDirectory("graft_scd2ns_state_").toString + "/s"
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_scd2ns_ckpt_").toString
-    mkEvents(Seq((1L, 1000L, 1L, 10L), (2L, 2000L, 2L, 30L)))
-      .coalesce(1).write.mode("append").parquet(src)
-    EventStreams.scd2Ingest(spark, src, state, ckpt, buckets = 8)
-    // age the state into the pre-appId format
-    val p = new org.apache.hadoop.fs.Path(s"$state/batch=0/manifest.json")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val in = fs.open(p)
-    val json = try new String(
-      org.apache.hadoop.io.IOUtils.readFullyToByteArray(in), "UTF-8")
-    finally in.close()
-    val out = fs.create(p, true)
-    try out.write(json.replaceAll(""""appId":"[^"]*",""", "").getBytes("UTF-8"))
-    finally out.close()
-    // A RESET checkpoint: has a metadata file (query id regenerated) but no
-    // offsets progress — it cannot be the checkpoint that produced txn 0.
-    // Stamping its id would wedge the real owner's next ingest on the
-    // appId-mismatch guard; the rewrite must refuse and stay legacy.
-    val resetCkpt = java.nio.file.Files
-      .createTempDirectory("graft_scd2ns_reset_").toString
-    val mp = new org.apache.hadoop.fs.Path(s"$resetCkpt/metadata")
-    val mo = fs.create(mp, true)
-    try mo.write("""{"id":"00000000-dead-beef-0000-000000000000"}"""
-      .getBytes("UTF-8"))
-    finally mo.close()
-    EventStreams.rebucketScd2(spark, state, 16, checkpointDir = Some(resetCkpt))
-    assert(EventStreams.readManifest(spark, state, 1L).appId == "",
-      "a checkpoint with no batch progress must not be stamped as owner")
-    // and the REAL owner (offsets progressed through txn 0) still stamps
-    EventStreams.rebucketScd2(spark, state, 32, checkpointDir = Some(ckpt))
-    assert(EventStreams.readManifest(spark, state, 2L).appId.nonEmpty)
-  }
-
-  test("scd2 manifest row stamps: sized from the manifest, legacy manifests upgraded") {
+  test("scd2 manifest row stamps: sized from the manifest, carried across landings") {
     val src = java.nio.file.Files.createTempDirectory("graft_scd2rs_src_").toString
     val state = java.nio.file.Files.createTempDirectory("graft_scd2rs_state_").toString + "/s"
     val ckpt = java.nio.file.Files.createTempDirectory("graft_scd2rs_ckpt_").toString
@@ -707,32 +615,20 @@ class StreamingSpec extends SparkSpec {
     assert(m0.segRows == actualRows(0L, "segments"), "segRows stamp wrong")
     assert(m0.seenRows == actualRows(0L, "seen"), "seenRows stamp wrong")
     assert(m0.entries.keySet.subsetOf(m0.segRows.keySet))
-    // age the manifest into the pre-stamp format (drop the rows fields)
-    val p = new org.apache.hadoop.fs.Path(s"$state/batch=0/manifest.json")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val in = fs.open(p)
-    val json = try new String(
-      org.apache.hadoop.io.IOUtils.readFullyToByteArray(in), "UTF-8")
-    finally in.close()
-    val out = fs.create(p, true)
-    try out.write(json
-      .replaceAll(""""segRows":\{[^}]*\},"seenRows":\{[^}]*\},""", "")
-      .getBytes("UTF-8"))
-    finally out.close()
-    assert(manifest(0L).segRows.isEmpty && manifest(0L).seenRows.isEmpty)
-    // a landing over the legacy manifest still ingests correctly (falls
-    // back to the count job) and its commit stamps FULL coverage — the
-    // untouched buckets' one-time footer upgrade included
+    // a one-user landing rewrites one bucket and carries the other stamps:
+    // every stamp equals the real count of the bucket in its holder dir
     mkEvents(Seq((100L, 5000L, 1L, 75L))).coalesce(1)
       .write.mode("append").parquet(src)
     EventStreams.scd2Ingest(spark, src, state, ckpt, buckets = 4)
     val m1 = manifest(1L)
     assert(m1.entries.keySet == m0.entries.keySet)
-    val expected = m1.entries.map { case (b, mid) =>
-      b -> actualRows(mid, "segments").getOrElse(b, 0L) }
-    assert(m1.segRows == expected,
-      s"legacy upgrade did not stamp full coverage: ${m1.segRows} vs $expected")
-    assert(m1.entries.keySet.forall(m1.seenRows.contains))
+    assert(m1.entries.values.toSet == Set(0L, 1L),
+      s"expected touched and carried buckets: ${m1.entries}")
+    for ((kind, stamps) <- Seq("segments" -> m1.segRows, "seen" -> m1.seenRows)) {
+      val expected = m1.entries.map { case (b, mid) =>
+        b -> actualRows(mid, kind).getOrElse(b, 0L) }
+      assert(stamps == expected, s"$kind stamps $stamps vs real $expected")
+    }
     // rebucket consumes and re-produces stamps
     EventStreams.rebucketScd2(spark, state, 8)
     val m2 = manifest(2L)
@@ -740,8 +636,77 @@ class StreamingSpec extends SparkSpec {
       m2.segRows.contains(b) && m2.seenRows.contains(b)))
     assert(m2.segRows.values.sum == m1.segRows.values.sum,
       "rebucket changed total segment rows")
-    assert(EventStreams.readScd2(spark, state).count() ==
-      m2.segRows.values.sum)
+    assert(EventStreams.readScd2(spark, state).count() == m2.segRows.values.sum)
+  }
+
+  test("scd2 manifest without appId or segRows fails naming it; state untouched") {
+    for (field <- Seq(""""appId":"[^"]*",""", """"segRows":\{[^}]*\},""")) {
+      val src = java.nio.file.Files.createTempDirectory("graft_scd2sm_src_").toString
+      val state = java.nio.file.Files.createTempDirectory("graft_scd2sm_state_").toString + "/s"
+      val ckpt = java.nio.file.Files.createTempDirectory("graft_scd2sm_ckpt_").toString
+      mkEvents(Seq((1L, 1000L, 1L, 10L), (2L, 2000L, 2L, 30L)))
+        .coalesce(1).write.mode("append").parquet(src)
+      EventStreams.scd2Ingest(spark, src, state, ckpt, buckets = 4)
+      val path = s"$state/batch=0/manifest.json"
+      val p = new org.apache.hadoop.fs.Path(path)
+      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val in = fs.open(p)
+      val json = try new String(
+        org.apache.hadoop.io.IOUtils.readFullyToByteArray(in), "UTF-8")
+      finally in.close()
+      val stripped = json.replaceAll(field, "")
+      assert(stripped != json, s"no $field to strip from $json")
+      val out = fs.create(p, true)
+      try out.write(stripped.getBytes("UTF-8")) finally out.close()
+      val e = intercept[IllegalStateException] {
+        EventStreams.readManifest(spark, state, 0L)
+      }
+      assert(e.getMessage.contains(path), e.getMessage)
+      def listing: Map[String, (Long, Long)] = {
+        val root = java.nio.file.Paths.get(state)
+        val files = java.nio.file.Files.walk(root)
+        import scala.jdk.CollectionConverters._
+        try files.iterator().asScala.filter(java.nio.file.Files.isRegularFile(_))
+          .map(f => root.relativize(f).toString ->
+            (f.toFile.length(), f.toFile.lastModified())).toMap
+        finally files.close()
+      }
+      val before = listing
+      mkEvents(Seq((3L, 3000L, 1L, 60L))).coalesce(1)
+        .write.mode("append").parquet(src)
+      val se = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+        EventStreams.scd2Ingest(spark, src, state, ckpt, buckets = 4)
+      }
+      assert(se.getMessage.contains(path) ||
+        Option(se.getCause).exists(_.getMessage.contains(path)), se.getMessage)
+      assert(listing == before, "a refused landing changed the state dir")
+    }
+  }
+
+  test("scd2 ingest commits past a crashed commit's temp manifest and segments") {
+    val src = java.nio.file.Files.createTempDirectory("graft_scd2cc_src_").toString
+    val state = java.nio.file.Files.createTempDirectory("graft_scd2cc_state_").toString + "/s"
+    val ckpt = java.nio.file.Files.createTempDirectory("graft_scd2cc_ckpt_").toString
+    val first = Seq((1L, 1000L, 1L, 10L), (2L, 2000L, 2L, 30L))
+    mkEvents(first).coalesce(1).write.mode("append").parquet(src)
+    EventStreams.scd2Ingest(spark, src, state, ckpt, buckets = 4)
+    // A commit of generation 1 that crashed before its rename: a truncated
+    // temp manifest and wrong-tier segments for every bucket, no manifest.
+    spark.read.parquet(s"$state/batch=0/segments").withColumn("tier", lit(99L))
+      .write.partitionBy("bucket").parquet(s"$state/batch=1/segments")
+    java.nio.file.Files.write(
+      java.nio.file.Paths.get(s"$state/batch=1/manifest.json.tmp"),
+      """{"buckets":4,"tx""".getBytes("UTF-8"))
+    assert(EventStreams.manifestIds(spark, state) == Seq(0L))
+    assert(EventStreams.readScd2(spark, state).count() == 2)
+    val second = Seq((3L, 3000L, 1L, 60L))
+    mkEvents(second).coalesce(1).write.mode("append").parquet(src)
+    EventStreams.scd2Ingest(spark, src, state, ckpt, buckets = 4)
+    assert(EventStreams.manifestIds(spark, state).sorted == Seq(0L, 1L))
+    assert(!new java.io.File(s"$state/batch=1/manifest.json.tmp").exists())
+    val expected = scd2Twin(first ++ second)
+    val got = EventStreams.readScd2(spark, state)
+    assert(got.exceptAll(expected).isEmpty && expected.exceptAll(got).isEmpty)
   }
 
   test("streaming semantic ingest equals batch e11 and survives restart") {
@@ -949,21 +914,5 @@ class StreamingSpec extends SparkSpec {
     assert(streamed.count() < docs.count(), "mixture must subsample")
     assert(streamed.exceptAll(batch).count() == 0)
     assert(batch.exceptAll(streamed).count() == 0)
-  }
-
-  test("scd2 row stamps omit (not zero-stamp) buckets missing from their holder dir") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_stamp_").toString
-    Seq((1L, 0), (2L, 0)).toDF("user_id", "bucket").write
-      .partitionBy("bucket").parquet(s"$dir/batch=5/segments")
-    // The manifest claims batch=5 holds buckets 0 AND 1, but only bucket 0
-    // exists on disk — the legacy-upgrade sweep must not stamp bucket 1 as
-    // 0 rows (an authoritative "empty" that under-sizes every later
-    // bucket-aligned write); omitting it forces the count-job fallback.
-    val entries = Map(0 -> 5L, 1 -> 5L)
-    val stamps = EventStreams.stampRowsFor(
-      spark, dir, 7L, "segments", entries, Map.empty)
-    assert(stamps.get(0).contains(2L), s"bucket 0 footer count wrong: $stamps")
-    assert(!stamps.contains(1),
-      s"missing bucket must be omitted from the stamps, got $stamps")
   }
 }
