@@ -13,7 +13,7 @@ import org.apache.spark.sql.functions._
   * runMain graft.Probe query <q,...> [runs] [explain] [nowarm]
   * runMain graft.Probe plan <outDir> <tag> <q,...|all>
   * runMain graft.Probe zorder <sfDir> [files] [copies]
-  * runMain graft.Probe compact <factStageProbeWorkDir>
+  * runMain graft.Probe compact <workDir>
   * }}}
   *
   * `query` and `plan` read the corpus named by `SPARK_GRAFT_SF_DIR`, as
@@ -45,7 +45,7 @@ object Probe {
       |                                                     per-gate `full`, not its timed median
       |  plan    <outDir> <tag> <q,...|all>                 write <outDir>/<q>_<tag>.txt formatted plans of $SPARK_GRAFT_SF_DIR
       |  zorder  <sfDir> [files=16] [copies=1]              morton vs hilbert files-per-lookup and write time
-      |  compact <factStageProbeWorkDir>                    price compactClustered on a sliced fact table
+      |  compact <workDir>                                  price compactClustered on a sliced fact table
       |Gate names are full names or leading codes (e7b, j6); the live rows
       |cc_live and cos_pairs_live time the un-materialized pipelines.""".stripMargin
 
@@ -134,7 +134,7 @@ object Probe {
         Zorder(arg(0, "sfDir"), count(1, "files", 16), count(2, "copies", 1))
       case "compact" =>
         allowFlags(); maxArgs(1)
-        Compact(arg(0, "factStageProbeWorkDir"))
+        Compact(arg(0, "workDir"))
     }
   }
 
@@ -686,8 +686,8 @@ object Probe {
   }
 
   /** Prices the sliced-fact compaction remedy over a completed
-    * `FactStageProbe` workDir whose fact table landed as k sequential
-    * range-clustered appends:
+    * `PipelineDemo --slices k` workDir whose fact table landed as k
+    * sequential range-clustered appends:
     *
     *   1. read locality BEFORE: files per station dir and the
     *      mass-weighted files touched per (station, date) point lookup;
@@ -702,12 +702,12 @@ object Probe {
     val base = java.nio.file.Paths.get(c.workDir)
     // Same session shape as the rung that wrote the table: the .rows
     // marker drives cores/shuffle sizing exactly like a --from resume.
-    val marker = base.resolve(".rows")
-    val rows =
-      if (!java.nio.file.Files.exists(marker)) None
-      else Some(new String(java.nio.file.Files.readAllBytes(marker), "UTF-8")
-        .trim.toLong).map(r => math.min(r, Int.MaxValue.toLong).toInt)
-    val spark = warehouse.PipelineDemo.buildSession(base, rows, fromMarker = true)
+    // Without it the session would take the tiny-fixture profile over a
+    // scaled table, so refuse before a session exists.
+    val rows = warehouse.PipelineDemo.readRowsMarker(base).getOrElse(
+      throw new IllegalArgumentException(s"compact: workDir $base has no .rows " +
+        "marker; point it at the workDir of a scaled PipelineDemo run"))
+    val spark = warehouse.PipelineDemo.buildSession(base, Some(rows), fromMarker = true)
     val factDir = base.resolve("warehouse/lfb_call").toString
     val optDir = base.resolve("warehouse/lfb_call_opt").toString
 

@@ -8,8 +8,8 @@ import org.apache.spark.sql.SparkSession
   * profiling never silently diverges from the benchmarked configuration.
   *
   * The one other recipe is `warehouse.PipelineDemo.buildSession`, used by
-  * the scaled warehouse runs (PipelineDemo, ChunkedExtract,
-  * FactStageProbe), `Probe compact` and the perfbench `lfb_dag` workload.
+  * the warehouse runner (`PipelineDemo`, every mode), `Probe compact` and
+  * the perfbench `lfb_dag` workload.
   * It differs on purpose, for corpus-sized DAG runs: zstd shuffle/spill
   * codec (scratch disk is the binding constraint there), a 1-min cleaner
   * GC that reclaims finished stages' shuffle files during the run, and,

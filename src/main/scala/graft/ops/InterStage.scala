@@ -21,7 +21,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 object InterStage {
 
   /** Recursive local delete — the one copy (scratch hooks, consumed-CSV
-    * pruning in ChunkedExtract) instead of one per call site. */
+    * pruning in `PipelineDemo --chunks`) instead of one per call site. */
   private[graft] def deleteRecursively(f: java.io.File): Unit = {
     Option(f.listFiles()).foreach(_.foreach(deleteRecursively)); f.delete(); ()
   }

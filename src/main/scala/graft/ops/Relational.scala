@@ -176,16 +176,38 @@ object Relational {
     * falls back to overwrite. The load contract of the warehouse's
     * extract and incremental dimension jobs; `broadcastExisting` as in
     * `newRowsOnly`.
+    *
+    * A no-op append (every incoming key already landed) still commits one
+    * schema-only part file; it is deleted again, checked from its parquet
+    * footer, so re-runs do not grow the sink by one empty file each.
     */
   def incrementalAppend(incoming: DataFrame, keys: Seq[String], path: String,
                         broadcastExisting: Boolean = false): Unit =
     existingParquet(incoming.sparkSession, path) match {
       case Some(ex) =>
+        val conf = incoming.sparkSession.sparkContext.hadoopConfiguration
+        val dir = new org.apache.hadoop.fs.Path(path)
+        val fs = dir.getFileSystem(conf)
+        def parts() = fs.listStatus(dir).filter(_.getPath.getName.endsWith(".parquet"))
+        val before = parts().map(_.getPath.getName).toSet
         newRowsOnly(incoming, ex, keys, broadcastExisting)
           .write.mode("append").parquet(path)
+        // An empty result is written as exactly one file; a non-empty
+        // one may be too, so the footer decides.
+        parts().filterNot(st => before(st.getPath.getName)) match {
+          case Array(st) if footerRows(st, conf) == 0 => fs.delete(st.getPath, false)
+          case _ =>
+        }
       case None =>
         incoming.write.mode("overwrite").parquet(path)
     }
+
+  private def footerRows(st: org.apache.hadoop.fs.FileStatus,
+                         conf: org.apache.hadoop.conf.Configuration): Long = {
+    val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(st, conf))
+    try r.getRecordCount finally r.close()
+  }
 
   // ---------------------------------------------------------------------
   // Temporal nearest-within-band join (as-of/band join)

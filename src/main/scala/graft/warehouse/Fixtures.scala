@@ -290,8 +290,9 @@ object Fixtures {
 
   /** The three non-LFB scaled inputs (air quality, weather, well-being) —
     * all bounded by the date/ward grid, never by `n`, so they stay
-    * driver-side. Factored out so the chunked corpus driver
-    * (ChunkedExtract) can write them once alongside its LFB slices.
+    * driver-side. Factored out so the runner's chunked and direct-clean
+    * modes (`PipelineDemo --chunks`, `--direct-clean`) can write them once
+    * alongside their LFB slices.
     */
   private[warehouse] def writeScaledAux(dir: Path): Pipeline.Inputs = {
     val rng = new scala.util.Random(42)

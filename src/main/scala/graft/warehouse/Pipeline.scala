@@ -130,8 +130,6 @@ object Pipeline {
     * the skipped stages' staging-dir outputs must already exist.
     */
   def run(spark: SparkSession, inputs: Inputs, paths: Paths,
-          factTable: String = "lfb_call", analyticsSchema: String = "analytics",
-          checkColumnCounts: Boolean = true,
           fromStage: String = "extract"): Seq[(String, Double)] = {
 
     val askedIdx = stageOrder.indexOf(fromStage)
@@ -180,13 +178,11 @@ object Pipeline {
       gate("post-extract", Seq(
       () => Checks.nonEmpty(lfbRaw),
       () => Checks.primaryKey(lfbRaw, Seq("IncidentNumber")),
-      () => Checks.completeness(lfbRaw, "IncidentNumber", 1.0)) ++
-      (if (checkColumnCounts) Seq(
-        () => Checks.columnCount(lfbRaw, expectedColumns("lfb")),
-        () => Checks.columnCount(spark.read.parquet(paths.aqRaw), expectedColumns("aq")),
-        () => Checks.columnCount(spark.read.parquet(paths.wbRaw), expectedColumns("wb")),
-        () => Checks.columnCount(spark.read.parquet(paths.weatherRaw), expectedColumns("weather")))
-      else Nil)) }
+      () => Checks.completeness(lfbRaw, "IncidentNumber", 1.0),
+      () => Checks.columnCount(lfbRaw, expectedColumns("lfb")),
+      () => Checks.columnCount(spark.read.parquet(paths.aqRaw), expectedColumns("aq")),
+      () => Checks.columnCount(spark.read.parquet(paths.wbRaw), expectedColumns("wb")),
+      () => Checks.columnCount(spark.read.parquet(paths.weatherRaw), expectedColumns("weather")))) }
 
     // --- cleanse stage ---
     staged("cleanse") {
@@ -241,7 +237,7 @@ object Pipeline {
     // --- fact load ---
     staged("fact load") {
       FactLoad.run(spark, paths.lfbClean, "location_type", "ward",
-        paths.aqClean, paths.weatherClean, paths.wbDim, factTable)
+        paths.aqClean, paths.weatherClean, paths.wbDim, "lfb_call")
       // The cached dim served the fact-build joins; a library run must not
       // leave pinned blocks behind (K6 — the reference leaks this cache).
       spark.sql("UNCACHE TABLE IF EXISTS air_quality")
@@ -249,7 +245,7 @@ object Pipeline {
 
     // --- post-load checks + aggregates ---
     staged("post-load checks") {
-      val fact = spark.table(factTable)
+      val fact = spark.table("lfb_call")
       gate("post-load", Seq(
       () => Checks.nonEmpty(fact),
       () => Checks.schemaEquals(
@@ -258,7 +254,7 @@ object Pipeline {
         () => Checks.referentialIntegrity(fact, fk, spark.table(dimTable), pk)
       }) }
 
-    staged("aggregates") { Aggregates.run(spark, factTable, analyticsSchema) }
+    staged("aggregates") { Aggregates.run(spark, "lfb_call", "analytics") }
     stages.result()
   }
 }

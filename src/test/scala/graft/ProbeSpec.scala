@@ -51,7 +51,7 @@ class ProbeSpec extends SparkSpec {
   test("flags and arguments a subcommand does not take are rejected") {
     assert(rejects("query", "a1_pricing_summary", "light").getMessage.contains("light"))
     assert(rejects("stream", "sf", "10", "10", "extra").getMessage.contains("at most"))
-    assert(rejects("compact").getMessage.contains("factStageProbeWorkDir"))
+    assert(rejects("compact").getMessage.contains("workDir"))
   }
 
   test("query and plan need SPARK_GRAFT_SF_DIR") {

@@ -108,9 +108,14 @@ class PipelineSpec extends SparkSpec {
     val sinks = Seq(paths.lfbRaw, paths.aqRaw, paths.weatherRaw, paths.wbRaw,
       paths.dateDim, paths.wbDim)
     def counts() = sinks.map(p => p -> spark.read.parquet(p).count())
+    // a no-op append must not leave an empty part file behind
+    def partFiles() = sinks.map(p => p -> new java.io.File(p).listFiles()
+      .count(_.getName.endsWith(".parquet")))
     val before = counts()
+    val filesBefore = partFiles()
     Pipeline.run(spark, inputs, paths)
     assert(counts() == before)
+    assert(partFiles() == filesBefore)
     assert(spark.table("lfb_call").count() == 6)
   }
 
@@ -239,6 +244,27 @@ class PipelineSpec extends SparkSpec {
     assert(chunks.count() == n &&
       chunks.select("IncidentNumber").distinct().count() == n)
     assert(chunks.exceptAll(b).isEmpty && b.exceptAll(chunks).isEmpty)
+  }
+
+  test("a 2-chunk extract lands the one-shot extract's raw rows and prunes the CSV") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_chunked_")
+    val n = 2000
+    val base = java.nio.file.Files.createDirectories(dir.resolve("chunked"))
+    val chunked = Pipeline.Paths(base.resolve("staging").toString)
+    PipelineDemo.chunkedExtract(spark, base, chunked, n, 2)
+    assert(!java.nio.file.Files.exists(base.resolve("lfb-calls.csv")),
+      "the consumed CSV slice was left behind")
+    val csv = dir.resolve("oneshot.csv").toString
+    Fixtures.writeScaledLfbSpark(spark, csv, n.toLong)
+    val oneShot = dir.resolve("oneshot.parquet").toString
+    Jobs.lfbExtract(spark, csv, oneShot)
+    val a = spark.read.parquet(chunked.lfbRaw)
+    val b = spark.read.parquet(oneShot)
+    assert(a.count() == n && a.schema == b.schema)
+    assert(a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty,
+      "chunked extract diverged from the one-shot extract")
+    for (aux <- Seq(chunked.aqRaw, chunked.weatherRaw, chunked.wbRaw))
+      assert(!spark.read.parquet(aux).isEmpty, s"$aux was not extracted")
   }
 
   test("incremental extract appends only unseen keys (K2)") {
