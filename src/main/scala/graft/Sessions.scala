@@ -1,20 +1,17 @@
 package graft
 
+import java.nio.file.Path
 import org.apache.spark.sql.SparkSession
 
-/** The local SparkSession recipe the gate mains (Verify, Bench and most
-  * Probe subcommands) build from, so a session-config change (a new
-  * legacy flag, an extensions addition) happens in one place and
-  * profiling never silently diverges from the benchmarked configuration.
+/** The one SparkSession recipe. Every session in the program and its test
+  * suite is built here, from one base conf set, so a session-config change
+  * (a new legacy flag, an extensions addition) happens in one place and the
+  * tests run the confs the program runs.
   *
-  * The one other recipe is `warehouse.PipelineDemo.buildSession`, used by
-  * the warehouse runner (`PipelineDemo`, every mode), `Probe compact` and
-  * the perfbench `lfb_dag` workload.
-  * It differs on purpose, for corpus-sized DAG runs: zstd shuffle/spill
-  * codec (scratch disk is the binding constraint there), a 1-min cleaner
-  * GC that reclaims finished stages' shuffle files during the run, and,
-  * given a row count, shuffle partitions sized by rows
-  * (`Relational.rowSizedPartitions`) instead of by cores.
+  * The one visible difference is the [[Scaled]] profile of the warehouse
+  * runner (`warehouse.PipelineDemo`, every mode), `Probe compact` and the
+  * perfbench `lfb_dag` workload: corpus-sized DAG runs, where scratch disk
+  * and per-task working sets bind.
   */
 object Sessions {
 
@@ -65,44 +62,64 @@ object Sessions {
     }
   }
 
-  /** `local[threads]` session with the graft extensions installed.
-    * `threads` doubles as the default shuffle-partition count — at local
-    * scale one partition per core is the right size (the 200 default just
-    * adds scheduling overhead). `SPARK_GRAFT_SHUFFLE_PARTITIONS` overrides
-    * it for probe-scale experiments (AQE coalesces small partitions, so
-    * over-provisioning is safe). Measured on the 300x e7b pair distinct:
-    * 128 partitions read 214 s vs 165 s at 32 — the single-JVM probes are
-    * disk/CPU-bound there, not per-task-memory-bound, so the knob exists
-    * for cluster parity, not as a local win.
+  /** The corpus-sized warehouse DAG profile, on top of the base confs: the
+    * zstd shuffle/spill codec (scratch disk binds at the 100x rung: -29%
+    * scratch peak vs lz4, SCALE.md), a 1-min cleaner GC that reclaims
+    * finished stages' shuffle files during the run, `<base>/warehouse` as
+    * the warehouse dir and, given `rows`, shuffle partitions sized by
+    * `Relational.rowSizedPartitions` (~250k rows per task, never below one
+    * per core), past which the fact build's sorts spill (SCALE.md round 14).
     */
-  def local(threads: String): SparkSession = {
-    val spark = SparkSession.builder()
-      .master(s"local[$threads]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", threads))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
+  final case class Scaled(base: Path, rows: Option[Int])
+
+  /** The conf map of a `local[threads]` session: the base recipe, then
+    * `warehouseDir`, then the `scaled` profile, each layer overriding the
+    * keys it shares with the ones before. `threads` doubles as the base
+    * shuffle-partition count: at local scale one partition per core is the
+    * right size (the 200 default just adds scheduling overhead). Pure, so a
+    * test pins the recipe without starting a session.
+    */
+  private[graft] def confs(threads: String, warehouseDir: Option[String] = None,
+                           scaled: Option[Scaled] = None): Map[String, String] = {
+    val base = Map(
+      "spark.master" -> s"local[$threads]",
+      "spark.sql.shuffle.partitions" -> threads,
+      "spark.sql.session.timeZone" -> "UTC",
+      "spark.sql.adaptive.enabled" -> "true",
       // Canonical events encoding is TIMESTAMP(µs) (TESTDATA ts contract);
       // this flag ONLY affects legacy INT64 TIMESTAMP(NANOS) files, which
       // Spark otherwise refuses to read — kept so old landings decode as
       // Long nanos and flow through Tables.eventTimeUs's LongType branch.
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      "spark.sql.legacy.parquet.nanosAsLong" -> "true",
       // FAIR scheduling across concurrently submitted jobs (guide §2.6):
       // matters ONLY when several jobs are in flight — the warm phase's
       // six chains, where the CC rounds' many small sequential jobs used
       // to queue behind the other chains' wide stages under FIFO (each
       // round = one job; a queued round stalls the whole chain). Each
       // warm chain tags its thread with its own on-demand pool
-      // (spark.scheduler.pool local property; pools share fairly with
-      // default weights, FIFO within a pool). The TIMED per-query phase
-      // runs one job at a time, where FAIR ≡ FIFO — no timing-contract
-      // change. Scale-neutral: the same policy is what a production
-      // cluster runs for concurrent index builds.
-      .config("spark.scheduler.mode", "FAIR")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.ui.enabled", "false")
+      // (`inPool`); untagged jobs land in the FIFO `default` pool. The
+      // TIMED per-query phase runs one job at a time, where FAIR ≡ FIFO.
+      "spark.scheduler.mode" -> "FAIR",
+      "spark.sql.extensions" -> "graft.functions.GraftExtensions",
+      "spark.ui.enabled" -> "false")
+    val profile = scaled.fold(Map.empty[String, String])(p => Map(
+      "spark.io.compression.codec" -> "zstd",
+      "spark.cleaner.periodicGC.interval" -> "1min",
+      "spark.sql.warehouse.dir" -> p.base.resolve("warehouse").toString,
+      "spark.sql.shuffle.partitions" -> p.rows.fold(threads)(n =>
+        math.max(threads.toInt, ops.Relational.rowSizedPartitions(n.toLong)).toString)))
+    base ++ warehouseDir.map("spark.sql.warehouse.dir" -> _) ++ profile
+  }
+
+  /** Starts (or returns the running) session built from [[confs]]. */
+  private[graft] def session(threads: String, warehouseDir: Option[String] = None,
+                             scaled: Option[Scaled] = None): SparkSession = {
+    val spark = SparkSession.builder().config(confs(threads, warehouseDir, scaled))
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark
   }
+
+  /** The gate session: `local[threads]` with the base recipe. */
+  def local(threads: String): SparkSession = session(threads)
 }

@@ -22,38 +22,35 @@ object SparkEntry {
     * timings don't depend on which query happens to touch a shared stage
     * first. Bench times this as its own `materialize` phase.
     *
-    * The four chains are independent, so they run as CONCURRENT Spark
-    * jobs in the one session (a SparkSession schedules jobs from multiple
-    * threads fine; the cluster interleaves their stages) — wall time is
-    * the longest chain, not the sum. Await rethrows the first failure.
+    * The six chains are independent, so they run as CONCURRENT Spark jobs
+    * in the one session through `Sessions.concurrently`: wall time is the
+    * longest chain, not the sum, and when a chain fails this returns only
+    * after every other chain has finished, so no warm job is still running
+    * when the caller clears the cache and starts timing.
     */
   def preMaterialize(spark: SparkSession, sfDir: String): Unit = {
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
     // Per-chain wall-clock to stderr: the materialize phase is ~30% of the
     // official bench total, and "which chain is the long pole" should be a
     // printed fact, not a guess (the chains run concurrently, so total =
     // longest chain + scheduler interleaving).
-    def timed(name: String)(body: => Unit): Future[Unit] = Future {
+    def timed(name: String)(body: => Unit): () => Unit = () => {
       // Per-chain FAIR pool (Sessions sets spark.scheduler.mode=FAIR):
       // created on demand by naming it; pools share slots fairly, so one
       // chain's wide stage can no longer starve another chain's stream of
-      // small jobs (the CC rounds). Tagged INSIDE the future — local
-      // props are per-thread and the EC may reuse threads across chains.
+      // small jobs (the CC rounds). Tagged INSIDE the unit — local props
+      // are per-thread.
       val t0 = System.nanoTime()
       Sessions.inPool(spark, name)(body)
       System.err.println(
         f"[materialize] $name%-10s ${(System.nanoTime() - t0) / 1e9}%5.1f s")
     }
-    Seq(
+    Sessions.concurrently(Seq(
       timed("shingle") { TextQueries.warmShingleChain(spark, sfDir) },
       timed("winnow") { TextQueries.warmWinnowChain(spark, sfDir) },
       timed("repspan") { TextQueries.warmRepSpanChain(spark, sfDir) },
       timed("simhash-cc") { TextQueries.warmSimhashChain(spark, sfDir) },
       timed("bpe") { TextQueries.warmBpeChain(spark, sfDir) },
-      timed("vectors") { VectorQueries.warmInterStage(spark, sfDir) })
-      .foreach(Await.result(_, Duration.Inf))
+      timed("vectors") { VectorQueries.warmInterStage(spark, sfDir) }))
   }
 
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */

@@ -47,16 +47,16 @@ object Checks {
     require(ratio >= minRatio, "completeness", f"$column non-null ratio $ratio%.4f < $minRatio%.4f")
   }
 
-  /** C5 — schema equality, optionally ignoring nullability (the
-    * reference's RDD round-trip makes nullability metadata-only; SURVEY
-    * §7.4.3). Reference: `assertSchemaEqual` in `date-dimension-check.py:93-100`.
+  /** C5 — schema equality of names and types in order, ignoring
+    * nullability (the reference's RDD round-trip makes nullability
+    * metadata-only; SURVEY §7.4.3). Reference: `assertSchemaEqual` in
+    * `date-dimension-check.py:93-100`.
     */
-  def schemaEquals(df: DataFrame, expected: StructType,
-                   ignoreNullability: Boolean = true): Either[Violation, Unit] = {
+  def schemaEquals(df: DataFrame, expected: StructType): Either[Violation, Unit] = {
     def norm(s: StructType): Seq[(String, String)] =
       s.fields.toSeq.map(f => (f.name, f.dataType.simpleString))
-    val ok = if (ignoreNullability) norm(df.schema) == norm(expected) else df.schema == expected
-    require(ok, "schemaEquals", s"got ${df.schema.simpleString}, expected ${expected.simpleString}")
+    require(norm(df.schema) == norm(expected), "schemaEquals",
+      s"got ${df.schema.simpleString}, expected ${expected.simpleString}")
   }
 
   /** C6 — cardinality bound (`date-dimension-check.py:28-36`). */

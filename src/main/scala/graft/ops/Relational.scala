@@ -166,11 +166,16 @@ object Relational {
 
   /** The parquet sink at `path`, or None when nothing has landed there yet
     * (absent path, or no readable parquet under it) — the try/except
-    * pattern of `etl/extract/lfb-extract.py:30-52`.
+    * pattern of `etl/extract/lfb-extract.py:30-52`. An absent path is
+    * checked first: a read of it fails too, but only after Spark logs a
+    * `FileNotFoundException` stack trace.
     */
-  def existingParquet(spark: SparkSession, path: String): Option[DataFrame] =
-    try Some(spark.read.parquet(path))
+  def existingParquet(spark: SparkSession, path: String): Option[DataFrame] = {
+    val dir = new org.apache.hadoop.fs.Path(path)
+    if (!dir.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(dir)) None
+    else try Some(spark.read.parquet(path))
     catch { case _: org.apache.spark.sql.AnalysisException => None }
+  }
 
   /** Append-only-new-rows to a parquet path; first run (sink absent)
     * falls back to overwrite. The load contract of the warehouse's

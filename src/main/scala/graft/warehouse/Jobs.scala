@@ -313,18 +313,13 @@ object Jobs {
     // The partition column LEADS the range/sort key (same alignment as
     // FactLoad's fact write): otherwise the file committer's required
     // ordering on the partition column re-sorts each task's rows and the
-    // clusterBy order inside every partition dir is lost. The partition
-    // count is sized by rows via the shared helper (same rule as the fact
-    // write) — at fixed dimension cardinalities that is 1 partition, i.e.
-    // one globally-ordered file per partition dir, which is exactly what
-    // OPTIMIZE ZORDER on a dim means; a cores-derived count here would
-    // just shard a ~600-row dim into near-empty files.
+    // clusterBy order inside every partition dir is lost. One range
+    // partition: every dimension is bounded by the date and ward grid, far
+    // below `Relational.rowSizedPartitions`' 250k rows per task, so this is
+    // one globally-ordered file per partition dir (what OPTIMIZE ZORDER on
+    // a dim means) with no sizing `count()` job.
     val keyCols = (partitionBy.toSeq ++ clusterBy).distinct.map(col)
-    val clustered =
-      if (clusterBy.nonEmpty)
-        df.repartitionByRange(Relational.rowSizedPartitions(df.count()),
-          keyCols: _*).sortWithinPartitions(keyCols: _*)
-      else df
+    val clustered = df.repartitionByRange(1, keyCols: _*).sortWithinPartitions(keyCols: _*)
     val writer = clustered.write.mode("overwrite").format("parquet")
     Relational.prepareManagedOverwrite(spark, table)
     partitionBy.fold(writer)(p => writer.partitionBy(p)).saveAsTable(table)

@@ -89,16 +89,11 @@ object PipelineDemo {
     run
   }
 
-  /** The scaled-run session recipe, shared with `Probe compact` and the
-    * perfbench `lfb_dag` workload so a large rung and a `--from` resume
-    * size themselves identically. One shuffle partition per core is right
-    * until a partition's sort working set outgrows memory: at 15M wide
-    * fact rows / 32 partitions the fact build's sorts and min_by agg spill
-    * and the stage goes super-linear (SCALE.md round 14 ladder). Scaled
-    * runs therefore size partitions by ROWS (~250k fact rows each —
-    * wide-row working sets a task holds comfortably) and let AQE coalesce
-    * the ones that end up small; `SPARK_GRAFT_SHUFFLE_PARTITIONS` pins it
-    * for experiments.
+  /** The warehouse runs' session, `Sessions`' [[graft.Sessions.Scaled]]
+    * profile over `base`, shared with `Probe compact` and the perfbench
+    * `lfb_dag` workload so a large rung and a `--from` resume size
+    * themselves identically. `SPARK_GRAFT_CPUS` sets the cores of a run
+    * with `rows` (default 16); the 6-row fixture runs on 4.
     */
   private[graft] def buildSession(base: Path,
                                   rows: Option[Int],
@@ -109,32 +104,9 @@ object PipelineDemo {
           sys.error(s"SPARK_GRAFT_CPUS must be an integer, got '$v'")).toString)
           .getOrElse("16")
       else "4"
-    val shufflePartitions = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS",
-      rows match {
-        // rowSizedPartitions owns the measured ~250k-rows/task threshold.
-        case Some(n) => math.max(cores.toInt,
-          graft.ops.Relational.rowSizedPartitions(n.toLong)).toString
-        case None => cores
-      })
-    val spark = SparkSession.builder()
-      .master(s"local[$cores]")
-      .config("spark.sql.shuffle.partitions", shufflePartitions)
-      // Scratch disk, not memory, is this box's binding constraint at the
-      // 100x (150M-row) rung: a wide-fact shuffle is ~a compressed copy of
-      // the corpus. zstd shrinks shuffle/spill files substantially vs the
-      // lz4 default for a few % CPU (measured -29% scratch peak, SCALE.md),
-      // and a 1-min cleaner GC reclaims dead shuffles DURING the run (the
-      // 30-min default never fires on a minutes-long pipeline, so finished
-      // stages' files pile up).
-      .config("spark.io.compression.codec", "zstd")
-      .config("spark.cleaner.periodicGC.interval", "1min")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.warehouse.dir", base.resolve("warehouse").toString)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    println(s"== session local[$cores], shuffle partitions $shufflePartitions" +
+    val spark = graft.Sessions.session(cores, scaled = Some(graft.Sessions.Scaled(base, rows)))
+    println(s"== session local[$cores], shuffle partitions " +
+      spark.conf.get("spark.sql.shuffle.partitions") +
       rows.fold("")(n => s", sized for $n rows" +
         (if (fromMarker) " (from workDir .rows marker)" else "")))
     spark

@@ -26,12 +26,13 @@ class ChecksSpec extends SparkSpec {
     assert(Checks.completeness(df, "name", 0.5).isRight)
   }
 
-  test("schemaEquals ignores nullability by default") {
+  test("schemaEquals ignores nullability, not types") {
     val expected = StructType(Seq(
       StructField("id", IntegerType, nullable = true),
       StructField("name", StringType, nullable = false)))
     assert(Checks.schemaEquals(df, expected).isRight)
-    assert(Checks.schemaEquals(df, expected, ignoreNullability = false).isLeft)
+    assert(Checks.schemaEquals(df, expected.add("extra", StringType)).isLeft)
+    assert(Checks.schemaEquals(df.selectExpr("CAST(id AS LONG) AS id", "name"), expected).isLeft)
   }
 
   test("cardinality / range bounds") {

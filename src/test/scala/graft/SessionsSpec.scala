@@ -3,8 +3,32 @@ package graft
 import java.util.concurrent.{CountDownLatch, TimeUnit}
 import java.util.concurrent.atomic.AtomicBoolean
 
-/** `Sessions.concurrently`: the in-stage parallelism of `Pipeline.run`. */
+/** `Sessions`: the one session recipe, and `concurrently`, the in-stage
+  * parallelism of `Pipeline.run`. */
 class SessionsSpec extends SparkSpec {
+
+  test("confs: the gate recipe and the scaled warehouse profile, without a session") {
+    val gate = Map(
+      "spark.master" -> "local[4]",
+      "spark.sql.shuffle.partitions" -> "4",
+      "spark.sql.session.timeZone" -> "UTC",
+      "spark.sql.adaptive.enabled" -> "true",
+      "spark.sql.legacy.parquet.nanosAsLong" -> "true",
+      "spark.scheduler.mode" -> "FAIR",
+      "spark.sql.extensions" -> "graft.functions.GraftExtensions",
+      "spark.ui.enabled" -> "false")
+    assert(Sessions.confs("4") == gate)
+    // buildSession(base = /w, rows = 150,000) at 4 cores: 150k rows size
+    // to one partition, so the count stays one per core.
+    val scaled = Sessions.Scaled(java.nio.file.Paths.get("/w"), Some(150000))
+    assert(Sessions.confs("4", scaled = Some(scaled)) == gate ++ Map(
+      "spark.io.compression.codec" -> "zstd",
+      "spark.cleaner.periodicGC.interval" -> "1min",
+      "spark.sql.warehouse.dir" -> "/w/warehouse"))
+    // 15M rows outgrow the cores: 250k rows per partition.
+    assert(Sessions.confs("4", scaled = Some(scaled.copy(rows = Some(15000000))))(
+      "spark.sql.shuffle.partitions") == "60")
+  }
 
   test("concurrently runs every unit at once, more units than cores") {
     // Each unit waits until all n have arrived: a helper that queued units

@@ -15,13 +15,7 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 }
 
 object SparkSpec {
-  lazy val session: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.sql.warehouse.dir",
-      java.nio.file.Files.createTempDirectory("graft_wh_").toString)
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  /** The program's base recipe at 4 threads, with a throwaway warehouse. */
+  lazy val session: SparkSession = Sessions.session("4", warehouseDir =
+    Some(java.nio.file.Files.createTempDirectory("graft_wh_").toString))
 }
