@@ -78,9 +78,6 @@ object Relational {
   def hashId(cols: Seq[Column]): Column =
     sha2(concat_ws("|", cols.map(_.cast("string")): _*), 256)
 
-  def addHashId(df: DataFrame, name: String, cols: Seq[String]): DataFrame =
-    df.withColumn(name, hashId(cols.map(col)))
-
   // ---------------------------------------------------------------------
   // Outlier removal
   // ---------------------------------------------------------------------
@@ -1000,7 +997,7 @@ object Relational {
 
   /** OPTIMIZE-style compaction of a partitioned table directory into a
     * SINGLE cluster set — the priced remedy for the sliced fact build's
-    * honest trade (SCALE.md r17: `spark.graft.fact.slices=k` lands k
+    * honest trade (SCALE.md r17: `FactLoad.Plan(slices = k)` lands k
     * sequential range-clustered appends, so a reader sees k cluster sets
     * per partition, like k pending compactions). One job re-runs the
     * canonical clustered-write layout over the whole table (reference

@@ -16,47 +16,59 @@ import graft.ops.Relational
   * multiples; SURVEY §2.4 J6 documents the divergence), and a deterministic
   * AirQualityKey tie-break where the reference's row_number over
   * TimeDifference alone is tie-unstable.
+  *
+  * A [[FactLoad.Plan]] argument selects the sliced build and its optional
+  * compaction; the default plan is the single-shot build.
   */
 object FactLoad {
 
+  /** How a fact load runs. `slices = 1` (the default) is the plan every
+    * gate measures. `slices = k > 1` is the sliced fact build:
+    * pmod(xxhash64(IncidentNumber), k) partitions the fact rows into k
+    * disjoint slices, each run through the SAME seven-stage join plan and
+    * the same clustered write (append per slice). Rows are
+    * join-independent (dims broadcast; the band join is per-incident), so
+    * the union is exactly the unsliced result (spec-pinned). This is the
+    * chunked-backfill shape for a corpus whose single-shot shuffle scratch
+    * exceeds the disk: peak becomes max-over-slices instead of
+    * whole-corpus — the price is re-scanning the cleansed input k times
+    * (pushed projection, cheap next to the joins) and k range-clustered
+    * file sets per station dir instead of one (like k compactions
+    * pending). A sliced load also deletes each consumed artifact when its
+    * last reader finishes (cleansed input after staging; each staging
+    * slice after its append) — the measured consumed-artifact lifecycle of
+    * the 500M/1B rungs. `compact` folds the k file sets back into one
+    * after the load ([[compactInPlace]]); slices = 1 already writes that
+    * single cluster set, so compact needs slices >= 2.
+    */
+  final case class Plan(slices: Int = 1, compact: Boolean = false) {
+    require(slices >= 1, s"fact plan: slices must be >= 1, got $slices")
+    require(!compact || slices >= 2,
+      s"fact plan: compact needs slices >= 2, got slices=$slices")
+  }
+
+  /** Free scratch the in-place compaction demands, as a multiple of the
+    * table's bytes (see [[compactInPlace]]). */
+  val MinFreeFactor = 4.0
+
   def run(spark: SparkSession, lfbCleanPath: String, locationTypeTable: String,
           wardTable: String, aqCleanPath: String, weatherCleanPath: String,
-          wbDimPath: String, outputTable: String): Unit = {
-    // Sliced fact build (`spark.graft.fact.slices`, default 1 = the plan
-    // every gate measures): pmod(xxhash64(IncidentNumber), k) partitions
-    // the fact rows into k disjoint slices, each run through the SAME
-    // seven-stage join plan and the same clustered write (append per
-    // slice). Rows are join-independent (dims broadcast; the band join is
-    // per-incident), so the union is exactly the unsliced result
-    // (spec-pinned). This is the chunked-backfill shape for a corpus whose
-    // single-shot shuffle scratch exceeds the disk: peak becomes
-    // max-over-slices instead of whole-corpus — the price is re-scanning
-    // the cleansed input k times (pushed projection, cheap next to the
-    // joins) and k range-clustered file sets per station dir instead of
-    // one (like k compactions pending). `spark.graft.fact.pruneConsumed`
-    // additionally deletes each consumed artifact when its last reader
-    // finishes (cleansed input after staging; each staging slice after
-    // its append) — the measured consumed-artifact lifecycle of the
-    // 500M/1B rungs; leave it off where fact-stage retries matter more
-    // than disk.
-    val slices = spark.conf.get("spark.graft.fact.slices", "1").toInt
-    require(slices >= 1, s"spark.graft.fact.slices must be >= 1, got $slices")
-    val pruneConsumed = spark.conf
-      .get("spark.graft.fact.pruneConsumed", "false").toBoolean
+          wbDimPath: String, outputTable: String, plan: Plan = Plan()): Unit = {
+    val slices = plan.slices
     // Fail fast on a missing cleansed input BEFORE any staging work (and
-    // before anything else gets deleted): under pruneConsumed a COMPLETED
-    // fact load deletes lfbCleanPath, so a --from re-entry at "fact load"
-    // over that state would otherwise surface as an opaque
-    // AnalysisException mid-stage — name the contract instead.
+    // before anything else gets deleted): a COMPLETED sliced load deletes
+    // lfbCleanPath, so a --from re-entry at "fact load" over that state
+    // would otherwise surface as an opaque AnalysisException mid-stage —
+    // name the contract instead.
     val cleanP = new org.apache.hadoop.fs.Path(lfbCleanPath)
     if (!cleanP.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(cleanP))
       throw new IllegalStateException(
         s"fact load: cleansed input $lfbCleanPath does not exist." +
-          (if (pruneConsumed)
-            " spark.graft.fact.pruneConsumed=true DELETES it when the fact" +
-              " staging commits, so a completed (or crashed-mid-write) pruned" +
-              " run cannot be re-entered at or after 'fact load' — re-run from" +
-              " 'cleanse' (or regenerate the corpus) instead."
+          (if (slices > 1)
+            s" A sliced load (slices=$slices) prunes its consumed input: it" +
+              " DELETES it when the fact staging commits, so a completed (or" +
+              " crashed-mid-write) sliced run cannot be re-entered at or after" +
+              " 'fact load' — re-run from 'cleanse' (or regenerate the corpus) instead."
           else " Run the cleanse stage first (Pipeline.run fromStage <= 'cleanse')."))
     // Fail fast on a count-drift compact marker BEFORE the k-slice reload:
     // the end-of-load compact sweep refuses this state anyway (the backup
@@ -68,9 +80,7 @@ object FactLoad {
     // the table from fresh staging, verifying the rebuilt table and then
     // clearing marker + backup (README: count-drift recovery) is equally
     // valid, which the message says.
-    val compactRequested =
-      spark.conf.get("spark.graft.fact.compact", "false").toBoolean && slices > 1
-    if (compactRequested && spark.catalog.tableExists(outputTable)) {
+    if (plan.compact && spark.catalog.tableExists(outputTable)) {
       val (loc, _, bak, fs) = compactPaths(spark, outputTable)
       val marker = compactInvalidMarker(loc)
       require(!(fs.exists(marker) && fs.exists(bak)),
@@ -96,7 +106,7 @@ object FactLoad {
         System.gc()
         p
       }
-    if (pruneConsumed) rmDir(spark, lfbCleanPath)
+    if (slices > 1) rmDir(spark, lfbCleanPath)
     // Phase boundary: the join phase's shuffle files (the band-join result's
     // wide sort-merge join-back is ~a compressed copy of the whole corpus)
     // are dead once the staging parquet is committed, but Spark only
@@ -108,7 +118,7 @@ object FactLoad {
     // Measured: without the boundary the two wide shuffles coexist and a
     // 150M-row build filled a 72 GB scratch disk (SCALE.md round 15).
     System.gc()
-    writeClustered(spark, stagedPaths, outputTable, pruneConsumed)
+    writeClustered(spark, stagedPaths, outputTable, plan.compact)
   }
 
   private def rmDir(spark: SparkSession, path: String): Unit = {
@@ -240,8 +250,7 @@ object FactLoad {
     * independently, so the per-task row budget holds whatever the slicing.
     */
   private def writeClustered(spark: SparkSession, stagedPaths: Seq[String],
-                             outputTable: String,
-                             pruneConsumed: Boolean): Unit = {
+                             outputTable: String, compact: Boolean): Unit = {
     Relational.prepareManagedOverwrite(spark, outputTable)
     stagedPaths.zipWithIndex.foreach { case (path, i) =>
       val staged = spark.read.parquet(path)
@@ -270,25 +279,20 @@ object FactLoad {
       if (stagedPaths.size > 1) {
         // consumed-artifact lifecycle + per-slice shuffle reclaim (the
         // same phase-boundary GC the unsliced plan runs once)
-        if (pruneConsumed) rmDir(spark, path)
+        rmDir(spark, path)
         System.gc()
       }
     }
 
-    // Optional post-load compaction (`spark.graft.fact.compact`): a k-sliced
+    // Optional post-load compaction (`Plan.compact`): a k-sliced
     // load lands k range-clustered file sets per station dir (like k pending
     // compactions); this folds them back into the canonical single cluster
     // set — the explicit OPTIMIZE ZORDER the reference runs after its own
     // write (load_fact.py:403-405), priced at 0.75 s/M over the 300M rung
     // (SCALE.md r18, `Probe compact`: point-lookup locality 4.03 → 1.03
     // files).
-    // A no-op under slices=1 — the inline clustered write IS that layout.
-    val compact = spark.conf.get("spark.graft.fact.compact", "false").toBoolean
-    if (compact && stagedPaths.size > 1) compactInPlace(spark, outputTable)
+    if (compact) compactInPlace(spark, outputTable)
     else {
-      if (compact) log.info(
-        s"spark.graft.fact.compact=true ignored: slices=1 already writes a " +
-          s"single cluster set in $outputTable")
       // A crashed compacting run can leave .pre-compact/.compact-tmp
       // siblings; this load just rebuilt the table from fresh staging, so
       // both are dead weight (a full stale table copy each) — reclaim.
@@ -368,7 +372,8 @@ object FactLoad {
       loc: org.apache.hadoop.fs.Path): org.apache.hadoop.fs.Path =
     new org.apache.hadoop.fs.Path(loc.getParent, loc.getName + ".compact-invalid")
 
-  private def compactInPlace(spark: SparkSession, table: String): Unit = {
+  private[warehouse] def compactInPlace(spark: SparkSession, table: String,
+                                        minFreeFactor: Double = MinFreeFactor): Unit = {
     val (loc, tmp, bak, fs) = compactPaths(spark, table)
     // Deterministic recovery from a crashed swap. The backup exists ONLY
     // between rename(loc -> bak) and the backup delete, and the fresh copy
@@ -428,25 +433,20 @@ object FactLoad {
     // table), so the default demands 4× of the MINIMUM free across the
     // table's partition and every spill dir's partition. On a one-disk
     // box that's one number (the measured case); split disks make the
-    // bound conservative — lower the factor when each side holds its own
-    // term comfortably. Compaction is OPTIONAL layout work — the
+    // bound conservative. Compaction is OPTIONAL layout work — the
     // k-sliced table is correct, just k-cluster-set — so insufficient
     // scratch skips the pass and keeps the load green instead of dying
     // on ENOSPC mid-write.
     val tableBytes = fs.getContentSummary(loc).getLength
-    val factor = spark.conf.get("spark.graft.compact.minFreeFactor", "4.0").toDouble
-    require(factor > 0, s"spark.graft.compact.minFreeFactor must be > 0, got $factor")
-    val need = (tableBytes * factor).toLong
+    val need = (tableBytes * minFreeFactor).toLong
     val free = (fs.getStatus(loc).getRemaining +:
       Relational.spillDirs(spark).map(_.getUsableSpace)).min
     if (free < need) {
       log.warn(f"fact compact: SKIPPED for $table — min scratch over the " +
-        f"table + spill partitions ${free / 1e9}%.1f GB free < $factor x " +
+        f"table + spill partitions ${free / 1e9}%.1f GB free < $minFreeFactor x " +
         f"table ${tableBytes / 1e9}%.1f GB = ${need / 1e9}%.1f GB needed " +
         "for the rewrite + swap; the k-sliced layout stays (correct, " +
-        "k cluster sets per station dir) — free scratch and re-run, or " +
-        "lower spark.graft.compact.minFreeFactor if the estimate is too " +
-        "conservative for this disk layout")
+        "k cluster sets per station dir) — free scratch and re-run")
       return
     }
     // Read through the CATALOG, not the path: a path read re-infers the

@@ -229,15 +229,15 @@ object Fixtures {
     * so the largest ids decide int-vs-bigint — a head-only sample would
     * misinfer), and the same `try_to_date` the extract applies; a spec
     * pins byte-equality to the CSV -> extract -> cleanse path at small n.
-    * The edge-window size is `spark.graft.gen.inferEdgeRows` (default
-    * 100k) — configurable so the equality spec can run with a SMALL edge
-    * at small n and actually exercise the sampled-inference seam (at the
-    * default, any n ≤ 200k degenerates to full-range inference and the
-    * seam the spec claims to pin never runs).
+    * The edge-window size is `edgeRows` (100k) — a parameter so the
+    * equality spec can run with a SMALL edge at small n and actually
+    * exercise the sampled-inference seam (at the default, any n ≤ 200k
+    * degenerates to full-range inference and the seam the spec claims to
+    * pin never runs).
     */
-  def writeScaledLfbCleanSpark(spark: org.apache.spark.sql.SparkSession,
-                               cleanPath: String, n: Long,
-                               skew: Boolean = false): Unit = {
+  private[warehouse] def writeScaledLfbCleanSpark(
+      spark: org.apache.spark.sql.SparkSession, cleanPath: String, n: Long,
+      skew: Boolean = false, edgeRows: Long = 100000L): Unit = {
     import spark.implicits._
     import org.apache.spark.sql.functions.{col, expr}
     val parts = math.min(
@@ -251,9 +251,8 @@ object Fixtures {
     // header=true on a Dataset[String] source drops every line equal to
     // the header, so the per-partition header copies vanish exactly like
     // the per-file headers the file reader strips.
-    val edge = math.min(
-      spark.conf.get("spark.graft.gen.inferEdgeRows", "100000").toLong, n)
-    require(edge >= 1, s"spark.graft.gen.inferEdgeRows must be >= 1, got $edge")
+    val edge = math.min(edgeRows, n)
+    require(edge >= 1, s"edgeRows must be >= 1, got $edge")
     val schema = spark.read.option("header", "true").option("inferSchema", "true")
       .csv(lines((0L, edge), (math.max(edge, n - edge), n))).schema
     val raw = spark.read.option("header", "true").schema(schema)

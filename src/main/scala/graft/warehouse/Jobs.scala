@@ -123,8 +123,7 @@ object Jobs {
           .drop(c)
     }
     val levelCols = df.columns.filter(_ != "ReadingDateTime").toSeq
-    df = df.withColumn("AirQualityKey",
-      sha2(concat_ws("|", levelCols.map(col): _*), 256))
+    df = df.withColumn("AirQualityKey", Relational.hashId(levelCols.map(col)))
     val sentinel = spark.range(1).select(
       lit(null).cast(TimestampType).as("ReadingDateTime") +:
         levelCols.map(c => lit("Unknown").as(c)) :+
@@ -163,11 +162,11 @@ object Jobs {
     df = bucket(df, "snow", Model.snowLevel, "SnowLevel")
     df = bucket(df, "tsun", Model.sunshineLevel, "SunshineLevel")
     df = df.drop("tmin", "tmax", "wpgt")
-      .withColumn("WeatherKey", sha2(concat_ws("|",
+      .withColumn("WeatherKey", Relational.hashId(Seq(
         col("date"), col("TemperatureCategory"), col("TemperatureAmplitude"),
         col("WindDirection"), col("WindStrength"), col("WindGustiness"),
         col("PressureLevel"), col("PrecipitationLevel"), col("SnowLevel"),
-        col("SunshineLevel")), 256))
+        col("SunshineLevel"))))
     val sentinel = spark.range(1).select(
       df.columns.toIndexedSeq.map(c =>
         if (c == "date") lit(null).cast(df.schema(c).dataType).as(c)
@@ -209,8 +208,8 @@ object Jobs {
       .agg(first("WardName", ignoreNulls = true).as("WardName"),
         first("BoroughName", ignoreNulls = true).as("BoroughName"),
         first("BoroughCode", ignoreNulls = true).as("BoroughCode"))
-    val withId = df.withColumn("WardID", sha2(concat_ws("|",
-      col("WardCode"), col("WardName"), col("BoroughName"), col("BoroughCode")), 256))
+    val withId = df.withColumn("WardID", Relational.hashId(Seq(
+      col("WardCode"), col("WardName"), col("BoroughName"), col("BoroughCode"))))
     val sentinel = spark.range(1).select(
       withId.columns.toIndexedSeq.map(c => lit("Unknown").as(c)): _*)
     withId.unionByName(sentinel).write.mode("overwrite").parquet(outPath)
@@ -257,7 +256,7 @@ object Jobs {
       .withColumn("PropertyCategory", coalesce(col("PropertyCategory"), lit("Unknown")))
       .withColumn("PropertyType", coalesce(col("PropertyType"), lit("Unknown")))
       .withColumn("LocationTypeKey",
-        sha2(concat_ws("|", col("PropertyCategory"), col("PropertyType")), 256))
+        Relational.hashId(Seq(col("PropertyCategory"), col("PropertyType"))))
     val sentinel = spark.range(1).select(lit("Unknown").as("PropertyCategory"),
       lit("Unknown").as("PropertyType"), lit("Unknown").as("LocationTypeKey"))
     dim.union(sentinel).write.mode("overwrite").parquet(outPath)
@@ -290,7 +289,7 @@ object Jobs {
       case (acc, (from, to)) => acc.withColumnRenamed(from, to)
     }
     df = df.na.fill("Unknown", df.columns.filter(_.endsWith("Label")).toSeq)
-    df = df.withColumn("WellBeingID", sha2(concat_ws("|", col("Year"), col("WardCode")), 256))
+    df = df.withColumn("WellBeingID", Relational.hashId(Seq(col("Year"), col("WardCode"))))
     val sentinel = spark.range(1).select(df.schema.fields.map(f =>
       if (f.dataType.typeName == "string") lit("Unknown").as(f.name)
       else lit(null).cast(f.dataType).as(f.name)).toSeq: _*)

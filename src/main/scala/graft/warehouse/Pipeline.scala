@@ -63,17 +63,6 @@ object Pipeline {
     "cleanse", "dimension builds", "dimension checks", "dimension loads",
     "fact load", "post-load checks", "aggregates")
 
-  /** Catalog tables the "dimension loads" stage writes, in load order —
-    * the SINGLE source of truth shared by the stage body (which runs
-    * [[dimLoaders]] and requires its keys match this list) and the
-    * cross-JVM resume probe in [[run]] (which re-enters at "dimension
-    * loads" when ANY of them is missing from this JVM's catalog). A new
-    * dim added to one side but not the other fails loudly at the require,
-    * instead of silently decoupling the heal from the stage.
-    */
-  val dimTables: Seq[String] = Seq("date_dim", "ward", "incident_types",
-    "location_type", "weather", "air_quality", "well_being")
-
   /** The post-load referential-integrity family (C8): fact FK →
     * (dimension catalog table, staged-parquet selector on [[Paths]],
     * dim PK). The SINGLE source of truth shared by the "post-load
@@ -95,42 +84,51 @@ object Pipeline {
   /** The "dimension loads" stage body, keyed by the catalog table each
     * loader writes (etl/load/load_*_dim.py). The loaders are independent
     * and the stage runs them concurrently. */
-  private def dimLoaders(spark: SparkSession, paths: Paths): Seq[(String, () => Unit)] = Seq(
-    "date_dim" -> (() => Jobs.loadDimTable(spark, paths.dateDim, "date_dim",
+  private val dimLoaders: Seq[(String, (SparkSession, Paths) => Unit)] = Seq(
+    ("date_dim", (spark, paths) => Jobs.loadDimTable(spark, paths.dateDim, "date_dim",
       Model.dateDimSchema.fields.map(f => f.name -> f.name).toSeq,
       partitionBy = Some("Year"), clusterBy = Seq("Date"))),
-    "ward" -> (() => Jobs.loadDimTable(spark, paths.wardDim, "ward",
+    ("ward", (spark, paths) => Jobs.loadDimTable(spark, paths.wardDim, "ward",
       Seq("WardCode", "WardName", "BoroughName", "BoroughCode", "WardID").map(c => c -> c),
       partitionBy = Some("BoroughCode"), clusterBy = Seq("WardID", "WardName"))),
-    "incident_types" -> (() => Jobs.loadDimTable(spark, paths.incidentTypeDim, "incident_types",
+    ("incident_types", (spark, paths) => Jobs.loadDimTable(spark, paths.incidentTypeDim,
+      "incident_types",
       Seq("IncidentType", "IncidentDescription", "IncidentTypeKey").map(c => c -> c),
       partitionBy = None, clusterBy = Seq("IncidentTypeKey"))),
-    "location_type" -> (() => Jobs.loadDimTable(spark, paths.locationTypeDim, "location_type",
+    ("location_type", (spark, paths) => Jobs.loadDimTable(spark, paths.locationTypeDim,
+      "location_type",
       Seq("PropertyCategory", "PropertyType", "LocationTypeKey").map(c => c -> c),
       partitionBy = None, clusterBy = Seq("LocationTypeKey"))),
-    "weather" -> (() => Jobs.loadDimTable(spark, paths.weatherClean, "weather",
+    ("weather", (spark, paths) => Jobs.loadDimTable(spark, paths.weatherClean, "weather",
       Model.weatherDimRename, partitionBy = Some("TemperatureCategory"),
       clusterBy = Seq("WeatherKey", "WindDirection"),
       dropCols = Seq("date"), distinct = true)),
-    "air_quality" -> (() => Jobs.loadDimTable(spark, paths.aqClean, "air_quality",
+    ("air_quality", (spark, paths) => Jobs.loadDimTable(spark, paths.aqClean, "air_quality",
       Model.aqDimColumns.map(c => c -> c), partitionBy = None,
       clusterBy = Seq("AirQualityKey", "PM10Level", "PM2_5Level", "NO2Level"),
       dropCols = Seq("ReadingDateTime"), distinct = true,
       cacheTable = true)), // reference caches this dim (load_air_quality_dim.py:56)
-    "well_being" -> (() => {
+    ("well_being", (spark, paths) => {
       val wbCols = spark.read.parquet(paths.wbDim).columns
       Jobs.loadDimTable(spark, paths.wbDim, "well_being",
         (wbCols.filterNot(Seq("Year", "WardCode").contains)).map(c => c -> c).toSeq,
         partitionBy = None, clusterBy = Seq("WellBeingID"))
     }))
 
+  /** Catalog tables the "dimension loads" stage writes, in load order; the
+    * cross-JVM resume probe in [[run]] re-enters at "dimension loads" when
+    * any of them is missing from this JVM's catalog. */
+  val dimTables: Seq[String] = dimLoaders.map(_._1)
+
   /** Runs the full DAG; returns per-stage wall-clock seconds in DAG order
     * (the SCALE.md-style row: which stage pays when the corpus grows).
     * `fromStage` skips every stage strictly before it (see [[stageOrder]]);
-    * the skipped stages' staging-dir outputs must already exist.
+    * the skipped stages' staging-dir outputs must already exist. `factPlan`
+    * is how the "fact load" stage runs ([[FactLoad.Plan]]).
     */
   def run(spark: SparkSession, inputs: Inputs, paths: Paths,
-          fromStage: String = "extract"): Seq[(String, Double)] = {
+          fromStage: String = "extract",
+          factPlan: FactLoad.Plan = FactLoad.Plan()): Seq[(String, Double)] = {
 
     val askedIdx = stageOrder.indexOf(fromStage)
     require(askedIdx >= 0,
@@ -227,17 +225,13 @@ object Pipeline {
 
     // --- dimension loads (etl/load/load_*_dim.py) ---
     staged("dimension loads") {
-      val loaders = dimLoaders(spark, paths)
-      require(loaders.map(_._1) == dimTables,
-        s"dimLoaders keys ${loaders.map(_._1)} out of sync with " +
-          s"Pipeline.dimTables $dimTables — the resume probe depends on them matching")
-      Sessions.concurrently(loaders.map(_._2))
+      Sessions.concurrently(dimLoaders.map { case (_, load) => () => load(spark, paths) })
     }
 
     // --- fact load ---
     staged("fact load") {
       FactLoad.run(spark, paths.lfbClean, "location_type", "ward",
-        paths.aqClean, paths.weatherClean, paths.wbDim, "lfb_call")
+        paths.aqClean, paths.weatherClean, paths.wbDim, "lfb_call", factPlan)
       // The cached dim served the fact-build joins; a library run must not
       // leave pinned blocks behind (K6 — the reference leaks this cache).
       spark.sql("UNCACHE TABLE IF EXISTS air_quality")

@@ -21,10 +21,10 @@ import org.apache.spark.sql.SparkSession
   *  - `--chunks k` extracts the corpus in k slices ([[chunkedExtract]]).
   *  - `--direct-clean [--skew]` synthesizes the cleansed LFB parquet and
   *    enters at "dimension builds" ([[directClean]]).
-  *  - `--slices k` (k >= 2) sets `spark.graft.fact.slices` and
-  *    `spark.graft.fact.pruneConsumed`; `--compact` sets
-  *    `spark.graft.fact.compact`. Session confs are JVM state, so a
-  *    cross-JVM resume passes the same flags.
+  *  - `--slices k [--compact]` is the fact load's [[FactLoad.Plan]]: k
+  *    pruned slices, then optionally one in-place compaction. The plan is
+  *    an argument of this run only, so a cross-JVM resume passes the same
+  *    flags again.
   */
 object PipelineDemo {
 
@@ -32,7 +32,7 @@ object PipelineDemo {
   final case class Run(workDir: Option[String] = None, rows: Option[Int] = None,
                        from: Option[String] = None, chunks: Option[Int] = None,
                        directClean: Boolean = false, skew: Boolean = false,
-                       slices: Int = 1, compact: Boolean = false)
+                       plan: FactLoad.Plan = FactLoad.Plan())
 
   private val Usage =
     "usage: graft.warehouse.PipelineDemo [workDir] [--rows n] [--from stage] " +
@@ -50,26 +50,32 @@ object PipelineDemo {
       n
     }
     val valueFlags = Set("--rows", "--from", "--chunks", "--slices")
+    var slices = 1
+    var compact = false
     @annotation.tailrec
     def go(rest: List[String], run: Run): Run = rest match {
       case Nil => run
       case f :: Nil if valueFlags(f) => fail(s"$f needs a value")
       case "--rows" :: v :: t => go(t, run.copy(rows = Some(count("--rows", v))))
       case "--chunks" :: v :: t => go(t, run.copy(chunks = Some(count("--chunks", v))))
-      case "--slices" :: v :: t => go(t, run.copy(slices = count("--slices", v)))
+      case "--slices" :: v :: t => slices = count("--slices", v); go(t, run)
       case "--from" :: s :: t =>
         if (!Pipeline.stageOrder.contains(s)) fail(
           s"unknown stage '$s'; stages: ${Pipeline.stageOrder.mkString(", ")}")
         go(t, run.copy(from = Some(s)))
       case "--direct-clean" :: t => go(t, run.copy(directClean = true))
       case "--skew" :: t => go(t, run.copy(skew = true))
-      case "--compact" :: t => go(t, run.copy(compact = true))
+      case "--compact" :: t => compact = true; go(t, run)
       case f :: _ if f.startsWith("--") => fail(s"unknown flag '$f'")
       case d :: t =>
         run.workDir.foreach(w => fail(s"more than one workDir: '$w' and '$d'"))
         go(t, run.copy(workDir = Some(d)))
     }
-    val run = go(args.toList, Run())
+    val parsed = go(args.toList, Run())
+    val run = parsed.copy(plan =
+      try FactLoad.Plan(slices, compact)
+      catch { case e: IllegalArgumentException =>
+        fail(s"--compact needs --slices k (${e.getMessage})") })
     def needs(ok: Boolean, msg: String): Unit = if (!ok) fail(msg)
     run.chunks.foreach { k =>
       needs(run.rows.isDefined, "--chunks needs --rows")
@@ -83,7 +89,6 @@ object PipelineDemo {
       needs(run.from.isEmpty, "--direct-clean cannot be combined with --from")
     }
     needs(!run.skew || run.directClean, "--skew needs --direct-clean")
-    needs(!run.compact || run.slices >= 2, "--compact needs --slices k with k >= 2")
     needs(run.workDir.isDefined || (run.chunks.isEmpty && !run.directClean),
       "--chunks and --direct-clean need an explicit workDir")
     run
@@ -200,7 +205,7 @@ object PipelineDemo {
     * the scratch guard skipped the pass, so the number of jobs is read
     * from the files themselves: distinct write-job UUIDs in the part-file
     * names (r19: a guard-skip run had mislabeled its 4-append layout). */
-  private def reportFactLayout(base: Path, factRows: Long, run: Run): Unit = {
+  private def reportFactLayout(base: Path, factRows: Long, plan: FactLoad.Plan): Unit = {
     val dirs = Option(base.resolve("warehouse/lfb_call").toFile.listFiles())
       .getOrElse(Array.empty)
       .filter(f => f.isDirectory && f.getName.startsWith("IncidentStationGround="))
@@ -215,17 +220,17 @@ object PipelineDemo {
     val totalFiles = bytes.map(_._2).sum
     val writeJobs = files.flatMap(_._2).map(_.getName
       .replaceFirst("^part-\\d+-", "").replaceFirst("-c\\d.*$", "")).distinct.length
-    val compacted = run.compact && writeJobs == 1
-    if (run.compact && !compacted)
+    val compacted = plan.compact && writeJobs == 1
+    if (plan.compact && !compacted)
       println(s"==   compaction was requested but $writeJobs write-job UUIDs are " +
         "live — the scratch guard skipped the pass (see the SKIPPED warn " +
         "above); reporting the slice-append shape")
     val tasks =
       if (compacted) graft.ops.Relational.rowSizedPartitions(factRows)
-      else run.slices * graft.ops.Relational.rowSizedPartitions(factRows / run.slices)
+      else plan.slices * graft.ops.Relational.rowSizedPartitions(factRows / plan.slices)
     println(f"== fact committer: $totalFiles files over ${dirs.length} station " +
       f"dirs (${totalFiles.toDouble / math.max(dirs.length, 1)}%.1f/dir), " +
-      f"~$tasks write tasks in ${if (compacted) 1 else run.slices} " +
+      f"~$tasks write tasks in ${if (compacted) 1 else plan.slices} " +
       (if (compacted) "compaction job(s) = " else "job(s) = ") +
       f"${totalFiles.toDouble / tasks}%.2f files/task")
   }
@@ -244,11 +249,6 @@ object PipelineDemo {
     run.rows.foreach(n => writeRowsMarker(base, n))
     val rows = run.rows.orElse(run.from.flatMap(_ => readRowsMarker(base)))
     val spark = buildSession(base, rows, fromMarker = rows.isDefined && run.rows.isEmpty)
-    if (run.slices > 1) {
-      spark.conf.set("spark.graft.fact.slices", run.slices.toString)
-      spark.conf.set("spark.graft.fact.pruneConsumed", "true")
-    }
-    if (run.compact) spark.conf.set("spark.graft.fact.compact", "true")
     val paths = Pipeline.Paths(base.resolve("staging").toString)
     val t0 = System.nanoTime()
     val (inputs, fromStage) = (run.chunks, run.from) match {
@@ -272,14 +272,14 @@ object PipelineDemo {
           "extract"
     }
     val t1 = System.nanoTime()
-    val stageTimes = Pipeline.run(spark, inputs, paths, fromStage = fromStage)
+    val stageTimes = Pipeline.run(spark, inputs, paths, fromStage, run.plan)
     println(f"== pipeline wall-clock: ${secsSince(t1)}%.1f s " +
       f"(${secsSince(t0)}%.1f s with input generation)")
     stageTimes.foreach { case (s, t) => println(f"==   stage $s%-20s $t%7.1f s") }
 
     val factRows = spark.table("lfb_call").count()
     println(s"== fact lfb_call: $factRows rows")
-    if (run.directClean || run.slices > 1) reportFactLayout(base, factRows, run)
+    if (run.directClean || run.plan.slices > 1) reportFactLayout(base, factRows, run.plan)
     println(f"== free disk ${freeGb(base)}%.1f GB")
     spark.table("lfb_call").show(10, truncate = false)
     for (t <- Seq("per_month", "per_ward", "types_per_ward", "per_location_type")) {

@@ -36,6 +36,20 @@ class RelationalSpec extends SparkSpec {
     assert(ids(0) == ids(2) && ids(0) != ids(1) && ids(0).length == 64)
   }
 
+  test("hashId equals the inline sha2(concat_ws) key over date, int and null columns") {
+    // the warehouse dimension keys (Jobs) go through hashId: its explicit
+    // string cast must give concat_ws's implicit one, nulls skipped alike
+    val df = Seq((java.sql.Date.valueOf("2022-01-31"), 7, Option.empty[String]),
+        (java.sql.Date.valueOf("2021-12-01"), -3, Some("W001")))
+      .toDF("d", "i", "s")
+    val keys = df.select(
+      Relational.hashId(Seq(col("d"), col("i"), col("s"))).as("h"),
+      sha2(concat_ws("|", col("d"), col("i"), col("s")), 256).as("inline"))
+      .as[(String, String)].collect()
+    assert(keys.length == 2)
+    keys.foreach { case (h, inline) => assert(h == inline) }
+  }
+
   test("removeOutliers nulls |z| > k, keeps the rest") {
     val vals = Seq.fill(20)(10.0) ++ Seq(1000.0)
     val out = vals.toDF("v")

@@ -16,18 +16,25 @@ class PipelineDemoSpec extends AnyFunSuite {
     assert(parse(Seq("/w", "--rows", "150000000")) ==
       Run(workDir = Some("/w"), rows = Some(150000000)))
     assert(parse(Seq("/w", "--from", "fact load", "--slices", "4", "--compact")) ==
-      Run(workDir = Some("/w"), from = Some("fact load"), slices = 4, compact = true))
+      Run(workDir = Some("/w"), from = Some("fact load"),
+        plan = FactLoad.Plan(4, compact = true)))
     assert(parse(Seq("/w", "--rows", "3000", "--chunks", "3")) ==
       Run(workDir = Some("/w"), rows = Some(3000), chunks = Some(3)))
     assert(parse(Seq("--direct-clean", "--skew", "--rows", "500", "/w", "--slices", "2")) ==
       Run(workDir = Some("/w"), rows = Some(500), directClean = true, skew = true,
-        slices = 2))
+        plan = FactLoad.Plan(2)))
   }
 
   test("a workDir equal to a flag's value is kept") {
     assert(parse(Seq("4", "--rows", "4")).workDir.contains("4"))
     assert(parse(Seq("--rows", "4", "4")).workDir.contains("4"))
-    assert(parse(Seq("--slices", "2", "2")) == Run(workDir = Some("2"), slices = 2))
+    assert(parse(Seq("--slices", "2", "2")) == Run(workDir = Some("2"), plan = FactLoad.Plan(2)))
+  }
+
+  test("--slices and --compact map to the fact load's Plan") {
+    assert(parse(Nil).plan == FactLoad.Plan())
+    assert(parse(Seq("--slices", "3", "--compact")).plan == FactLoad.Plan(3, compact = true))
+    assert(parse(Seq("--compact", "--slices", "3")).plan == FactLoad.Plan(3, compact = true))
   }
 
   test("a flag without its value, or an unknown flag, fails") {

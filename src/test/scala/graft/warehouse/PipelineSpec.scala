@@ -308,39 +308,58 @@ class PipelineSpec extends SparkSpec {
     assert(split.getMessage.contains("batchSplit"), split.getMessage)
   }
 
+  private def sortedRows(table: String): Array[String] =
+    spark.table(table).collect().map(_.toSeq.map(String.valueOf).mkString("|")).sorted
+
+  /** FactLoad over the fixture run's dims into `table`. A sliced plan
+    * deletes the cleansed input it consumed, so it reads a fresh copy of
+    * the fixture's; returns the cleansed path the load read. */
+  private def loadFact(table: String, plan: FactLoad.Plan = FactLoad.Plan()): String = {
+    import org.apache.hadoop.fs.{FileUtil, Path}
+    val clean =
+      if (plan.slices == 1) paths.lfbClean
+      else {
+        val copy = java.nio.file.Files.createTempDirectory("graft_clean_copy_")
+          .resolve("lfb-calls-clean.parquet").toString
+        val conf = spark.sparkContext.hadoopConfiguration
+        val src = new Path(paths.lfbClean)
+        val fs = src.getFileSystem(conf)
+        require(FileUtil.copy(fs, src, fs, new Path(copy), false, conf))
+        copy
+      }
+    FactLoad.run(spark, clean, "location_type", "ward",
+      paths.aqClean, paths.weatherClean, paths.wbDim, table, plan)
+    clean
+  }
+
   test("sliced fact build (slices=3, pruned staging) equals the unsliced table") {
     ranOnce
-    val unsliced = spark.table("lfb_call").collect()
-      .map(_.toSeq.map(String.valueOf).mkString("|")).sorted
-    spark.conf.set("spark.graft.fact.slices", "3")
-    // prune only the slice staging dirs (lfbClean is re-read by other
-    // tests, so leave pruneConsumed's clean deletion off)
+    val unsliced = sortedRows("lfb_call")
     try {
-      FactLoad.run(spark, paths.lfbClean, "location_type", "ward",
-        paths.aqClean, paths.weatherClean, paths.wbDim, "lfb_call_sliced")
-      val sliced = spark.table("lfb_call_sliced").collect()
-        .map(_.toSeq.map(String.valueOf).mkString("|")).sorted
+      val clean = loadFact("lfb_call_sliced", FactLoad.Plan(3))
+      val sliced = sortedRows("lfb_call_sliced")
       assert(sliced.length == unsliced.length)
       assert(sliced.sameElements(unsliced),
         "sliced fact build diverged from the unsliced table")
-    } finally {
-      spark.conf.unset("spark.graft.fact.slices")
-      spark.sql("DROP TABLE IF EXISTS lfb_call_sliced")
-    }
+      // a sliced load prunes what it consumed: the cleansed input once
+      // staged, each staging slice once appended
+      import org.apache.hadoop.fs.Path
+      val cleanP = new Path(clean)
+      val fs = cleanP.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      assert(!fs.exists(cleanP), s"the consumed cleansed input $clean was left behind")
+      val staging = new Path(cleanP.getParent, "fact-staging.parquet")
+      val slices = if (!fs.exists(staging)) Seq.empty
+        else fs.listStatus(staging).map(_.getPath.getName).filter(_.startsWith("slice-")).toSeq
+      assert(slices.isEmpty, s"staging slices left behind: $slices")
+    } finally spark.sql("DROP TABLE IF EXISTS lfb_call_sliced")
   }
 
   test("sliced fact build with compact=true folds to one cluster set in place") {
     ranOnce
-    val unsliced = spark.table("lfb_call").collect()
-      .map(_.toSeq.map(String.valueOf).mkString("|")).sorted
-    spark.conf.set("spark.graft.fact.slices", "3")
-    spark.conf.set("spark.graft.fact.compact", "true")
+    val unsliced = sortedRows("lfb_call")
     try {
-      FactLoad.run(spark, paths.lfbClean, "location_type", "ward",
-        paths.aqClean, paths.weatherClean, paths.wbDim, "lfb_call_compacted")
-      val got = spark.table("lfb_call_compacted").collect()
-        .map(_.toSeq.map(String.valueOf).mkString("|")).sorted
-      assert(got.sameElements(unsliced),
+      loadFact("lfb_call_compacted", FactLoad.Plan(3, compact = true))
+      assert(sortedRows("lfb_call_compacted").sameElements(unsliced),
         "compacted sliced build diverged from the unsliced table")
       import org.apache.hadoop.fs.Path
       val meta = spark.sessionState.catalog.getTableMetadata(
@@ -370,37 +389,22 @@ class PipelineSpec extends SparkSpec {
       // a later overwrite load over the swapped table must still work
       // (the prepareManagedOverwrite + saveAsTable path sees a live,
       // partition-synced catalog entry)
-      spark.conf.unset("spark.graft.fact.slices")
-      spark.conf.unset("spark.graft.fact.compact")
-      FactLoad.run(spark, paths.lfbClean, "location_type", "ward",
-        paths.aqClean, paths.weatherClean, paths.wbDim, "lfb_call_compacted")
-      val again = spark.table("lfb_call_compacted").collect()
-        .map(_.toSeq.map(String.valueOf).mkString("|")).sorted
-      assert(again.sameElements(unsliced),
+      loadFact("lfb_call_compacted")
+      assert(sortedRows("lfb_call_compacted").sameElements(unsliced),
         "overwrite over the compacted table diverged")
-    } finally {
-      spark.conf.unset("spark.graft.fact.slices")
-      spark.conf.unset("spark.graft.fact.compact")
-      spark.sql("DROP TABLE IF EXISTS lfb_call_compacted")
-    }
+    } finally spark.sql("DROP TABLE IF EXISTS lfb_call_compacted")
   }
 
   test("compaction skips loudly when scratch is insufficient; sliced table stays") {
     ranOnce
-    val unsliced = spark.table("lfb_call").collect()
-      .map(_.toSeq.map(String.valueOf).mkString("|")).sorted
-    spark.conf.set("spark.graft.fact.slices", "3")
-    spark.conf.set("spark.graft.fact.compact", "true")
-    // An impossible free-space demand forces the guard: compaction is
-    // optional layout work, so the load must stay green with the k-sliced
-    // (correct, multi-cluster-set) table in place.
-    spark.conf.set("spark.graft.compact.minFreeFactor", "1e12")
+    val unsliced = sortedRows("lfb_call")
     try {
-      FactLoad.run(spark, paths.lfbClean, "location_type", "ward",
-        paths.aqClean, paths.weatherClean, paths.wbDim, "lfb_call_noroom")
-      val got = spark.table("lfb_call_noroom").collect()
-        .map(_.toSeq.map(String.valueOf).mkString("|")).sorted
-      assert(got.sameElements(unsliced), "guard-skipped load diverged")
+      loadFact("lfb_call_noroom", FactLoad.Plan(3))
+      // An impossible free-space demand forces the guard: compaction is
+      // optional layout work, so it must return with the k-sliced
+      // (correct, multi-cluster-set) table in place.
+      FactLoad.compactInPlace(spark, "lfb_call_noroom", minFreeFactor = 1e12)
+      assert(sortedRows("lfb_call_noroom").sameElements(unsliced), "guard-skipped load diverged")
       // the sliced layout is still there: some station dir holds >1 file
       import org.apache.hadoop.fs.Path
       val meta = spark.sessionState.catalog.getTableMetadata(
@@ -413,18 +417,12 @@ class PipelineSpec extends SparkSpec {
         .max
       assert(maxFiles > 1,
         s"expected the sliced multi-cluster-set layout to remain, max files/dir = $maxFiles")
-    } finally {
-      spark.conf.unset("spark.graft.fact.slices")
-      spark.conf.unset("spark.graft.fact.compact")
-      spark.conf.unset("spark.graft.compact.minFreeFactor")
-      spark.sql("DROP TABLE IF EXISTS lfb_call_noroom")
-    }
+    } finally spark.sql("DROP TABLE IF EXISTS lfb_call_noroom")
   }
 
   test("compaction residue from a crashed swap is healed by the next load") {
     ranOnce
-    val unsliced = spark.table("lfb_call").collect()
-      .map(_.toSeq.map(String.valueOf).mkString("|")).sorted
+    val unsliced = sortedRows("lfb_call")
     import org.apache.hadoop.fs.Path
     def plantResidue(table: String): (Path, Path, org.apache.hadoop.fs.FileSystem) = {
       // the REAL suffixes, via FactLoad's own path derivation
@@ -439,44 +437,30 @@ class PipelineSpec extends SparkSpec {
       // Arm 1 — compacting run over planted residue (the bak && loc state a
       // crashed cleanup leaves): the swap-landed recovery drops the backup
       // and the fresh compaction proceeds to the correct table.
-      spark.conf.set("spark.graft.fact.slices", "2")
-      spark.conf.set("spark.graft.fact.compact", "true")
-      FactLoad.run(spark, paths.lfbClean, "location_type", "ward",
-        paths.aqClean, paths.weatherClean, paths.wbDim, "lfb_call_heal")
+      loadFact("lfb_call_heal", FactLoad.Plan(2, compact = true))
       val (bak1, tmp1, fs) = plantResidue("lfb_call_heal")
-      FactLoad.run(spark, paths.lfbClean, "location_type", "ward",
-        paths.aqClean, paths.weatherClean, paths.wbDim, "lfb_call_heal")
+      loadFact("lfb_call_heal", FactLoad.Plan(2, compact = true))
       assert(!fs.exists(bak1) && !fs.exists(tmp1),
         "compacting run left crashed-swap residue behind")
-      val healed = spark.table("lfb_call_heal").collect()
-        .map(_.toSeq.map(String.valueOf).mkString("|")).sorted
-      assert(healed.sameElements(unsliced), "healed compacting run diverged")
+      assert(sortedRows("lfb_call_heal").sameElements(unsliced),
+        "healed compacting run diverged")
 
       // Arm 2 — non-compacting sliced load sweeps the residue after its
       // rebuild (the stale copies are dead weight once the table is fresh).
-      spark.conf.unset("spark.graft.fact.compact")
       val (bak2, tmp2, _) = plantResidue("lfb_call_heal")
-      FactLoad.run(spark, paths.lfbClean, "location_type", "ward",
-        paths.aqClean, paths.weatherClean, paths.wbDim, "lfb_call_heal")
+      loadFact("lfb_call_heal", FactLoad.Plan(2))
       assert(!fs.exists(bak2) && !fs.exists(tmp2),
         "non-compacting load left crashed-swap residue behind")
-    } finally {
-      spark.conf.unset("spark.graft.fact.slices")
-      spark.conf.unset("spark.graft.fact.compact")
-      spark.sql("DROP TABLE IF EXISTS lfb_call_heal")
-    }
+    } finally spark.sql("DROP TABLE IF EXISTS lfb_call_heal")
   }
 
   test("count-drift marker pins the backup: compacting sweep refuses, non-compacting sweep keeps it") {
     ranOnce
     import org.apache.hadoop.fs.Path
     val table = "lfb_call_marker"
-    spark.conf.set("spark.graft.fact.slices", "2")
-    spark.conf.set("spark.graft.fact.compact", "true")
-    def load(): Unit = FactLoad.run(spark, paths.lfbClean, "location_type",
-      "ward", paths.aqClean, paths.weatherClean, paths.wbDim, table)
+    val compacting = FactLoad.Plan(2, compact = true)
     try {
-      load()
+      loadFact(table, compacting)
       val (loc, _, bak, fs) = FactLoad.compactPaths(spark, table)
       val marker = FactLoad.compactInvalidMarker(loc)
       def plantProtected(): Unit = {
@@ -487,31 +471,25 @@ class PipelineSpec extends SparkSpec {
       // 1. compacting re-run over bak+marker (the post-abort state):
       //    refuses loudly BEFORE touching the backup
       plantProtected()
-      val e = intercept[IllegalArgumentException] { load() }
+      val e = intercept[IllegalArgumentException] { loadFact(table, compacting) }
       assert(e.getMessage.contains(".compact-invalid"),
         s"refusal must name the marker, got: ${e.getMessage}")
       assert(fs.exists(bak), "the sweep dropped the backup despite the marker")
       assert(fs.exists(marker), "the sweep consumed the marker")
       // 2. non-compacting re-run: succeeds (the rebuild is authoritative)
       //    but KEEPS the pinned backup for operator adjudication
-      spark.conf.set("spark.graft.fact.compact", "false")
-      load()
+      loadFact(table, FactLoad.Plan(2))
       assert(fs.exists(bak), "non-compacting sweep dropped the pinned backup")
       // 3. operator clears the marker -> the next sweep reclaims the backup
       fs.delete(marker, false)
-      load()
+      loadFact(table, FactLoad.Plan(2))
       assert(!fs.exists(bak), "sweep kept the backup after the marker was cleared")
       // 4. a stale marker with no backup left is cleared automatically
       fs.create(marker, true).close()
-      spark.conf.set("spark.graft.fact.compact", "true")
-      load()
+      loadFact(table, compacting)
       assert(!fs.exists(marker), "stale marker (no backup) was not cleared")
       assert(!fs.exists(bak))
-    } finally {
-      spark.conf.unset("spark.graft.fact.slices")
-      spark.conf.unset("spark.graft.fact.compact")
-      spark.sql(s"DROP TABLE IF EXISTS $table")
-    }
+    } finally spark.sql(s"DROP TABLE IF EXISTS $table")
   }
 
   test("direct-to-clean generator equals the CSV -> extract -> cleanse path") {
@@ -528,9 +506,7 @@ class PipelineSpec extends SparkSpec {
     // degenerates to full-range inference — the SAMPLED-inference seam
     // (schema from two disjoint id-range edges, typing applied to the
     // full range) is exactly what this equality must pin.
-    spark.conf.set("spark.graft.gen.inferEdgeRows", "1000")
-    try Fixtures.writeScaledLfbCleanSpark(spark, cleanB, n)
-    finally spark.conf.unset("spark.graft.gen.inferEdgeRows")
+    Fixtures.writeScaledLfbCleanSpark(spark, cleanB, n, edgeRows = 1000)
     val a = spark.read.parquet(cleanA)
     val b = spark.read.parquet(cleanB)
     assert(a.schema == b.schema,
@@ -569,15 +545,12 @@ class PipelineSpec extends SparkSpec {
     // The guard fires before any staging work or deletion, so no pipeline
     // state is needed — dummy paths never get read.
     val gone = base.resolve("never-written.parquet").toString
-    spark.conf.set("spark.graft.fact.pruneConsumed", "true")
-    try {
-      val e = intercept[IllegalStateException] {
-        FactLoad.run(spark, gone, "location_type", "ward", "x", "y", "z", "t")
-      }
-      assert(e.getMessage.contains("pruneConsumed"),
-        s"re-entry failure must name the contract: ${e.getMessage}")
-    } finally spark.conf.unset("spark.graft.fact.pruneConsumed")
-    // Without the knob the message points at the cleanse stage instead.
+    val e = intercept[IllegalStateException] {
+      FactLoad.run(spark, gone, "location_type", "ward", "x", "y", "z", "t", FactLoad.Plan(2))
+    }
+    assert(e.getMessage.contains("prunes its consumed input"),
+      s"re-entry failure must name the contract: ${e.getMessage}")
+    // An unsliced load prunes nothing; the message points at the cleanse stage.
     val e2 = intercept[IllegalStateException] {
       FactLoad.run(spark, gone, "location_type", "ward", "x", "y", "z", "t")
     }
