@@ -728,7 +728,7 @@ object Probe {
     })
     sampler.setDaemon(true); sampler.start()
     val t0 = System.nanoTime()
-    val n = ops.Relational.compactClustered(spark, factDir, optDir,
+    val n = ops.Relational.compactClustered(spark.read.parquet(factDir), optDir,
       "IncidentStationGround", Seq("DateOfCall", "NotionalCost"))
     val wall = secsSince(t0)
     sampling = false

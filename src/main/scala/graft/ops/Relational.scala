@@ -995,41 +995,51 @@ object Relational {
       .drop("__zkey")
   }
 
-  /** OPTIMIZE-style compaction of a partitioned table directory into a
-    * SINGLE cluster set — the priced remedy for the sliced fact build's
-    * honest trade (SCALE.md r17: `FactLoad.Plan(slices = k)` lands k
-    * sequential range-clustered appends, so a reader sees k cluster sets
-    * per partition, like k pending compactions). One job re-runs the
-    * canonical clustered-write layout over the whole table (reference
-    * semantics: `OPTIMIZE ... ZORDER BY`, `etl/load/load_fact.py:403-405`)
-    * and writes a fresh directory — never in place: Spark cannot read and
-    * overwrite one path in a job, and the rewrite must be atomic-swappable
-    * like Delta's OPTIMIZE commit.
+  /** The clustered layout of every catalog load here, the stand-in for
+    * the reference's Z-ORDER (`etl/load/load_*_dim.py`) and clustered fact
+    * write (`etl/load/load_fact.py:392-405`): range-partition on
+    * `(partitionCol ++ clusterCols).distinct`, then sort within partitions
+    * by the same keys. The caller owns the partition count and the sink.
     *
-    * Layout choice, deliberately NOT [[zorderBy]]'s Morton interleave:
-    * (a) the partition column must LEAD the range key so each write task
-    * holds a contiguous partition slice — one or two open writers per
-    * task instead of one per partition directory (the measured spill term
-    * of the 10× fact build, SCALE.md r14) — whereas a global z-key
-    * interleave would fan every task out across every directory; (b)
-    * within a partition the remaining sort (e.g. date, cost) already
-    * gives each file a tight span on the LEADING cluster column, which is
-    * the lookup pattern the fact table serves; (c) the Morton map needs
-    * numeric dimensions and the fact's second key is a DATE. zorderBy
-    * stays the right tool for multi-dim numeric tables without a
-    * partition column (K5/k8 gates).
-    *
-    * Returns the row count (the caller sizes its swap/validation on it);
-    * partition count is row-sized like every clustered write here.
+    * The partition column LEADS the range key: each write task then holds
+    * a contiguous partition slice — one or two open parquet writers per
+    * task instead of one per partition dir (the 16-task × 40-dir writer
+    * fan-out was the measured spill term of the 10× fact build, SCALE.md
+    * r14) — and the committer's required ordering on the partition column
+    * is already met, so it does not re-sort each task's rows and the
+    * cluster order survives inside every dir, as Delta's OPTIMIZE ZORDER
+    * clusters WITHIN each partition. Deliberately NOT [[zorderBy]]'s
+    * Morton interleave: a global z-key would fan every task out across
+    * every dir, the in-partition sort already gives each file a tight span
+    * on the leading cluster column (the fact table's lookup pattern), and
+    * the Morton map needs numeric keys where the fact's is a DATE.
     */
-  def compactClustered(spark: SparkSession, srcDir: String, dstDir: String,
+  def clustered(df: DataFrame, partitionCol: Option[String], clusterCols: Seq[String],
+                partitions: Int): DataFrame = {
+    val keys = (partitionCol.toSeq ++ clusterCols).distinct.map(col)
+    df.repartitionByRange(partitions, keys: _*).sortWithinPartitions(keys: _*)
+  }
+
+  /** OPTIMIZE-style compaction of a partitioned table into a SINGLE
+    * cluster set — the priced remedy for the sliced fact build's k
+    * range-clustered appends (SCALE.md r17). One job re-runs the
+    * [[clustered]] layout over the whole table (reference: `OPTIMIZE ...
+    * ZORDER BY`, `etl/load/load_fact.py:403-405`) into a fresh directory —
+    * never in place: Spark cannot read and overwrite one path in a job,
+    * and the rewrite must be atomic-swappable like Delta's OPTIMIZE
+    * commit. Pass a catalog table's DataFrame when there is one: a path
+    * read re-INFERS the partition column's type from the dir names.
+    * Returns the row count; the partition count is row-sized unless
+    * `partitions` pins it.
+    */
+  def compactClustered(df: DataFrame, dstDir: String,
                        partitionCol: String, clusterCols: Seq[String],
-                       partitions: Option[Int] = None): Long =
-    // Note: reading by path re-INFERS the partition column's type from the
-    // dir names; a caller holding a catalog table should pass its
-    // DataFrame to the overload below so the declared schema rules.
-    compactClustered(spark.read.parquet(srcDir), dstDir,
-      partitionCol, clusterCols, partitions)
+                       partitions: Option[Int] = None): Long = {
+    val n = df.count()
+    clustered(df, Some(partitionCol), clusterCols, partitions.getOrElse(rowSizedPartitions(n)))
+      .write.mode("overwrite").partitionBy(partitionCol).parquet(dstDir)
+    n
+  }
 
   /** The local directories Spark's shuffle sort-spill lands in, resolved
     * with the SAME priority Spark's own `Utils.getConfiguredLocalDirs`
@@ -1107,18 +1117,6 @@ object Relational {
     val span = col("__v") >= col("__mn") && col("__v") <= col("__mx")
     val cond = partitionCol.fold(span)(_ => col("__p2") === col("__p") && span)
     probe.join(broadcast(stats), cond).count().toDouble / df.count()
-  }
-
-  def compactClustered(df: DataFrame, dstDir: String,
-                       partitionCol: String, clusterCols: Seq[String],
-                       partitions: Option[Int]): Long = {
-    val n = df.count()
-    val parts = partitions.getOrElse(rowSizedPartitions(n))
-    val keys = (partitionCol +: clusterCols).map(col)
-    df.repartitionByRange(parts, keys: _*)
-      .sortWithinPartitions(keys: _*)
-      .write.mode("overwrite").partitionBy(partitionCol).parquet(dstDir)
-    n
   }
 
   /** SCD type-2 change compression — the ONE definition behind both the

@@ -8,7 +8,7 @@ import graft.ops.Relational
   * etl/load/load_fact.py:143-408). Seven stages: incident-type key
   * derivation, four dimension joins (broadcast — every dim is tiny next to
   * the fact), the ±12 h nearest-air-quality band join, and schema-enforced
-  * finalization into a partitioned catalog table.
+  * finalization into a partitioned catalog table ([[Relational.clustered]]).
   *
   * The band join uses Relational.nearestWithinBand with the *intended*
   * `floor(epoch/B)` bucketing on both sides (the reference's dim side
@@ -18,7 +18,9 @@ import graft.ops.Relational
   * TimeDifference alone is tie-unstable.
   *
   * A [[FactLoad.Plan]] argument selects the sliced build and its optional
-  * compaction; the default plan is the single-shot build.
+  * in-place compaction; the default plan is the single-shot build. Every
+  * state a crashed compaction can leave behind is read and healed (or
+  * refused) by one function, `sweepResidue`.
   */
 object FactLoad {
 
@@ -37,9 +39,10 @@ object FactLoad {
     * pending). A sliced load also deletes each consumed artifact when its
     * last reader finishes (cleansed input after staging; each staging
     * slice after its append) — the measured consumed-artifact lifecycle of
-    * the 500M/1B rungs. `compact` folds the k file sets back into one
-    * after the load ([[compactInPlace]]); slices = 1 already writes that
-    * single cluster set, so compact needs slices >= 2.
+    * the 500M/1B rungs; the emptied staging root goes after the last
+    * append. `compact` folds the k file sets back into one after the load
+    * ([[compactInPlace]]); slices = 1 already writes that single cluster
+    * set, so compact needs slices >= 2.
     */
   final case class Plan(slices: Int = 1, compact: Boolean = false) {
     require(slices >= 1, s"fact plan: slices must be >= 1, got $slices")
@@ -70,27 +73,12 @@ object FactLoad {
               " crashed-mid-write) sliced run cannot be re-entered at or after" +
               " 'fact load' — re-run from 'cleanse' (or regenerate the corpus) instead."
           else " Run the cleanse stage first (Pipeline.run fromStage <= 'cleanse')."))
-    // Fail fast on a count-drift compact marker BEFORE the k-slice reload:
-    // the end-of-load compact sweep refuses this state anyway (the backup
-    // is the only adjudicated-good copy), but only after this run has
-    // re-staged and re-appended the whole corpus — wasted full-load work
-    // at the 1B rung. Same refusal (the sweep's own wording names the
-    // marker), surfaced before any staging job runs; the alternative exit
-    // is the same as the sweep's — and since this load is about to rebuild
-    // the table from fresh staging, verifying the rebuilt table and then
-    // clearing marker + backup (README: count-drift recovery) is equally
-    // valid, which the message says.
-    if (plan.compact && spark.catalog.tableExists(outputTable)) {
-      val (loc, _, bak, fs) = compactPaths(spark, outputTable)
-      val marker = compactInvalidMarker(loc)
-      require(!(fs.exists(marker) && fs.exists(bak)),
-        s"fact load: $marker marks the live $loc as a count-drifted compact " +
-          s"rewrite and the backup $bak is the only adjudicated-good copy — " +
-          "refusing BEFORE the k-slice reload instead of at the post-load " +
-          s"compact sweep. Either restore $bak over $loc and delete the " +
-          "marker, or verify the current table (this load would rebuild it " +
-          "from fresh staging anyway) and delete marker + backup, then re-run")
-    }
+    // Fail fast on a pinned compaction backup BEFORE the k-slice reload:
+    // the compaction's own sweep refuses this state anyway, but only after
+    // this run has re-staged and re-appended the whole corpus — wasted
+    // full-load work at the 1B rung.
+    if (plan.compact && spark.catalog.tableExists(outputTable))
+      sweepResidue(spark, outputTable, BeforeStaging)
     val stagingRoot = s"${new org.apache.hadoop.fs.Path(lfbCleanPath).getParent}" +
       "/fact-staging.parquet"
     val stagedPaths =
@@ -118,7 +106,24 @@ object FactLoad {
     // Measured: without the boundary the two wide shuffles coexist and a
     // 150M-row build filled a 72 GB scratch disk (SCALE.md round 15).
     System.gc()
-    writeClustered(spark, stagedPaths, outputTable, plan.compact)
+    writeClustered(spark, stagedPaths, outputTable)
+    if (slices > 1) rmDir(spark, stagingRoot)
+
+    // Optional post-load compaction: a k-sliced load lands k
+    // range-clustered file sets per station dir (like k pending
+    // compactions); this folds them back into the canonical single cluster
+    // set — the explicit OPTIMIZE ZORDER the reference runs after its own
+    // write (load_fact.py:403-405), priced at 0.75 s/M over the 300M rung
+    // (SCALE.md r18, `Probe compact`: point-lookup locality 4.03 → 1.03
+    // files). A non-compacting load just rebuilt the table from fresh
+    // staging, so a crashed compacting run's residue is dead weight.
+    if (plan.compact) compactInPlace(spark, outputTable)
+    else sweepResidue(spark, outputTable, AfterRebuild)
+
+    // K6: surface the loaded table's metadata, the parquet stand-in for the
+    // reference's Delta `DESCRIBE DETAIL` (load_fact.py:408; SURVEY §2.2).
+    val detail = spark.sql(s"DESCRIBE EXTENDED $outputTable").collect()
+    require(detail.nonEmpty, s"DESCRIBE EXTENDED $outputTable returned no rows")
   }
 
   private def rmDir(spark: SparkSession, path: String): Unit = {
@@ -132,8 +137,8 @@ object FactLoad {
     * The staging boundary is load-bearing at scale, not a convenience:
     * (a) scratch-disk peak becomes max(join shuffle, write shuffle)
     * instead of their sum — within one action both live until the action
-    * ends; (b) `repartitionByRange` samples its child for range
-    * boundaries, so over staged parquet the sample job is a cheap column
+    * ends; (b) the clustered write's range partitioning samples its
+    * child, so over staged parquet the sample job is a cheap column
     * scan instead of a second execution of the 6-join plan. Note `run()`
     * always rebuilds the staging parquet — it cannot know whether an
     * existing one is stale against its inputs, so the artifact is a
@@ -243,37 +248,20 @@ object FactLoad {
     stagedPath
   }
 
-  /** Phase 2 — the clustered catalog write over the staged joined fact.
-    * One write job per staging path (a single path in the default plan;
-    * one per slice in sliced mode — overwrite first, append after, so the
-    * table is the exact union). Each job's partition count is row-sized
-    * independently, so the per-task row budget holds whatever the slicing.
+  /** Phase 2 — the [[Relational.clustered]] catalog write over the staged
+    * joined fact: partitioned by station, clustered by (date, cost). One
+    * write job per staging path (one per slice in sliced mode — overwrite
+    * first, append after, so the table is the exact union). Each job's
+    * partition count is row-sized (the measured ~250k wide-rows-per-task
+    * spill cliff, SCALE.md r14) — over staged parquet a footer read.
     */
   private def writeClustered(spark: SparkSession, stagedPaths: Seq[String],
-                             outputTable: String, compact: Boolean): Unit = {
+                             outputTable: String): Unit = {
     Relational.prepareManagedOverwrite(spark, outputTable)
     stagedPaths.zipWithIndex.foreach { case (path, i) =>
       val staged = spark.read.parquet(path)
-
-      // Partition by station ground; cluster files by (DateOfCall,
-      // NotionalCost) — the Z-ORDER stand-in (load_fact.py:392-405). The
-      // station LEADS the range key: Delta's OPTIMIZE ZORDER clusters
-      // WITHIN each partition, and leading with the partition column makes
-      // every write task hold a contiguous station slice — one or two open
-      // parquet writers per task instead of one per station (the 16-task ×
-      // 40-dir writer fan-out was the measured spill term of the 10×
-      // fact build, SCALE.md round 14), fewer+bigger files per dir, and the
-      // (date, cost) sort surviving intact inside each partition.
-      //
-      // The partition COUNT is sized by rows, not cores (the measured ~250k
-      // wide-rows-per-task spill cliff, SCALE.md round 14); over the staged
-      // parquet the count is a footer-metadata read.
-      val writePartitions = Relational.rowSizedPartitions(staged.count())
-      staged
-        .repartitionByRange(writePartitions,
-          col("IncidentStationGround"), col("DateOfCall"), col("NotionalCost"))
-        .sortWithinPartitions(
-          col("IncidentStationGround"), col("DateOfCall"), col("NotionalCost"))
+      Relational.clustered(staged, Some("IncidentStationGround"),
+          Seq("DateOfCall", "NotionalCost"), Relational.rowSizedPartitions(staged.count()))
         .write.mode(if (i == 0) "overwrite" else "append").format("parquet")
         .partitionBy("IncidentStationGround").saveAsTable(outputTable)
       if (stagedPaths.size > 1) {
@@ -283,69 +271,8 @@ object FactLoad {
         System.gc()
       }
     }
-
-    // Optional post-load compaction (`Plan.compact`): a k-sliced
-    // load lands k range-clustered file sets per station dir (like k pending
-    // compactions); this folds them back into the canonical single cluster
-    // set — the explicit OPTIMIZE ZORDER the reference runs after its own
-    // write (load_fact.py:403-405), priced at 0.75 s/M over the 300M rung
-    // (SCALE.md r18, `Probe compact`: point-lookup locality 4.03 → 1.03
-    // files).
-    if (compact) compactInPlace(spark, outputTable)
-    else {
-      // A crashed compacting run can leave .pre-compact/.compact-tmp
-      // siblings; this load just rebuilt the table from fresh staging, so
-      // both are dead weight (a full stale table copy each) — reclaim.
-      // Exception: a .compact-invalid marker (count-drift abort) pins the
-      // backup until an operator adjudicates — even though this rebuild
-      // made the live table authoritative again, silently discarding the
-      // copy the abort message promised to keep would break that contract.
-      val (loc, tmp, bak, fs) = compactPaths(spark, outputTable)
-      val marker = compactInvalidMarker(loc)
-      if (fs.exists(marker) && !fs.exists(bak)) {
-        log.warn(s"fact load: dropping stale marker $marker (no backup present)")
-        fs.delete(marker, false)
-      }
-      Seq(tmp, bak).filter(fs.exists).foreach { p =>
-        if (p == bak && fs.exists(marker))
-          log.warn(s"fact load: KEEPING $bak — $marker marks it as the " +
-            s"good copy of a count-drifted rewrite. $outputTable was just " +
-            "rebuilt from fresh staging, so the live table is " +
-            "authoritative again; once verified, delete the marker and " +
-            "the backup (or restore the backup first if staging was wrong)")
-        else {
-          log.warn(s"fact load: deleting stale compaction residue $p " +
-            s"(table $outputTable was just rebuilt at $loc)")
-          fs.delete(p, true)
-        }
-      }
-    }
-
-    // K6: surface the loaded table's metadata, the parquet stand-in for the
-    // reference's Delta `DESCRIBE DETAIL` (load_fact.py:408; SURVEY §2.2).
-    val detail = spark.sql(s"DESCRIBE EXTENDED $outputTable").collect()
-    require(detail.nonEmpty, s"DESCRIBE EXTENDED $outputTable returned no rows")
   }
 
-  /** Rewrite `table` once into the canonical partition-leading cluster
-    * layout (`Relational.compactClustered`) and swap it in place. The swap
-    * is two renames around the fresh copy — old → `.pre-compact`, fresh →
-    * live — so a COMPLETE data set exists on disk at every instant, though
-    * not necessarily at the live location: a crash between the renames
-    * leaves it at `.pre-compact`/`.compact-tmp`, and the recovery block
-    * below (or the next load's residue sweep) heals that state
-    * deterministically rather than requiring manual surgery. The backup is
-    * deleted only after the live rename lands AND the post-swap row-count
-    * validation passes (see below). Scratch peak is
-    * 2× the table for the rewrite's duration — the same src+dst the rewrite
-    * itself needs, so the backup adds no new high-water mark. The catalog
-    * entry is untouched (same managed location, same partition values);
-    * `MSCK REPAIR ... SYNC PARTITIONS` + `REFRESH` re-sync metadata and the
-    * cached file listing to the swapped files. The backup is deleted only
-    * after the post-swap row-count validation passes — on a count drift
-    * the require fires with the backup still on disk, so restoration is a
-    * rename, not a rebuild.
-    */
   // private[warehouse] so PipelineSpec plants crash residue at the REAL
   // suffixes instead of duplicating the string literals.
   private[warehouse] def compactPaths(spark: SparkSession, table: String):
@@ -362,67 +289,126 @@ object FactLoad {
   }
 
   /** Marker dropped next to the backup when the post-swap row-count
-    * validation fails: `bak && loc` is exactly the state the recovery
-    * sweep reads as "cleanup died — live dir authoritative, drop the
-    * backup", so without it a blind re-run after a count-drift abort
-    * would delete the only good copy. While the marker exists the sweep
-    * refuses to touch the backup and demands an explicit operator
-    * restore. */
+    * validation fails: `bak && loc` is exactly the state
+    * [[sweepResidue]] reads as "cleanup died — live dir authoritative,
+    * drop the backup", so without it a blind re-run after a count-drift
+    * abort would delete the only good copy. While the marker exists no
+    * sweep touches the backup and a compacting run demands an explicit
+    * operator restore. */
   private[warehouse] def compactInvalidMarker(
       loc: org.apache.hadoop.fs.Path): org.apache.hadoop.fs.Path =
     new org.apache.hadoop.fs.Path(loc.getParent, loc.getName + ".compact-invalid")
 
-  private[warehouse] def compactInPlace(spark: SparkSession, table: String,
-                                        minFreeFactor: Double = MinFreeFactor): Unit = {
+  /** Where a load runs [[sweepResidue]]: before a compacting load's
+    * staging (refuse a pinned backup, change nothing), after a
+    * non-compacting rebuild (keep it), at the head of [[compactInPlace]]
+    * (refuse it). */
+  private sealed trait SweepPoint
+  private case object BeforeStaging extends SweepPoint
+  private case object AfterRebuild extends SweepPoint
+  private case object BeforeCompact extends SweepPoint
+
+  /** The one reader of compaction residue beside the live dir `loc` (the
+    * `.compact-tmp` copy, the `.pre-compact` backup, the
+    * `.compact-invalid` marker) and the whole state table it acts on. The
+    * backup exists ONLY between the swap's rename(loc -> bak) and the
+    * post-validation backup delete, and tmp was complete before that
+    * first rename, so the on-disk state decides:
+    *  - marker && bak: a count-drift abort pinned the only good copy. A
+    *    compacting run refuses; a non-compacting rebuild made the live
+    *    table authoritative again but keeps the backup the abort message
+    *    promised to keep, with a warning.
+    *  - marker && !bak: stale (the operator restored the backup but left
+    *    the marker) — dropped.
+    *  - bak && !loc: the swap died between its renames — finish it
+    *    (tmp -> loc). Only a direct compact of a crashed run's table gets
+    *    here; inside a load the rebuild has just rewritten loc.
+    *  - bak && loc: the swap (or a later rebuild) landed and only the
+    *    cleanup died — the live dir is authoritative, the backup dropped.
+    *  - tmp: a partial or superseded rewrite — dropped.
+    * A moved or dropped backup re-syncs the catalog (the crashed run may
+    * have died before its own re-sync). Returns true when it finished a
+    * crashed swap: loc then holds the compacted layout.
+    */
+  private def sweepResidue(spark: SparkSession, table: String, at: SweepPoint): Boolean = {
     val (loc, tmp, bak, fs) = compactPaths(spark, table)
-    // Deterministic recovery from a crashed swap. The backup exists ONLY
-    // between rename(loc -> bak) and the backup delete, and the fresh copy
-    // was complete before the first rename ran — so the on-disk state
-    // decides: bak && !loc = the swap died between its two renames, the
-    // tmp copy is the complete fresh table — finish the swap; bak && loc =
-    // the swap landed (or a later load rebuilt the table) and only the
-    // cleanup died — the live dir is authoritative, drop the backup.
-    // A count-drift abort ALSO leaves bak && loc, but stamps the
-    // .compact-invalid marker — while it exists this sweep refuses to
-    // delete the backup (it is the only good copy) and demands an
-    // explicit operator restore.
-    // Inside a full FactLoad.run the slice appends above have always just
-    // rebuilt loc, so only the bak && loc arm is reachable here; the
-    // !loc arm covers a direct compact of a table left by a crashed run.
     val marker = compactInvalidMarker(loc)
-    if (fs.exists(marker) && !fs.exists(bak)) {
-      // Stale marker: the backup it protected is gone (operator restored
-      // it over loc but forgot the marker, per the abort message's
-      // recipe). Nothing left to protect — clear it and proceed.
+    val (hasLoc, hasTmp, hasBak, hasMarker) =
+      (fs.exists(loc), fs.exists(tmp), fs.exists(bak), fs.exists(marker))
+    val pinned = hasMarker && hasBak
+    require(!pinned || at == AfterRebuild,
+      s"fact compact: $marker marks the live $loc as a count-drifted compact " +
+        s"rewrite and the backup $bak is the only adjudicated-good copy — a " +
+        "compacting run will not drop it while the marker exists. Either " +
+        s"restore $bak over $loc and delete the marker, or verify the current " +
+        "table (a load rebuilds it from fresh staging) and delete marker + " +
+        "backup, then re-run")
+    if (at == BeforeStaging) return false
+    if (hasMarker && !hasBak) {
       log.warn(s"fact compact: dropping stale marker $marker (no backup present)")
       fs.delete(marker, false)
     }
-    if (fs.exists(bak)) {
-      require(!fs.exists(marker),
-        s"fact compact: $marker marks the live $loc as a count-drifted " +
-          s"rewrite — the backup $bak is the only good copy and this sweep " +
-          s"will not drop it while the marker exists. Restore $bak over " +
-          s"$loc, delete $marker, then re-run")
-      if (!fs.exists(loc)) {
-        require(fs.exists(tmp), s"fact compact: a crashed swap left $bak " +
-          s"but neither $loc nor $tmp — restore $bak to $loc manually")
-        require(fs.rename(tmp, loc),
-          s"fact compact: recovery rename $tmp -> $loc failed")
-        fs.delete(bak, true)
-        spark.sql(s"MSCK REPAIR TABLE $table SYNC PARTITIONS")
-        spark.sql(s"REFRESH TABLE $table")
-        log.warn(s"fact compact: completed a crashed swap for $table " +
-          s"($tmp -> $loc)")
-        // The recovered tmp IS the finished compacted layout — re-running
-        // the rewrite on it would be a full redundant table copy.
-        return
-      }
+    val finishSwap = hasBak && !hasLoc && !pinned
+    if (pinned)
+      log.warn(s"fact compact: KEEPING $bak — $marker marks it as the good " +
+        s"copy of a count-drifted rewrite. $table was just rebuilt from fresh " +
+        "staging, so the live table is authoritative again; once verified, " +
+        "delete the marker and the backup (or restore the backup first if " +
+        "staging was wrong)")
+    else if (finishSwap) {
+      require(hasTmp, s"fact compact: a crashed swap left $bak but neither " +
+        s"$loc nor $tmp — restore $bak to $loc manually")
+      require(fs.rename(tmp, loc), s"fact compact: recovery rename $tmp -> $loc failed")
+      fs.delete(bak, true)
+      resync(spark, table)
+      log.warn(s"fact compact: completed a crashed swap for $table ($tmp -> $loc)")
+    } else if (hasBak) {
       log.warn(s"fact compact: dropping stale backup $bak (live table present)")
       fs.delete(bak, true)
-      spark.sql(s"MSCK REPAIR TABLE $table SYNC PARTITIONS")
-      spark.sql(s"REFRESH TABLE $table")
+      resync(spark, table)
     }
-    if (fs.exists(tmp)) fs.delete(tmp, true)
+    if (hasTmp && !finishSwap) {
+      log.warn(s"fact compact: deleting stale compaction copy $tmp")
+      fs.delete(tmp, true)
+    }
+    finishSwap
+  }
+
+  /** Re-sync the catalog's partitions and cached file listing after the
+    * live dir was swapped under an unchanged catalog entry. */
+  private def resync(spark: SparkSession, table: String): Unit = {
+    spark.sql(s"MSCK REPAIR TABLE $table SYNC PARTITIONS")
+    spark.sql(s"REFRESH TABLE $table")
+  }
+
+  /** Rewrite `table` once into the canonical [[Relational.clustered]]
+    * layout (`Relational.compactClustered`) and swap it in place. The
+    * swap is two renames around the fresh copy — old → `.pre-compact`,
+    * fresh → live — so a COMPLETE data set exists on disk at every
+    * instant, though not necessarily at the live location: a crash
+    * between the renames leaves it at `.pre-compact`/`.compact-tmp`, and
+    * [[sweepResidue]] (run first here, or after the next load's rebuild)
+    * heals that state deterministically rather than requiring manual
+    * surgery. Scratch peak is 2× the table for the rewrite's duration —
+    * the same src+dst the rewrite itself needs, so the backup adds no new
+    * high-water mark. The catalog entry is untouched (same managed
+    * location, same partition values); [[resync]] points metadata and the
+    * cached file listing at the swapped files. The backup is deleted only
+    * after the post-swap row-count validation passes — on a count drift
+    * the require fires with the backup still on disk, so restoration is a
+    * rename, not a rebuild.
+    *
+    * Returns whether the table now holds a fresh single cluster set:
+    * true after the rewrite or after finishing a crashed swap, false when
+    * the scratch guard skipped the pass.
+    */
+  private[warehouse] def compactInPlace(spark: SparkSession, table: String,
+                                        minFreeFactor: Double = MinFreeFactor): Boolean = {
+    // The recovered tmp IS the finished compacted layout — re-running the
+    // rewrite on it would be a full redundant table copy.
+    if (sweepResidue(spark, table, BeforeCompact)) return true
+    val (loc, tmp, bak, fs) = compactPaths(spark, table)
+    val marker = compactInvalidMarker(loc)
     // Scratch guard (estimate the need, refuse LOUDLY when it does not
     // fit, run the correct fallback): before the swap frees the old copy the
     // rewrite holds the tmp copy (~1× table, on the TABLE's filesystem)
@@ -447,19 +433,16 @@ object FactLoad {
         f"table ${tableBytes / 1e9}%.1f GB = ${need / 1e9}%.1f GB needed " +
         "for the rewrite + swap; the k-sliced layout stays (correct, " +
         "k cluster sets per station dir) — free scratch and re-run")
-      return
+      return false
     }
-    // Read through the CATALOG, not the path: a path read re-infers the
-    // partition column's type from the dir names (a numeric-looking
-    // station set would re-type the string column), the table read keeps
-    // the declared schema.
+    // Read through the CATALOG, not the path: a numeric-looking station
+    // set would re-type the string partition column.
     val n = Relational.compactClustered(spark.table(table), tmp.toString,
-      "IncidentStationGround", Seq("DateOfCall", "NotionalCost"), None)
+      "IncidentStationGround", Seq("DateOfCall", "NotionalCost"))
     require(fs.rename(loc, bak), s"fact compact: rename $loc -> $bak failed")
     require(fs.rename(tmp, loc), s"fact compact: rename $tmp -> $loc failed " +
       s"— the pre-compact table is intact at $bak")
-    spark.sql(s"MSCK REPAIR TABLE $table SYNC PARTITIONS")
-    spark.sql(s"REFRESH TABLE $table")
+    resync(spark, table)
     // Validate BEFORE dropping the backup: the count is read-only, so
     // keeping bak a few seconds longer adds no high-water mark, and if
     // the count drifted the backup is the only recovery copy — deleting
@@ -468,9 +451,9 @@ object FactLoad {
     val after = spark.table(table).count()
     if (after != n) {
       // Stamp the marker BEFORE aborting: without it, bak && loc is the
-      // state the recovery sweep above reads as "cleanup died — drop the
-      // backup", and a blind re-run would delete the only good copy. A
-      // failed marker write is logged but must not mask the drift abort.
+      // state sweepResidue reads as "cleanup died — drop the backup", and
+      // a blind re-run would delete the only good copy. A failed marker
+      // write is logged but must not mask the drift abort.
       try fs.create(marker, true).close()
       catch { case e: Throwable => log.error(
         s"fact compact: could not stamp $marker — a blind re-run's " +
@@ -484,6 +467,7 @@ object FactLoad {
     fs.delete(bak, true)
     log.info(s"fact compact: $table re-clustered in place ($n rows, single " +
       "cluster set per station dir)")
+    true
   }
 
   private val log = org.slf4j.LoggerFactory.getLogger(getClass)

@@ -299,8 +299,8 @@ object Jobs {
   /** Catalog loads: enforce the dimension's declared column order/types via
     * an explicit projection (the Scala-idiomatic equivalent of the
     * reference's positional RDD round trip — SURVEY §1.3), cluster with
-    * repartitionByRange+sortWithinPartitions (the Z-ORDER stand-in), and
-    * saveAsTable (reference: etl/load/load_*_dim.py).
+    * [[Relational.clustered]] (the Z-ORDER stand-in), and saveAsTable
+    * (reference: etl/load/load_*_dim.py).
     */
   def loadDimTable(spark: SparkSession, inPath: String, table: String,
                    columns: Seq[(String, String)], partitionBy: Option[String],
@@ -309,17 +309,12 @@ object Jobs {
     var df = spark.read.parquet(inPath).drop(dropCols: _*)
     if (distinct) df = df.distinct()
     df = df.select(columns.map { case (from, to) => col(from).as(to) }: _*)
-    // The partition column LEADS the range/sort key (same alignment as
-    // FactLoad's fact write): otherwise the file committer's required
-    // ordering on the partition column re-sorts each task's rows and the
-    // clusterBy order inside every partition dir is lost. One range
-    // partition: every dimension is bounded by the date and ward grid, far
-    // below `Relational.rowSizedPartitions`' 250k rows per task, so this is
-    // one globally-ordered file per partition dir (what OPTIMIZE ZORDER on
-    // a dim means) with no sizing `count()` job.
-    val keyCols = (partitionBy.toSeq ++ clusterBy).distinct.map(col)
-    val clustered = df.repartitionByRange(1, keyCols: _*).sortWithinPartitions(keyCols: _*)
-    val writer = clustered.write.mode("overwrite").format("parquet")
+    // One range partition: every dimension is bounded by the date and ward
+    // grid, far below `Relational.rowSizedPartitions`' 250k rows per task,
+    // so this is one globally-ordered file per partition dir (what OPTIMIZE
+    // ZORDER on a dim means) with no sizing `count()` job.
+    val writer = Relational.clustered(df, partitionBy, clusterBy, partitions = 1)
+      .write.mode("overwrite").format("parquet")
     Relational.prepareManagedOverwrite(spark, table)
     partitionBy.fold(writer)(p => writer.partitionBy(p)).saveAsTable(table)
     // K6: pin small dimension tables in the block cache for the fact-build

@@ -189,7 +189,7 @@ class ZorderSpec extends SparkSpec {
     assert(before > 2.0, f"sliced fixture should overlap ~3 cluster sets, got $before%.2f")
     // same partition count as each slice's append: the gain below is the
     // cluster-set merge, not a file-count change
-    val n = Relational.compactClustered(spark, src, dst, "part", Seq("d"),
+    val n = Relational.compactClustered(spark.read.parquet(src), dst, "part", Seq("d"),
       partitions = Some(6))
     assert(n == 30000)
     // exact multiset equality: compaction is a LAYOUT operation only

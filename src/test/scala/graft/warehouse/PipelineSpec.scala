@@ -342,15 +342,13 @@ class PipelineSpec extends SparkSpec {
       assert(sliced.sameElements(unsliced),
         "sliced fact build diverged from the unsliced table")
       // a sliced load prunes what it consumed: the cleansed input once
-      // staged, each staging slice once appended
+      // staged, each staging slice once appended, then the staging root
       import org.apache.hadoop.fs.Path
       val cleanP = new Path(clean)
       val fs = cleanP.getFileSystem(spark.sparkContext.hadoopConfiguration)
       assert(!fs.exists(cleanP), s"the consumed cleansed input $clean was left behind")
       val staging = new Path(cleanP.getParent, "fact-staging.parquet")
-      val slices = if (!fs.exists(staging)) Seq.empty
-        else fs.listStatus(staging).map(_.getPath.getName).filter(_.startsWith("slice-")).toSeq
-      assert(slices.isEmpty, s"staging slices left behind: $slices")
+      assert(!fs.exists(staging), s"the staging root $staging was left behind")
     } finally spark.sql("DROP TABLE IF EXISTS lfb_call_sliced")
   }
 
@@ -403,7 +401,8 @@ class PipelineSpec extends SparkSpec {
       // An impossible free-space demand forces the guard: compaction is
       // optional layout work, so it must return with the k-sliced
       // (correct, multi-cluster-set) table in place.
-      FactLoad.compactInPlace(spark, "lfb_call_noroom", minFreeFactor = 1e12)
+      assert(!FactLoad.compactInPlace(spark, "lfb_call_noroom", minFreeFactor = 1e12),
+        "the scratch guard did not report the skipped pass")
       assert(sortedRows("lfb_call_noroom").sameElements(unsliced), "guard-skipped load diverged")
       // the sliced layout is still there: some station dir holds >1 file
       import org.apache.hadoop.fs.Path
@@ -452,6 +451,37 @@ class PipelineSpec extends SparkSpec {
       assert(!fs.exists(bak2) && !fs.exists(tmp2),
         "non-compacting load left crashed-swap residue behind")
     } finally spark.sql("DROP TABLE IF EXISTS lfb_call_heal")
+  }
+
+  test("compaction finishes a crashed swap from the complete tmp copy") {
+    ranOnce
+    val unsliced = sortedRows("lfb_call")
+    import org.apache.hadoop.fs.Path
+    val table = "lfb_call_swap"
+    try {
+      loadFact(table, FactLoad.Plan(2, compact = true))
+      val (loc, tmp, bak, fs) = FactLoad.compactPaths(spark, table)
+      def parquetFiles(dir: Path): Set[String] = {
+        val it = fs.listFiles(dir, true)
+        Iterator.continually(it).takeWhile(_.hasNext).map(_.next().getPath)
+          .filter(_.getName.endsWith(".parquet"))
+          .map(_.toUri.getPath.stripPrefix(dir.toUri.getPath)).toSet
+      }
+      // the state a crash between the swap's two renames leaves: a
+      // complete fresh copy at tmp, the old table at bak, no live dir
+      graft.ops.Relational.compactClustered(spark.table(table), tmp.toString,
+        "IncidentStationGround", Seq("DateOfCall", "NotionalCost"))
+      val fresh = parquetFiles(tmp)
+      assert(fresh.nonEmpty)
+      assert(fs.rename(loc, bak))
+      assert(FactLoad.compactInPlace(spark, table),
+        "finishing the crashed swap must report the table as rewritten")
+      assert(fs.exists(loc), "the swap was not finished")
+      assert(!fs.exists(bak) && !fs.exists(tmp), "the swap left its backup or tmp copy")
+      assert(parquetFiles(loc) == fresh,
+        "the recovery rewrote the table again instead of adopting the tmp copy")
+      assert(sortedRows(table).sameElements(unsliced), "recovered table diverged")
+    } finally spark.sql(s"DROP TABLE IF EXISTS $table")
   }
 
   test("count-drift marker pins the backup: compacting sweep refuses, non-compacting sweep keeps it") {
@@ -541,7 +571,7 @@ class PipelineSpec extends SparkSpec {
     assert(a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty)
   }
 
-  test("fact load fails fast, naming the pruneConsumed contract, when the cleansed input is gone") {
+  test("fact load fails fast: a sliced load prunes its consumed input") {
     // The guard fires before any staging work or deletion, so no pipeline
     // state is needed — dummy paths never get read.
     val gone = base.resolve("never-written.parquet").toString
