@@ -201,14 +201,6 @@ object Bench {
     canaryReference(refPath, "_refCpus").forall(rc =>
       sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toIntOption.contains(rc.toInt))
 
-  /** Sentinel re-run, best-of-N: run `attempt` up to `max` times, stopping
-    * early at the first run that clears `bar`; adjudicate on the MIN of
-    * the successful runs (for a fixed workload the minimum is the
-    * contention-robust statistic — r18's two `sentinelFailed` marks both
-    * came from a SINGLE contended re-run on a box running 2.3x slow).
-    * Returns (min of ok runs, or -1 if every attempt crashed; attempts
-    * taken).
-    */
   private[graft] def j3(d: Double): String =
     BigDecimal(d).setScale(3, BigDecimal.RoundingMode.HALF_UP).toString
 
@@ -277,6 +269,14 @@ object Bench {
       s""""ung":$unguarded,""" +
       s""""fail":$failedJson,"sf":"$sfDir","queries":$qs}"""
 
+  /** Sentinel re-run, best-of-N: run `attempt` up to `max` times, stopping
+    * early at the first run that clears `bar`; adjudicate on the MIN of
+    * the successful runs (for a fixed workload the minimum is the
+    * contention-robust statistic — r18's two `sentinelFailed` marks both
+    * came from a SINGLE contended re-run on a box running 2.3x slow).
+    * Returns (min of ok runs, or -1 if every attempt crashed; attempts
+    * taken).
+    */
   private[graft] def rerunBestOf(bar: Double, max: Int)
                                 (attempt: () => (Double, Boolean)): (Double, Int) = {
     val runs = scala.collection.mutable.ArrayBuffer[(Double, Boolean)]()

@@ -80,6 +80,12 @@ object Checks {
     require(missing == 0, "referentialIntegrity", s"$missing $fk values missing from dim.$pk")
   }
 
+  /** The credible epoch window (shared by `epochRangeUs` and the
+    * streaming ingest gate's per-file variant).
+    */
+  val EpochLoUs: Long = 946684800000000L   // 2000-01-01T00:00Z
+  val EpochHiUs: Long = 4102444800000000L  // 2100-01-01T00:00Z
+
   /** Event-time sanity: every decoded epoch-µs value lands in a credible
     * epoch window (default 2000-01-01 .. 2100-01-01). This is the
     * VALUE-level companion to the schema dispatch in `Tables.eventTimeUs`:
@@ -91,12 +97,6 @@ object Checks {
     * the driver) rather than a per-row raise_error branch, which would sit
     * inside whole-stage codegen on every downstream read.
     */
-  /** The credible epoch window (shared by `epochRangeUs` and the
-    * streaming ingest gate's per-file variant).
-    */
-  val EpochLoUs: Long = 946684800000000L   // 2000-01-01T00:00Z
-  val EpochHiUs: Long = 4102444800000000L  // 2100-01-01T00:00Z
-
   def epochRangeUs(df: DataFrame, tsUsCol: String,
                    loUs: Long = EpochLoUs,
                    hiUs: Long = EpochHiUs): Either[Violation, Unit] = {

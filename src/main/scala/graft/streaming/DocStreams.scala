@@ -8,7 +8,8 @@ import graft.ops.TextOps
 /** Structured Streaming over the documents table: the ingest-time near-dup
   * screen — the streaming twin of the batch d8 gate, and the shape a
   * production training-corpus ingest actually runs (each arriving batch is
-  * checked against everything already accepted, BEFORE it lands).
+  * checked against everything already accepted, BEFORE it lands). Every
+  * ingest here runs on the `Landings` recipe, which owns exactly-once.
   */
 object DocStreams {
 
@@ -30,17 +31,8 @@ object DocStreams {
     *      cost tracks the batch × band occupancy in history, never a
     *      corpus rescan, and the band key is the shuffle key,
     *   3. appends its signatures to the history table and its flags to
-    *      the flag log.
-    *
-    * Exactly-once across kill-and-restart WITHOUT relying on sink
-    * transactionality: both writes go to a `batch=<id>` subdirectory in
-    * OVERWRITE mode, so a batch re-executed after a crash mid-write
-    * replaces its own partial output instead of duplicating it; and the
-    * history read excludes partitions with `batch >= current id`
-    * (partition-pruned at the source), so a re-executed batch can never
-    * see its own half-written signatures and flag documents as duplicates
-    * of themselves. The checkpoint's file log pins which source files form
-    * which batch id, exactly as in `incrementalIngest`.
+    *      the flag log, both as `Landings` batches; the screen reads only
+    *      history batches committed below its own id.
     *
     * History semantics match batch d8: EVERY screened signature enters
     * history (flagged or not) — the screen marks duplicates, the corpus
@@ -54,66 +46,34 @@ object DocStreams {
     */
   def incrementalDedup(spark: SparkSession, srcDir: String,
                        historyDir: String, flagsDir: String,
-                       checkpointDir: String, maxHamming: Int = 8): Unit = {
-    val q = spark.readStream.schema(docSchema).parquet(srcDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // two consumers (flags + history append) — cache so the signature
-        // aggregate runs once, released before the batch commits
-        val sigs = TextOps.simhashAggRows(batch, "doc_id", "text")
-          .withColumnRenamed("simhash", "sh")
-          .persist()
-        val fs = org.apache.hadoop.fs.FileSystem.get(
-          new java.net.URI(historyDir), spark.sparkContext.hadoopConfiguration)
-        val histRoot = new org.apache.hadoop.fs.Path(historyDir)
-        val hasHistory = fs.exists(histRoot) && fs.listStatus(histRoot)
-          .exists(_.getPath.getName.startsWith("batch="))
-        val flags =
-          if (!hasHistory)
-            sigs.select(col("doc_id"), lit(false).as("is_dup_of_history"))
-          else {
-            val hist = spark.read.parquet(historyDir)
-              .where(col("batch") < batchId) // never our own re-run's output
-              .select(col("doc_id"), col("sh"))
-            val dupIds = TextOps.simhashBands60(sigs, "doc_id", "sh").as("f")
-              .join(TextOps.simhashBands60(hist, "doc_id", "sh").as("h"),
-                col("f.bidx") === col("h.bidx") && col("f.bval") === col("h.bval"))
-              .where(bit_count(col("f.sh").bitwiseXOR(col("h.sh"))) <= maxHamming)
-              .select(col("f.doc_id")).distinct()
-              .withColumn("dup", lit(true))
-            sigs.join(dupIds, Seq("doc_id"), "left")
-              .select(col("doc_id"),
-                coalesce(col("dup"), lit(false)).as("is_dup_of_history"))
-          }
-        try {
-          flags.write.mode("overwrite").parquet(s"$flagsDir/batch=$batchId")
-          sigs.write.mode("overwrite").parquet(s"$historyDir/batch=$batchId")
-        } finally sigs.unpersist()
-        ()
+                       checkpointDir: String, maxHamming: Int = 8): Unit =
+    Landings.each(spark, docSchema, srcDir, checkpointDir) { (batch, batchId) =>
+      // two consumers (flags + history append) — cache so the signature
+      // aggregate runs once, released before the batch commits
+      val sigs = TextOps.simhashAggRows(batch, "doc_id", "text")
+        .withColumnRenamed("simhash", "sh")
+        .persist()
+      val flags = Landings.committed(spark, historyDir, below = batchId) match {
+        case None =>
+          sigs.select(col("doc_id"), lit(false).as("is_dup_of_history"))
+        case Some(h) =>
+          val hist = h.select(col("doc_id"), col("sh"))
+          val dupIds = TextOps.simhashBands60(sigs, "doc_id", "sh").as("f")
+            .join(TextOps.simhashBands60(hist, "doc_id", "sh").as("h"),
+              col("f.bidx") === col("h.bidx") && col("f.bval") === col("h.bval"))
+            .where(bit_count(col("f.sh").bitwiseXOR(col("h.sh"))) <= maxHamming)
+            .select(col("f.doc_id")).distinct()
+            .withColumn("dup", lit(true))
+          sigs.join(dupIds, Seq("doc_id"), "left")
+            .select(col("doc_id"),
+              coalesce(col("dup"), lit(false)).as("is_dup_of_history"))
       }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
+      try {
+        flags.write.mode("overwrite").parquet(s"$flagsDir/batch=$batchId")
+        sigs.write.mode("overwrite").parquet(s"$historyDir/batch=$batchId")
+      } finally sigs.unpersist()
+    }
 
-  /** The accumulated flag log (doc_id, is_dup_of_history, batch). */
-  def readFlags(spark: SparkSession, flagsDir: String): DataFrame =
-    spark.read.parquet(flagsDir)
-
-  /** Streaming quality screen + mixture selection — the ingest-time twin
-    * of tp1's middle stages. Each micro-batch runs the SAME per-row
-    * functions the batch manifest uses (`TextOps.qualityScreen` →
-    * `TextOps.mixtureSelect`): both are projections/filters with no
-    * cross-row state, so batch and stream agree bit-for-bit by
-    * construction — the spec asserts it anyway. The corpus-global piece
-    * (the per-language threshold table) is TRAINED OFFLINE and passed in:
-    * the production split between a periodically-refreshed statistic and
-    * a map-only per-row decision at ingest. Accepted rows land in a
-    * `batch=<id>` subdirectory in overwrite mode, so a crashed batch's
-    * re-execution replaces its own partial output (same exactly-once
-    * recipe as `incrementalDedup`).
-    */
   /** Streaming benchmark decontamination — the ingest-time twin of the
     * batch x1/x1b gates: every arriving batch is checked for eval-set
     * 3-gram overlap BEFORE it lands, so contaminated documents never
@@ -129,53 +89,46 @@ object DocStreams {
     *      gates use (`TextOps.shingleRows` — bit-identical hashes),
     *   3. the exact join on Bloom survivors removes false positives, so
     *      per-doc flags provably equal x1's exact semi-join semantics,
-    *   4. flags land in a `batch=<id>` subdirectory in overwrite mode —
-    *      the same exactly-once recipe as `incrementalDedup`.
+    *   4. flags land as a `Landings` batch.
     */
   def decontaminateIngest(spark: SparkSession, srcDir: String,
                           evalGrams: DataFrame, flagsDir: String,
                           checkpointDir: String): Unit = {
     val ev = evalGrams.select(col("s")).distinct().persist()
     val bloom = ev.stat.bloomFilter("s", math.max(ev.count(), 1L), 0.01)
-    try {
-      val q = spark.readStream.schema(docSchema).parquet(srcDir)
-        .writeStream
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          val grams = TextOps.shingleRows(batch, "doc_id", "text")
-          val hits = grams
-            .where(graft.functions.BloomMightContainF(col("s"), bloom))
-            .join(ev, "s")
-            .groupBy("doc_id").agg(count(lit(1)).as("c"))
-          grams.select(col("doc_id"), col("n")).distinct()
-            .join(hits, Seq("doc_id"), "left")
-            .select(col("doc_id"), col("n").cast("long").as("n_shingles"),
-              coalesce(col("c"), lit(0L)).as("n_contaminated"),
-              (coalesce(col("c"), lit(0L)).cast("double") / col("n"))
-                .as("contamination_frac"),
-              (coalesce(col("c"), lit(0L)) > 0).as("is_contaminated"))
-            .write.mode("overwrite").parquet(s"$flagsDir/batch=$batchId")
-          ()
-        }
-        .option("checkpointLocation", checkpointDir)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+    try Landings.each(spark, docSchema, srcDir, checkpointDir) { (batch, batchId) =>
+      val grams = TextOps.shingleRows(batch, "doc_id", "text")
+      val hits = grams
+        .where(graft.functions.BloomMightContainF(col("s"), bloom))
+        .join(ev, "s")
+        .groupBy("doc_id").agg(count(lit(1)).as("c"))
+      grams.select(col("doc_id"), col("n")).distinct()
+        .join(hits, Seq("doc_id"), "left")
+        .select(col("doc_id"), col("n").cast("long").as("n_shingles"),
+          coalesce(col("c"), lit(0L)).as("n_contaminated"),
+          (coalesce(col("c"), lit(0L)).cast("double") / col("n"))
+            .as("contamination_frac"),
+          (coalesce(col("c"), lit(0L)) > 0).as("is_contaminated"))
+        .write.mode("overwrite").parquet(s"$flagsDir/batch=$batchId")
     } finally { ev.unpersist(); () }
   }
 
+  /** Streaming quality screen + mixture selection — the ingest-time twin
+    * of tp1's middle stages. Each micro-batch runs the SAME per-row
+    * functions the batch manifest uses (`TextOps.qualityScreen` →
+    * `TextOps.mixtureSelect`): both are projections/filters with no
+    * cross-row state, so batch and stream agree bit-for-bit by
+    * construction — the spec asserts it anyway. The corpus-global piece
+    * (the per-language threshold table) is TRAINED OFFLINE and passed in:
+    * the production split between a periodically-refreshed statistic and
+    * a map-only per-row decision at ingest. Accepted rows land as a
+    * `Landings` batch.
+    */
   def qualityMixtureIngest(spark: SparkSession, srcDir: String,
                            thresholds: DataFrame, acceptDir: String,
-                           checkpointDir: String): Unit = {
-    val q = spark.readStream.schema(docSchema).parquet(srcDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        TextOps.mixtureSelect(TextOps.qualityScreen(batch), thresholds)
-          .write.mode("overwrite").parquet(s"$acceptDir/batch=$batchId")
-        ()
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
+                           checkpointDir: String): Unit =
+    Landings.each(spark, docSchema, srcDir, checkpointDir) { (batch, batchId) =>
+      TextOps.mixtureSelect(TextOps.qualityScreen(batch), thresholds)
+        .write.mode("overwrite").parquet(s"$acceptDir/batch=$batchId")
+    }
 }

@@ -285,42 +285,34 @@ object EventStreams {
     * reduces to its algebraic aggregate state (`Relational.aggState` on
     * the per-type value-cents measure) and merges with the prior
     * maintained state (`mergeAggStates`) — the keys-sized materialized
-    * view updated at ingest, history never re-read. Exactly-once as in
-    * the other ingest twins: the merged FULL state lands under
-    * `batch=<id>` in overwrite mode (a re-executed batch rebuilds from
-    * `batch < id` and replaces its own partial write), so per-batch cost
-    * is O(batch) + a keys-sized merge regardless of history length, and
-    * the state directory's latest entry IS the current rollup
-    * (`readRollup`). At 100 TB this is the view-maintenance shape: the
-    * corpus streams through once; only types×measures rows persist.
+    * view updated at ingest, history never re-read. The merged FULL state
+    * lands as a `Landings` batch, rebuilt from the newest committed
+    * generation below its own id, so per-batch cost is O(batch) + a
+    * keys-sized merge regardless of history length, and the newest
+    * committed generation IS the current rollup (`readRollup`). At 100 TB
+    * this is the view-maintenance shape: the corpus streams through once;
+    * only types×measures rows persist.
     */
   def rollupIngest(spark: SparkSession, srcDir: String, stateDir: String,
-                   checkpointDir: String): Unit = {
-    val q = spark.readStream.schema(eventSchema).parquet(srcDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val prevId = guardedPrevId("rollupIngest", stateDir, batchId,
-          checkpointDir, stateIds(spark, stateDir))
-        val st = graft.ops.Relational.aggState(
-          batch.select(col("event_type"),
-            round(col("value") * 100, 0).cast("long").as("cents")),
-          Seq("event_type"), Seq("cents"))
-        val merged = prevId.map(id => spark.read.parquet(s"$stateDir/batch=$id")) match {
-          case Some(prev) => graft.ops.Relational.mergeAggStates(
-            Seq(prev, st), Seq("event_type"), Seq("cents"))
-          case None => st
-        }
-        merged.write.mode("overwrite").parquet(s"$stateDir/batch=$batchId")
-        pruneSuperseded(spark, stateDir, batchId, prevId)
+                   checkpointDir: String): Unit =
+    Landings.each(spark, eventSchema, srcDir, checkpointDir) { (batch, batchId) =>
+      val prevId = guardedPrevId(stateDir, batchId, checkpointDir,
+        Landings.committedIds(spark, stateDir))
+      val st = graft.ops.Relational.aggState(
+        batch.select(col("event_type"),
+          round(col("value") * 100, 0).cast("long").as("cents")),
+        Seq("event_type"), Seq("cents"))
+      val merged = prevId.map(id => spark.read.parquet(s"$stateDir/batch=$id")) match {
+        case Some(prev) => graft.ops.Relational.mergeAggStates(
+          Seq(prev, st), Seq("event_type"), Seq("cents"))
+        case None => st
       }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
+      merged.write.mode("overwrite").parquet(s"$stateDir/batch=$batchId")
+      pruneSuperseded(spark, stateDir, batchId, prevId)
+    }
 
-  /** The current maintained rollup: the newest `batch=<id>` state table.
-    * Fails if the ingest has never run (no state exists to read).
+  /** The current maintained rollup: the newest committed `batch=<id>` state
+    * table. Fails if the ingest has never committed one.
     *
     * Concurrent-prune handling (the race `pruneSuperseded` documents): a
     * reader that resolved a state id just before an ingest run can find
@@ -344,14 +336,13 @@ object EventStreams {
   private[graft] final def readRollupFrom(spark: SparkSession, stateDir: String,
                                           startAt: Option[Long],
                                           attempts: Int = 0): DataFrame = {
-    val id = startAt.orElse(stateIds(spark, stateDir).maxOption).getOrElse(
+    val ids = Landings.committedIds(spark, stateDir)
+    val id = startAt.orElse(ids.maxOption).getOrElse(
       throw new IllegalStateException(
         s"readRollup: no rollup state under $stateDir — run rollupIngest first"))
-    val p = new org.apache.hadoop.fs.Path(s"$stateDir/batch=$id")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) spark.read.parquet(p.toString)
+    if (ids.contains(id)) spark.read.parquet(s"$stateDir/batch=$id")
     else {
-      val newest = stateIds(spark, stateDir).maxOption
+      val newest = ids.maxOption
       if (newest.exists(_ > id) && attempts < 3)
         readRollupFrom(spark, stateDir, newest, attempts + 1)
       else throw new IllegalStateException(
@@ -362,20 +353,19 @@ object EventStreams {
     }
   }
 
-  /** Shared exactly-once plumbing for the snapshot-per-batch ingest twins
-    * (rollupIngest/scd2Ingest). Stale-state guard: a state id AHEAD of the
-    * incoming batch means the checkpoint was reset (ids restart at 0)
-    * while stateDir survived — the merge would silently exclude the
-    * high-id state while readers keep returning it. That split-brain has
-    * no safe automatic resolution; fail loudly. Returns the newest id
-    * strictly below `batchId` (a re-executed batch never merges against
-    * its own partial output).
+  /** Stale-state guard for rollupIngest over its committed generation
+    * `ids`: a state id AHEAD of the incoming batch means the checkpoint
+    * was reset (ids restart at 0) while stateDir survived — the merge
+    * would silently exclude the high-id state while readers keep
+    * returning it. That split-brain has no safe automatic resolution;
+    * fail loudly. Returns the newest id strictly below `batchId` (a
+    * re-executed batch never merges against its own partial output).
     */
-  private def guardedPrevId(op: String, stateDir: String, batchId: Long,
+  private def guardedPrevId(stateDir: String, batchId: Long,
                             checkpointDir: String, ids: Seq[Long]): Option[Long] = {
     val ahead = ids.filter(_ > batchId)
     if (ahead.nonEmpty) throw new IllegalStateException(
-      s"$op: state batch=${ahead.max} under $stateDir is ahead " +
+      s"rollupIngest: state batch=${ahead.max} under $stateDir is ahead " +
         s"of incoming batch $batchId — checkpoint $checkpointDir was " +
         "reset while state survived; delete both or restore the checkpoint")
     ids.filter(_ < batchId).maxOption
@@ -399,21 +389,10 @@ object EventStreams {
                               batchId: Long, prevId: Option[Long]): Unit = {
     val fs = new org.apache.hadoop.fs.Path(stateDir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    stateIds(spark, stateDir)
+    Landings.batchIds(spark, stateDir)
       .filter(id => id < batchId && !prevId.contains(id))
       .foreach(id => fs.delete(
         new org.apache.hadoop.fs.Path(s"$stateDir/batch=$id"), true))
-  }
-
-  private def stateIds(spark: SparkSession, stateDir: String): Seq[Long] = {
-    val p = new org.apache.hadoop.fs.Path(stateDir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) Seq.empty
-    else fs.listStatus(p).iterator
-      .map(_.getPath.getName)
-      .collect { case n if n.startsWith("batch=") =>
-        n.stripPrefix("batch=").toLong }
-      .toSeq
   }
 
   /** Streaming twin of the scd2 gate: the user-tier HISTORY DIMENSION as a
@@ -430,10 +409,11 @@ object EventStreams {
     * with the 7.5M-row history; a small landing now leaves the other
     * buckets' files untouched. A tiny `manifest.json` per committed batch
     * records, for every bucket, which `batch=<id>` directory holds its
-    * current snapshot; the manifest write is the COMMIT POINT, so
-    * exactly-once survives as before: a re-executed batch recomputes the
-    * same touched buckets from the previous manifest (ids strictly below
-    * its own) and overwrites its own partial output, manifest last.
+    * current snapshot. The state runs on `Landings.each`, but its commit
+    * point is the manifest write, not `_SUCCESS`: a re-executed batch
+    * recomputes the same touched buckets from the previous manifest (ids
+    * strictly below its own) and overwrites its own partial output,
+    * manifest last.
     *
     * Correctness contract: batches must arrive in per-user event order
     * (the append-mostly landing-zone shape; compression absorbs non-change
@@ -458,135 +438,129 @@ object EventStreams {
   def scd2Ingest(spark: SparkSession, srcDir: String, stateDir: String,
                  checkpointDir: String, buckets: Int = 64): Unit = {
     require(buckets >= 1, s"scd2Ingest needs buckets >= 1, got $buckets")
-    val q = spark.readStream.schema(eventSchema).parquet(srcDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val ids = manifestIds(spark, stateDir)
-        // State GENERATION ids are decoupled from streaming batch ids: the
-        // manifest's `txn` field records the last streaming batch applied
-        // (the Delta-txn-metadata idempotence pattern), so maintenance
-        // commits (`rebucketScd2`) can advance the generation counter
-        // without desynchronizing the checkpoint. Guard + idempotence run
-        // against txn: an incoming batch BELOW the watermark means the
-        // checkpoint was reset while state survived (split-brain, fatal);
-        // EQUAL means the commit landed but the checkpoint marker did not
-        // (crash-recovery replay) — the manifest being the commit point,
-        // the batch is already durable and the replay is a no-op.
-        val prevId = ids.maxOption
-        val prevMan = prevId.map(id => readManifest(spark, stateDir, id))
-        val qid = checkpointQueryId(spark, checkpointDir)
-        prevMan.foreach { m =>
-          if (batchId < m.txn) throw new IllegalStateException(
-            s"scd2Ingest: state under $stateDir was last written by " +
-              s"streaming batch ${m.txn}, ahead of incoming batch $batchId " +
-              s"— checkpoint $checkpointDir was reset while state " +
-              "survived; delete both or restore the checkpoint")
-          // Equal txn is only a safe no-op when the replay comes from the
-          // SAME checkpoint: a reset regenerates the query id AND restarts
-          // batch ids at 0, so with exactly one committed generation a
-          // reset's batch 0 (all files, a superset of the committed one)
-          // would otherwise be silently swallowed as "already applied".
-          if (batchId == m.txn && m.appId != qid) throw new IllegalStateException(
-            s"scd2Ingest: incoming batch $batchId matches the state's txn " +
-              s"watermark but was produced by a different checkpoint " +
-              s"(query $qid vs committed ${m.appId}) — checkpoint " +
-              s"$checkpointDir was reset while state under $stateDir " +
-              "survived; the re-delivered batch is NOT the committed one. " +
-              "Delete the state dir or restore the original checkpoint")
-          require(m.buckets == buckets,
-            s"scd2Ingest: state under $stateDir was built with ${m.buckets} " +
-              s"buckets, cannot ingest with $buckets — keep the bucket count " +
-              "stable for a state dir's lifetime (or run rebucketScd2 first)")
-        }
-        if (!prevMan.exists(_.txn == batchId)) {
-          val genId = prevId.map(_ + 1).getOrElse(batchId)
-          // Same event→(user, tier) extraction as the batch gate.
-          val ev = batch.select(col("user_id"), col("event_id"),
-            graft.Tables.eventTimeUs(batch).as("tus"),
-            graft.ops.Relational.floorDivExact(
-              expr("cast(get_json_object(props, '$.k') as bigint)"), 25L).as("tier"))
-          val bucketCol = bucketOf(buckets)
-          // The touched-bucket set is ≤ `buckets` ints — a driver-safe
-          // collect; the same job's counts size the state write below.
-          val bucketCounts = ev.groupBy(bucketCol.as("b"))
-            .agg(count(lit(1)).as("c")).collect()
-          val touched = bucketCounts.map(_.getInt(0)).sorted
-          val batchRows = bucketCounts.map(_.getLong(1)).sum
-          val evSeen = ev.groupBy(col("user_id"))
-            .agg(max(struct(col("tus"), col("event_id"))).as("m"))
-            .select(col("user_id"), col("m.tus").as("last_us"),
-              col("m.event_id").as("last_eid"))
-          // Prior state for the TOUCHED buckets only — users outside them
-          // cannot appear in this batch by construction of the hash.
-          def prior(kind: String): Seq[String] = prevMan.toSeq.flatMap(m =>
-            touched.flatMap(b => m.entries.get(b)
-              .map(mid => s"$stateDir/batch=$mid/$kind/bucket=$b")))
-          val (segs, seen) = prior("segments") match {
-            case Seq() =>
-              (graft.ops.Relational.scd2Compress(ev), evSeen)
-            case segPaths =>
-              val prevSegs = spark.read.parquet(segPaths: _*)
-              val prevSeen = spark.read.parquet(prior("seen"): _*)
-              val joined = ev.join(prevSeen, Seq("user_id"), "left")
-              val lateRows = joined
-                .where(struct(col("tus"), col("event_id")) <
-                  struct(col("last_us"), col("last_eid")))
-                .select(col("user_id"), col("tus"), col("event_id"))
-                .limit(3).collect()
-              if (lateRows.nonEmpty) throw new IllegalStateException(
-                s"scd2Ingest: batch $batchId contains out-of-order events " +
-                  "(older than a user's maintained watermark) — history cannot " +
-                  "be merged retroactively; reprocess from scratch or fix the " +
-                  s"source ordering. Examples: ${lateRows.mkString(", ")}")
-              // Equal to the watermark = exact re-delivery of the last-seen
-              // event (at-least-once upstream): absorb it instead of wedging
-              // the pipeline — it would merge as a non-change anyway.
-              val evNew = joined.where(col("last_us").isNull ||
-                  struct(col("tus"), col("event_id")) >
-                    struct(col("last_us"), col("last_eid")))
-                .select(col("user_id"), col("event_id"), col("tus"), col("tier"))
-              val newSegs = graft.ops.Relational.scd2Merge(prevSegs, evNew)
-              val newSeen = prevSeen.unionByName(evSeen)
-                .groupBy(col("user_id"))
-                .agg(max(struct(col("last_us"), col("last_eid"))).as("m"))
-                .select(col("user_id"), col("m.last_us").as("last_us"),
-                  col("m.last_eid").as("last_eid"))
-              (newSegs, newSeen)
-          }
-          // Every touched bucket has ≥1 output row (each user in the batch
-          // contributes a segment and a seen row), so partitionBy emits
-          // exactly the touched `bucket=<b>` dirs the manifest points at.
-          // The rewrite's size is touched-bucket HISTORY + landing, not the
-          // landing alone (a backfill-sized batch touching every bucket
-          // rewrites the whole history), so the write is sized by that
-          // bound. Prior rows come from the previous manifest's per-bucket
-          // row stamps — a driver-side map lookup, no Spark job.
-          def priorRows(stamps: Scd2Manifest => Map[Int, Long]): Long =
-            prevMan.fold(0L)(m =>
-              touched.filter(m.entries.contains).map(stamps(m)).sum)
-          bucketAligned(segs.withColumn("bucket", bucketCol),
-              priorRows(_.segRows) + batchRows, buckets)
-            .write.partitionBy("bucket").mode("overwrite")
-            .parquet(s"$stateDir/batch=$genId/segments")
-          bucketAligned(seen.withColumn("bucket", bucketCol),
-              priorRows(_.seenRows) + batchRows, buckets)
-            .write.partitionBy("bucket").mode("overwrite")
-            .parquet(s"$stateDir/batch=$genId/seen")
-          val entries = prevMan.map(_.entries).getOrElse(Map.empty) ++
-            touched.map(_ -> genId)
-          writeManifest(spark, stateDir, genId,
-            Scd2Manifest(buckets, batchId, entries, qid,
-              stampRowsFor(spark, stateDir, genId, "segments", entries,
-                prevMan.map(_.segRows).getOrElse(Map.empty)),
-              stampRowsFor(spark, stateDir, genId, "seen", entries,
-                prevMan.map(_.seenRows).getOrElse(Map.empty)))) // commit point
-          pruneScd2(spark, stateDir, genId, prevId)
-        }
+    Landings.each(spark, eventSchema, srcDir, checkpointDir) { (batch, batchId) =>
+      val ids = manifestIds(spark, stateDir)
+      // State GENERATION ids are decoupled from streaming batch ids: the
+      // manifest's `txn` field records the last streaming batch applied
+      // (the Delta-txn-metadata idempotence pattern), so maintenance
+      // commits (`rebucketScd2`) can advance the generation counter
+      // without desynchronizing the checkpoint. Guard + idempotence run
+      // against txn: an incoming batch BELOW the watermark means the
+      // checkpoint was reset while state survived (split-brain, fatal);
+      // EQUAL means the commit landed but the checkpoint marker did not
+      // (crash-recovery replay) — the manifest being the commit point,
+      // the batch is already durable and the replay is a no-op.
+      val prevId = ids.maxOption
+      val prevMan = prevId.map(id => readManifest(spark, stateDir, id))
+      val qid = checkpointQueryId(spark, checkpointDir)
+      prevMan.foreach { m =>
+        if (batchId < m.txn) throw new IllegalStateException(
+          s"scd2Ingest: state under $stateDir was last written by " +
+            s"streaming batch ${m.txn}, ahead of incoming batch $batchId " +
+            s"— checkpoint $checkpointDir was reset while state " +
+            "survived; delete both or restore the checkpoint")
+        // Equal txn is only a safe no-op when the replay comes from the
+        // SAME checkpoint: a reset regenerates the query id AND restarts
+        // batch ids at 0, so with exactly one committed generation a
+        // reset's batch 0 (all files, a superset of the committed one)
+        // would otherwise be silently swallowed as "already applied".
+        if (batchId == m.txn && m.appId != qid) throw new IllegalStateException(
+          s"scd2Ingest: incoming batch $batchId matches the state's txn " +
+            s"watermark but was produced by a different checkpoint " +
+            s"(query $qid vs committed ${m.appId}) — checkpoint " +
+            s"$checkpointDir was reset while state under $stateDir " +
+            "survived; the re-delivered batch is NOT the committed one. " +
+            "Delete the state dir or restore the original checkpoint")
+        require(m.buckets == buckets,
+          s"scd2Ingest: state under $stateDir was built with ${m.buckets} " +
+            s"buckets, cannot ingest with $buckets — keep the bucket count " +
+            "stable for a state dir's lifetime (or run rebucketScd2 first)")
       }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+      if (!prevMan.exists(_.txn == batchId)) {
+        val genId = prevId.map(_ + 1).getOrElse(batchId)
+        // Same event→(user, tier) extraction as the batch gate.
+        val ev = batch.select(col("user_id"), col("event_id"),
+          graft.Tables.eventTimeUs(batch).as("tus"),
+          graft.ops.Relational.floorDivExact(
+            expr("cast(get_json_object(props, '$.k') as bigint)"), 25L).as("tier"))
+        val bucketCol = bucketOf(buckets)
+        // The touched-bucket set is ≤ `buckets` ints — a driver-safe
+        // collect; the same job's counts size the state write below.
+        val bucketCounts = ev.groupBy(bucketCol.as("b"))
+          .agg(count(lit(1)).as("c")).collect()
+        val touched = bucketCounts.map(_.getInt(0)).sorted
+        val batchRows = bucketCounts.map(_.getLong(1)).sum
+        val evSeen = ev.groupBy(col("user_id"))
+          .agg(max(struct(col("tus"), col("event_id"))).as("m"))
+          .select(col("user_id"), col("m.tus").as("last_us"),
+            col("m.event_id").as("last_eid"))
+        // Prior state for the TOUCHED buckets only — users outside them
+        // cannot appear in this batch by construction of the hash.
+        def prior(kind: String): Seq[String] = prevMan.toSeq.flatMap(m =>
+          touched.flatMap(b => m.entries.get(b)
+            .map(mid => s"$stateDir/batch=$mid/$kind/bucket=$b")))
+        val (segs, seen) = prior("segments") match {
+          case Seq() =>
+            (graft.ops.Relational.scd2Compress(ev), evSeen)
+          case segPaths =>
+            val prevSegs = spark.read.parquet(segPaths: _*)
+            val prevSeen = spark.read.parquet(prior("seen"): _*)
+            val joined = ev.join(prevSeen, Seq("user_id"), "left")
+            val lateRows = joined
+              .where(struct(col("tus"), col("event_id")) <
+                struct(col("last_us"), col("last_eid")))
+              .select(col("user_id"), col("tus"), col("event_id"))
+              .limit(3).collect()
+            if (lateRows.nonEmpty) throw new IllegalStateException(
+              s"scd2Ingest: batch $batchId contains out-of-order events " +
+                "(older than a user's maintained watermark) — history cannot " +
+                "be merged retroactively; reprocess from scratch or fix the " +
+                s"source ordering. Examples: ${lateRows.mkString(", ")}")
+            // Equal to the watermark = exact re-delivery of the last-seen
+            // event (at-least-once upstream): absorb it instead of wedging
+            // the pipeline — it would merge as a non-change anyway.
+            val evNew = joined.where(col("last_us").isNull ||
+                struct(col("tus"), col("event_id")) >
+                  struct(col("last_us"), col("last_eid")))
+              .select(col("user_id"), col("event_id"), col("tus"), col("tier"))
+            val newSegs = graft.ops.Relational.scd2Merge(prevSegs, evNew)
+            val newSeen = prevSeen.unionByName(evSeen)
+              .groupBy(col("user_id"))
+              .agg(max(struct(col("last_us"), col("last_eid"))).as("m"))
+              .select(col("user_id"), col("m.last_us").as("last_us"),
+                col("m.last_eid").as("last_eid"))
+            (newSegs, newSeen)
+        }
+        // Every touched bucket has ≥1 output row (each user in the batch
+        // contributes a segment and a seen row), so partitionBy emits
+        // exactly the touched `bucket=<b>` dirs the manifest points at.
+        // The rewrite's size is touched-bucket HISTORY + landing, not the
+        // landing alone (a backfill-sized batch touching every bucket
+        // rewrites the whole history), so the write is sized by that
+        // bound. Prior rows come from the previous manifest's per-bucket
+        // row stamps — a driver-side map lookup, no Spark job.
+        def priorRows(stamps: Scd2Manifest => Map[Int, Long]): Long =
+          prevMan.fold(0L)(m =>
+            touched.filter(m.entries.contains).map(stamps(m)).sum)
+        bucketAligned(segs.withColumn("bucket", bucketCol),
+            priorRows(_.segRows) + batchRows, buckets)
+          .write.partitionBy("bucket").mode("overwrite")
+          .parquet(s"$stateDir/batch=$genId/segments")
+        bucketAligned(seen.withColumn("bucket", bucketCol),
+            priorRows(_.seenRows) + batchRows, buckets)
+          .write.partitionBy("bucket").mode("overwrite")
+          .parquet(s"$stateDir/batch=$genId/seen")
+        val entries = prevMan.map(_.entries).getOrElse(Map.empty) ++
+          touched.map(_ -> genId)
+        writeManifest(spark, stateDir, genId,
+          Scd2Manifest(buckets, batchId, entries, qid,
+            stampRowsFor(spark, stateDir, genId, "segments", entries,
+              prevMan.map(_.segRows).getOrElse(Map.empty)),
+            stampRowsFor(spark, stateDir, genId, "seen", entries,
+              prevMan.map(_.seenRows).getOrElse(Map.empty)))) // commit point
+        pruneScd2(spark, stateDir, genId, prevId)
+      }
+    }
   }
 
   /** The current maintained SCD2 history — same columns as the batch gate
@@ -812,7 +786,7 @@ object EventStreams {
   private[graft] def manifestIds(spark: SparkSession, stateDir: String): Seq[Long] = {
     val fs = new org.apache.hadoop.fs.Path(stateDir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    stateIds(spark, stateDir).filter(id => fs.exists(manifestFile(stateDir, id)))
+    Landings.batchIds(spark, stateDir).filter(id => fs.exists(manifestFile(stateDir, id)))
   }
 
   /** Generation `id`'s manifest. One missing a field, or whose row stamps
@@ -934,7 +908,7 @@ object EventStreams {
         readManifest(spark, stateDir, id).entries.toSeq
           .map { case (b, mid) => (mid, b) }
       }.toSet
-    stateIds(spark, stateDir).filter(_ < batchId).foreach { id =>
+    Landings.batchIds(spark, stateDir).filter(_ < batchId).foreach { id =>
       val dirLive = live.exists(_._1 == id)
       if (!dirLive && !prevId.contains(id))
         fs.delete(new org.apache.hadoop.fs.Path(s"$stateDir/batch=$id"), true)

@@ -21,7 +21,11 @@ object StreamDemo {
         "sessions" -> EventStreams.sessionize(EventStreams.readEventStream(spark, dir.toString)))) {
       val q = plan.writeStream.format("memory").queryName(name)
         .outputMode("complete").trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination(120000)
+      if (!q.awaitTermination(120000)) {
+        q.stop()
+        throw new IllegalStateException(
+          s"StreamDemo: query $name did not finish within 120 s; stopped it")
+      }
       println(s"== $name: ${spark.table(name).count()} rows")
       spark.table(name).show(5, truncate = false)
     }

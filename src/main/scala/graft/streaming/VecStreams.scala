@@ -32,13 +32,8 @@ object VecStreams {
     *      probed), candidates come from a bucket equi-join (the shuffle
     *      key), and the exact-cosine verify runs on candidates only,
     *   3. appends its bucket/norm rows to the history table and its
-    *      flags to the flag log.
-    *
-    * Exactly-once across kill-and-restart as in DocStreams: both writes
-    * land in `batch=<id>` subdirectories in OVERWRITE mode (a re-executed
-    * batch replaces its own partial output), and the history read
-    * excludes `batch >= current id` so a re-run can never screen a batch
-    * against its own half-written rows.
+    *      flags to the flag log, both as `Landings` batches; the screen
+    *      reads only history batches committed below its own id.
     *
     * Storing the FULL MaxPlanes-wide buckets is what lets the screen
     * widen its active plane count as history grows — the same
@@ -49,74 +44,55 @@ object VecStreams {
     */
   def semanticIngest(spark: SparkSession, srcDir: String,
                      historyDir: String, flagsDir: String,
-                     checkpointDir: String, simThreshold: Double = 0.4): Unit = {
-    val q = spark.readStream.schema(embSchema).parquet(srcDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // two consumers (screen + history append): cache so the 48
-        // hyperplane dots per vector run once, released before commit
-        val sigs = batch.select(col("vec_id"), col("embedding"))
-          .withColumn("bucket",
-            VectorOps.lshBucket(col("embedding"), VectorQueries.planeInts))
-          .withColumn("bucket2",
-            VectorOps.lshBucket(col("embedding"), VectorQueries.planeInts2))
-          .withColumn("bucket3",
-            VectorOps.lshBucket(col("embedding"), VectorQueries.planeInts3))
-          .withColumn("norm", VectorOps.l2Norm(col("embedding")))
-          .persist()
-        val fs = org.apache.hadoop.fs.FileSystem.get(
-          new java.net.URI(historyDir), spark.sparkContext.hadoopConfiguration)
-        val histRoot = new org.apache.hadoop.fs.Path(historyDir)
-        val hasHistory = fs.exists(histRoot) && fs.listStatus(histRoot)
-          .exists(_.getPath.getName.startsWith("batch="))
-        val flags =
-          if (!hasHistory)
-            sigs.select(col("vec_id"), lit(false).as("is_semdup_of_history"))
-          else {
-            val hist = spark.read.parquet(historyDir)
-              .where(col("batch") < batchId) // never our own re-run's output
-            val planes = VectorQueries.adaptivePlanes(hist.count())
-            val masks = VectorQueries.pairMasks(planes,
-              VectorQueries.flipRadius(planes))
-            val bmask = lit((1L << planes) - 1)
-            def candIds(bcol: String) = {
-              val probes = sigs.select(col("vec_id").as("q_id"),
-                explode(array(masks.map(m =>
-                  col(bcol).bitwiseAND(bmask).bitwiseXOR(lit(m))): _*)).as("mb"))
-              val hb = hist.select(col("vec_id"),
-                col(bcol).bitwiseAND(bmask).as("mb"))
-              probes.join(hb, Seq("mb"))
-                .select(col("q_id"), col("vec_id").as("h_id"))
-            }
-            val cand = candIds("bucket")
-              .unionByName(candIds("bucket2"))
-              .unionByName(candIds("bucket3"))
-            val dupIds = cand
-              .join(sigs.select(col("vec_id"), col("embedding"), col("norm")).as("x"),
-                col("q_id") === col("x.vec_id"))
-              .join(hist.select(col("vec_id"), col("embedding"), col("norm")).as("y"),
-                col("h_id") === col("y.vec_id"))
-              .where((VectorOps.dotD(col("x.embedding"), col("y.embedding")) /
-                (col("x.norm") * col("y.norm"))) >= simThreshold)
-              .select(col("q_id").as("vec_id")).distinct()
-              .withColumn("dup", lit(true))
-            sigs.select(col("vec_id")).join(dupIds, Seq("vec_id"), "left")
-              .select(col("vec_id"),
-                coalesce(col("dup"), lit(false)).as("is_semdup_of_history"))
+                     checkpointDir: String, simThreshold: Double = 0.4): Unit =
+    Landings.each(spark, embSchema, srcDir, checkpointDir) { (batch, batchId) =>
+      // two consumers (screen + history append): cache so the 48
+      // hyperplane dots per vector run once, released before commit
+      val sigs = batch.select(col("vec_id"), col("embedding"))
+        .withColumn("bucket",
+          VectorOps.lshBucket(col("embedding"), VectorQueries.planeInts))
+        .withColumn("bucket2",
+          VectorOps.lshBucket(col("embedding"), VectorQueries.planeInts2))
+        .withColumn("bucket3",
+          VectorOps.lshBucket(col("embedding"), VectorQueries.planeInts3))
+        .withColumn("norm", VectorOps.l2Norm(col("embedding")))
+        .persist()
+      val flags = Landings.committed(spark, historyDir, below = batchId) match {
+        case None =>
+          sigs.select(col("vec_id"), lit(false).as("is_semdup_of_history"))
+        case Some(hist) =>
+          val planes = VectorQueries.adaptivePlanes(hist.count())
+          val masks = VectorQueries.pairMasks(planes,
+            VectorQueries.flipRadius(planes))
+          val bmask = lit((1L << planes) - 1)
+          def candIds(bcol: String) = {
+            val probes = sigs.select(col("vec_id").as("q_id"),
+              explode(array(masks.map(m =>
+                col(bcol).bitwiseAND(bmask).bitwiseXOR(lit(m))): _*)).as("mb"))
+            val hb = hist.select(col("vec_id"),
+              col(bcol).bitwiseAND(bmask).as("mb"))
+            probes.join(hb, Seq("mb"))
+              .select(col("q_id"), col("vec_id").as("h_id"))
           }
-        try {
-          flags.write.mode("overwrite").parquet(s"$flagsDir/batch=$batchId")
-          sigs.write.mode("overwrite").parquet(s"$historyDir/batch=$batchId")
-        } finally sigs.unpersist()
-        ()
+          val cand = candIds("bucket")
+            .unionByName(candIds("bucket2"))
+            .unionByName(candIds("bucket3"))
+          val dupIds = cand
+            .join(sigs.select(col("vec_id"), col("embedding"), col("norm")).as("x"),
+              col("q_id") === col("x.vec_id"))
+            .join(hist.select(col("vec_id"), col("embedding"), col("norm")).as("y"),
+              col("h_id") === col("y.vec_id"))
+            .where((VectorOps.dotD(col("x.embedding"), col("y.embedding")) /
+              (col("x.norm") * col("y.norm"))) >= simThreshold)
+            .select(col("q_id").as("vec_id")).distinct()
+            .withColumn("dup", lit(true))
+          sigs.select(col("vec_id")).join(dupIds, Seq("vec_id"), "left")
+            .select(col("vec_id"),
+              coalesce(col("dup"), lit(false)).as("is_semdup_of_history"))
       }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
-
-  /** The accumulated flag log (vec_id, is_semdup_of_history, batch). */
-  def readFlags(spark: SparkSession, flagsDir: String): DataFrame =
-    spark.read.parquet(flagsDir)
+      try {
+        flags.write.mode("overwrite").parquet(s"$flagsDir/batch=$batchId")
+        sigs.write.mode("overwrite").parquet(s"$historyDir/batch=$batchId")
+      } finally sigs.unpersist()
+    }
 }

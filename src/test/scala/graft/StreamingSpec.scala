@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
-import graft.streaming.EventStreams
+import graft.streaming.{EventStreams, Landings}
 
 /** Streaming = batch equivalence: each streaming plan, run to completion on
   * the static events table via AvailableNow, must agree with the same
@@ -725,20 +725,20 @@ class StreamingSpec extends SparkSpec {
     emb.where(pmod(col("vec_id"), lit(13L)) =!= 0)
       .coalesce(1).write.mode("append").parquet(src)
     VecStreams.semanticIngest(spark, src, hist, flags, ckpt)
-    assert(VecStreams.readFlags(spark, flags)
+    assert(Landings.readFlags(spark, flags)
       .where(col("is_semdup_of_history")).count() == 0)
     assert(spark.read.parquet(hist).count() == nHist)
 
     // restart with no new files: nothing reprocessed
     VecStreams.semanticIngest(spark, src, hist, flags, ckpt)
-    assert(VecStreams.readFlags(spark, flags).count() == nHist)
+    assert(Landings.readFlags(spark, flags).count() == nHist)
 
     // fresh slice lands; the new run screens it against recovered history
     emb.where(pmod(col("vec_id"), lit(13L)) === 0)
       .coalesce(1).write.mode("append").parquet(src)
     VecStreams.semanticIngest(spark, src, hist, flags, ckpt)
 
-    val streamed = VecStreams.readFlags(spark, flags)
+    val streamed = Landings.readFlags(spark, flags)
       .where(pmod(col("vec_id"), lit(13L)) === 0)
       .select("vec_id", "is_semdup_of_history")
     val batch = SparkEntry.queries("e11_incremental_semantic")(spark, Sf0001)
@@ -769,13 +769,13 @@ class StreamingSpec extends SparkSpec {
     // batch 0 screens against empty history: nothing can be flagged, and
     // every signature must have entered history
     val nHist = docs.where(pmod(col("doc_id"), lit(13L)) =!= 0).count()
-    assert(DocStreams.readFlags(spark, flags)
+    assert(Landings.readFlags(spark, flags)
       .where(col("is_dup_of_history")).count() == 0)
     assert(spark.read.parquet(hist).count() == nHist)
 
     // restart with no new files: nothing reprocessed, nothing re-flagged
     DocStreams.incrementalDedup(spark, src, hist, flags, ckpt)
-    assert(DocStreams.readFlags(spark, flags).count() == nHist)
+    assert(Landings.readFlags(spark, flags).count() == nHist)
     assert(spark.read.parquet(hist).count() == nHist)
 
     // the fresh slice lands; a NEW query run (fresh from the checkpoint)
@@ -785,7 +785,7 @@ class StreamingSpec extends SparkSpec {
     DocStreams.incrementalDedup(spark, src, hist, flags, ckpt)
 
     // the fresh batch's flags must equal the batch d8 gate bit-for-bit
-    val streamed = DocStreams.readFlags(spark, flags)
+    val streamed = Landings.readFlags(spark, flags)
       .where(pmod(col("doc_id"), lit(13L)) === 0)
       .select("doc_id", "is_dup_of_history")
     val batch = SparkEntry.queries("d8_incremental_dedup")(spark, Sf0001)
@@ -914,5 +914,93 @@ class StreamingSpec extends SparkSpec {
     assert(streamed.count() < docs.count(), "mixture must subsample")
     assert(streamed.exceptAll(batch).count() == 0)
     assert(batch.exceptAll(streamed).count() == 0)
+  }
+
+  // Crash residue: FileOutputCommitter creates `batch=<id>` holding only
+  // `_temporary` before its job commits, so a crash mid-write leaves a
+  // directory that is not a committed batch. Readers must skip it and the
+  // re-executed batch must overwrite it.
+  private def plantTemporary(dir: String, id: Long): Unit =
+    java.nio.file.Files.createDirectories(
+      java.nio.file.Paths.get(s"$dir/batch=$id/_temporary/0"))
+
+  private def sameRows(a: org.apache.spark.sql.DataFrame,
+                       b: org.apache.spark.sql.DataFrame): Boolean =
+    a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty
+
+  /** Runs `ingest(src, hist, flags, ckpt)` over one landing twice, clean
+    * and with a crashed batch 0 planted under history and flags, and
+    * checks both leave the same flags and history.
+    */
+  private def residueRunMatchesClean(tag: String, landing: org.apache.spark.sql.DataFrame)
+      (ingest: (String, String, String, String) => Unit): Unit = {
+    val src = java.nio.file.Files.createTempDirectory(s"graft_${tag}_src_").toString
+    landing.coalesce(1).write.mode("append").parquet(src)
+    val Seq(clean, crashed) = Seq("clean", "crashed").map { k =>
+      val root = java.nio.file.Files.createTempDirectory(s"graft_${tag}_${k}_").toString
+      (s"$root/h", s"$root/f", s"$root/ckpt")
+    }
+    plantTemporary(crashed._1, 0L)
+    plantTemporary(crashed._2, 0L)
+    for ((hist, flags, ckpt) <- Seq(clean, crashed)) ingest(src, hist, flags, ckpt)
+    assert(Landings.committedIds(spark, crashed._2) == Seq(0L))
+    assert(sameRows(Landings.readFlags(spark, crashed._2),
+      Landings.readFlags(spark, clean._2)))
+    assert(sameRows(spark.read.parquet(crashed._1), spark.read.parquet(clean._1)))
+  }
+
+  test("crash residue: incrementalDedup commits past a crashed first batch") {
+    import graft.streaming.DocStreams
+    residueRunMatchesClean("ddupres", spark.read.schema(DocStreams.docSchema)
+        .parquet(s"$Sf0001/documents.parquet")) { (src, hist, flags, ckpt) =>
+      DocStreams.incrementalDedup(spark, src, hist, flags, ckpt)
+    }
+  }
+
+  test("crash residue: semanticIngest commits past a crashed first batch") {
+    import graft.streaming.VecStreams
+    residueRunMatchesClean("semres", spark.read.schema(VecStreams.embSchema)
+        .parquet(s"$Sf0001/embeddings.parquet")) { (src, hist, flags, ckpt) =>
+      VecStreams.semanticIngest(spark, src, hist, flags, ckpt)
+    }
+  }
+
+  test("crash residue: readRollup skips an uncommitted newer generation; the next landing commits over it") {
+    import graft.ops.Relational
+    val src = java.nio.file.Files.createTempDirectory("graft_rollres_src_").toString
+    val state = java.nio.file.Files.createTempDirectory("graft_rollres_state_").toString + "/s"
+    val ckpt = java.nio.file.Files.createTempDirectory("graft_rollres_ckpt_").toString
+    def expect(df: org.apache.spark.sql.DataFrame) = Relational.aggState(
+      df.select(col("event_type"),
+        round(col("value") * 100, 0).cast("long").as("cents")),
+      Seq("event_type"), Seq("cents"))
+    val ev = batchEvents
+    ev.where(col("event_id") % 2 === 0).coalesce(1)
+      .write.mode("append").parquet(src)
+    EventStreams.rollupIngest(spark, src, state, ckpt)
+    plantTemporary(state, 1L)
+    assert(sameRows(EventStreams.readRollup(spark, state),
+      expect(ev.where(col("event_id") % 2 === 0))))
+    ev.where(col("event_id") % 2 === 1).coalesce(1)
+      .write.mode("append").parquet(src)
+    EventStreams.rollupIngest(spark, src, state, ckpt)
+    assert(Landings.committedIds(spark, state) == Seq(0L, 1L))
+    assert(sameRows(EventStreams.readRollup(spark, state), expect(ev)))
+  }
+
+  test("readFlags skips a batch dir holding a part file but no _SUCCESS") {
+    val flags = java.nio.file.Files.createTempDirectory("graft_flagres_").toString + "/f"
+    Seq((1L, false), (2L, true)).toDF("doc_id", "is_dup_of_history")
+      .coalesce(1).write.parquet(s"$flags/batch=0")
+    // a crashed job's part file that never got its commit marker
+    val part = new java.io.File(s"$flags/batch=0").listFiles()
+      .find(_.getName.startsWith("part-")).get
+    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(s"$flags/batch=1"))
+    java.nio.file.Files.copy(part.toPath,
+      java.nio.file.Paths.get(s"$flags/batch=1/${part.getName}"))
+    assert(Landings.committedIds(spark, flags) == Seq(0L))
+    val got = Landings.readFlags(spark, flags)
+    assert(got.count() == 2)
+    assert(got.where(col("batch") =!= 0).isEmpty)
   }
 }
